@@ -3,7 +3,7 @@
 A from-scratch rebuild of the query and data-processing capabilities of
 the reference football-analytics pipeline (``Coltrane35/pedri-analysis``),
 re-expressed as idiomatic Spark: nested-schema DataFrame ingestion,
-Column-expression predicates, ``groupBy().agg()`` feature aggregation,
+SQL-expression predicates, ``groupBy().agg()`` feature aggregation,
 broadcast / interval joins, plus a general relational operator surface and
 LLM-data-pipeline operators (dedup, similarity, text analysis) designed for
 100 TB-scale execution.
@@ -13,7 +13,7 @@ Layout
 - ``session``    SparkSession factory (AQE, Arrow, UTC, tuned shuffles)
 - ``schema``     explicit StructTypes (StatsBomb-like events, test tables)
 - ``sources``    readers (JSON event files, parquet tables) and sinks
-- ``functions``  scalar Column expressions: predicates, geometry, text, hashing
+- ``functions``  scalar expressions: predicates, geometry, text, hashing
 - ``operators``  aggregates, joins (incl. interval/as-of), windows, dedup,
                  similarity, multimodal plumbing
 - ``plans``      end-to-end workloads (the Pedri basic/extended pipelines,

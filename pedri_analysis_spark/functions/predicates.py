@@ -1,5 +1,5 @@
-"""The reference's row-level predicates/extractors as native Column
-expressions (SURVEY §2.2 P1-P16, §2.7 F1-F10).
+"""The reference's row-level predicates/extractors as Spark SQL text
+(SURVEY §2.2 P1-P16, §2.7 F1-F10).
 
 Every one of the reference's ~25 Python row functions is arithmetic /
 boolean / string logic, so all of them compile to Catalyst expressions —
@@ -15,258 +15,29 @@ and P8 progressive-pass each have a v1/v2).
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 PLAYER_ID = 30486  # the reference's single-player focus (pedri_analysis.py:77)
 
 # Pitch constants (StatsBomb 120x80; reference core/pedri_analysis.py:398-413,
 # core/pedri_analysis_extended.py:26,454-472)
 PITCH_X = 120.0
 PITCH_Y = 80.0
-GOAL_Y = 40.0
-
-
-# --- event-type predicates (P3; reference core/pedri_analysis.py:81-124) ---
-
-
-def is_type(name: str) -> Column:
-    return F.col("type.name") == F.lit(name)
-
-
-def is_pass() -> Column:
-    return is_type("Pass")
-
-
-def is_shot() -> Column:
-    return is_type("Shot")
-
-
-def is_dribble() -> Column:
-    return is_type("Dribble")
-
-
-def is_carry() -> Column:
-    return is_type("Carry")
-
-
-def is_pressure() -> Column:
-    return is_type("Pressure")
-
-
-def is_interception() -> Column:
-    return is_type("Interception")
-
-
-def is_ball_recovery() -> Column:
-    return is_type("Ball Recovery")
-
-
-def is_tackle_v1() -> Column:
-    """Duel+Tackle conjunction (reference core/pedri_analysis.py:112-116)."""
-    return is_type("Duel") & (F.col("duel.type.name") == "Tackle")
-
-
-def is_tackle_v2() -> Column:
-    """Bare Tackle event type (reference core/pedri_analysis_extended.py:332-333).
-    Divergent from v1 by design — the two CSVs disagree in the reference."""
-    return is_type("Tackle")
-
-
-def is_turnover() -> Column:
-    """Miscontrol/Dispossessed (P13; reference extended.py:265-267)."""
-    return F.col("type.name").isin("Miscontrol", "Dispossessed")
-
-
-# --- player / completion predicates ---
-
-
-def by_player(player_id: int = PLAYER_ID) -> Column:
-    """P2 (reference core/pedri_analysis.py:77-78)."""
-    return F.col("player.id") == F.lit(player_id)
-
-
-def pass_completed_v1() -> Column:
-    """P5 v1: outcome NULL or 'Complete' (reference core/pedri_analysis.py:85-89)."""
-    return is_pass() & (
-        F.col("pass.outcome.name").isNull()
-        | (F.col("pass.outcome.name") == "Complete")
-    )
-
-
-def pass_completed_v2() -> Column:
-    """P5 v2: ``outcome`` key absent entirely (reference
-    core/pedri_analysis_extended.py:69-71). Differs from v1 on
-    ``outcome={'name':'Complete'}``."""
-    return is_pass() & F.col("pass.outcome").isNull()
-
-
-def is_key_pass_v1() -> Column:
-    """P6 v1 (reference core/pedri_analysis.py:127-133)."""
-    return is_pass() & (
-        (F.col("pass.shot_assist") == True)  # noqa: E712 — tri-state boolean column
-        | F.col("pass.assisted_shot_id").isNotNull()
-    )
-
-
-def is_key_pass_v2() -> Column:
-    """P6 v2: completed and any of assisted_shot_id/shot_assist/goal_assist
-    (reference core/pedri_analysis_extended.py:279-284)."""
-    return pass_completed_v2() & (
-        F.col("pass.assisted_shot_id").isNotNull()
-        | (F.col("pass.shot_assist") == True)  # noqa: E712
-        | (F.col("pass.goal_assist") == True)  # noqa: E712
-    )
-
-
-# --- location extraction (P7; reference core/pedri_analysis.py:136-151) ---
-
-
-def _xy(col: str, i: int) -> Column:
-    c = F.col(col)
-    return F.when(F.size(c) >= 2, c[i].cast("double"))
-
-
-def loc_x() -> Column:
-    return _xy("location", 0)
-
-
-def loc_y() -> Column:
-    return _xy("location", 1)
-
-
-def end_location() -> str:
-    """Type-dispatched end location (pass vs carry)."""
-    return "CASE WHEN type.name = 'Pass' THEN pass.end_location WHEN type.name = 'Carry' THEN carry.end_location END"
-
-
-def end_x() -> Column:
-    c = F.expr(end_location())
-    return F.when(F.size(c) >= 2, c[0].cast("double"))
-
-
-def end_y() -> Column:
-    c = F.expr(end_location())
-    return F.when(F.size(c) >= 2, c[1].cast("double"))
-
-
-# --- scalar geometry (F1-F3; reference analysis.py:171-179, extended.py:74-86) ---
-
-
-def euclid(x1: Column, y1: Column, x2: Column, y2: Column) -> Column:
-    return F.sqrt(F.pow(x2 - x1, 2) + F.pow(y2 - y1, 2))
-
-
-def toward_goal_dx(sx: Column, ex: Column, attacks_right: Column) -> Column:
-    """F2: direction-signed forward delta (reference extended.py:82-86)."""
-    return F.when(attacks_right, ex - sx).otherwise(sx - ex)
-
-
-def event_time_min() -> Column:
-    """F3: minute + second/60 (reference analysis.py:174-179)."""
-    return F.coalesce(F.col("minute"), F.lit(0)).cast("double") + F.coalesce(
-        F.col("second"), F.lit(0)
-    ).cast("double") / 60.0
-
-
-# --- progressive predicates (P8; two variants by design) ---
-
-
-def progressive_pass_v1() -> Column:
-    """P8 v1, direction-agnostic: dx>=10 AND dx>|dy|
-    (reference core/pedri_analysis.py:154-162)."""
-    dx = end_x() - loc_x()
-    dy = end_y() - loc_y()
-    return is_pass() & dx.isNotNull() & (dx >= 10) & (dx > F.abs(dy))
-
-
-def progressive_v2(attacks_right: Column) -> Column:
-    """P8 v2, direction-aware (applies to the current row's start/end):
-    completed-pass toward-goal dx>=10 AND distance-to-goal reduced >=30%
-    (reference core/pedri_analysis_extended.py:110-128)."""
-    sx, sy, ex, ey = loc_x(), loc_y(), end_x(), end_y()
-    goal_x = F.when(attacks_right, F.lit(PITCH_X)).otherwise(F.lit(0.0))
-    d_start = euclid(sx, sy, goal_x, F.lit(GOAL_Y))
-    d_end = euclid(ex, ey, goal_x, F.lit(GOAL_Y))
-    fwd = toward_goal_dx(sx, ex, attacks_right)
-    return (
-        sx.isNotNull()
-        & ex.isNotNull()
-        & (fwd >= 10)
-        & (d_end <= d_start * 0.7)
-    )
-
-
-# --- zone predicates (P9-P11; reference extended.py:131-177) ---
-
-
-def in_final_third(x: Column, attacks_right: Column) -> Column:
-    return F.when(attacks_right, x >= PITCH_X - 40).otherwise(x <= 40)
-
-
-def in_penalty_area(x: Column, y: Column, attacks_right: Column) -> Column:
-    in_y = (y >= 18) & (y <= 62)
-    return F.when(attacks_right, (x >= PITCH_X - 18) & in_y).otherwise(
-        (x <= 18) & in_y
-    )
-
-
-def deep_completion(attacks_right: Column) -> Column:
-    """P10: completed, not a cross, end point < 20 from goal center
-    (reference extended.py:150-164)."""
-    ex, ey = end_x(), end_y()
-    goal_x = F.when(attacks_right, F.lit(PITCH_X)).otherwise(F.lit(0.0))
-    not_cross = F.col("pass.cross").isNull() | (F.col("pass.cross") == False)  # noqa: E712
-    return (
-        pass_completed_v2()
-        & not_cross
-        & ex.isNotNull()
-        & (euclid(ex, ey, goal_x, F.lit(GOAL_Y)) < 20)
-    )
-
-
-def switch_of_play() -> Column:
-    """P11: completed, |dy|>=40, length>=30 (reference extended.py:167-177)."""
-    sx, sy, ex, ey = loc_x(), loc_y(), end_x(), end_y()
-    return (
-        pass_completed_v2()
-        & sx.isNotNull()
-        & ex.isNotNull()
-        & (F.abs(ey - sy) >= 40)
-        & (euclid(sx, sy, ex, ey) >= 30)
-    )
-
-
-def successful_dribble() -> Column:
-    """P12 (reference analysis.py:100-101)."""
-    return is_dribble() & (F.col("dribble.outcome.name") == "Complete")
-
-
-def under_pressure_completed_pass() -> Column:
-    """P14 (reference extended.py:286-287)."""
-    return pass_completed_v2() & (F.col("under_pressure") == True)  # noqa: E712
-
-
-def is_cross() -> Column:
-    return is_pass() & (F.col("pass.cross") == True)  # noqa: E712
 
 
 # ---------------------------------------------------------------------------
-# Textual twins (Spark SQL dialect) — one-parse plan construction.
+# One form only: SQL text (Spark SQL dialect) — one-parse plan construction.
 #
-# Building the pedri per-match aggregates from the Column helpers above costs
-# ~7,000 py4j socket round trips (~2.5-4.5 s of driver time PER QUERY,
-# profiled r15: `send_command` dominates, not Catalyst) because every `&`,
-# `==`, `F.col` is its own JVM call.  The same expression written as ONE SQL
+# Composing the pedri per-match aggregates from py4j Column operators costs
+# ~7,000 socket round trips (~2.5-4.5 s of driver time PER QUERY, profiled
+# r15: `send_command` dominates, not Catalyst) because every `&`, `==`,
+# `F.col` is its own JVM call.  The same expression written as ONE SQL
 # string costs one parse.  Same lesson as the one-parse kmeans assignment
-# build (operators/clustering.py).
+# build (operators/clustering.py).  Callers splice these strings into a
+# single `F.expr` / SQL aggregate per column.
 #
-# Each *_S constant / *_s function below is the exact textual form of the
-# Column builder above it — same operand order, same literal types (`e0`
-# suffix = DOUBLE literal, matching `F.lit(float)`), same implicit-NULL CASE
-# forms.  tests/test_pedri_sql_twins.py pins row-identical results between
-# every twin pair over the full fixture corpus, and the pedri oracle contract
-# re-proves the assembled queries end to end.
+# Literal conventions: `e0` suffix = DOUBLE literal (a bare `2.5` parses as
+# DECIMAL); the location extractors are implicit-NULL CASE forms (no ELSE),
+# so a short or missing coordinate array yields NULL.
+# The pedri oracle contract proves the assembled queries end to end.
 # ---------------------------------------------------------------------------
 
 
@@ -304,7 +75,7 @@ IS_KEY_PASS_V2_S = (
     f" OR pass.shot_assist = true OR pass.goal_assist = true))"
 )
 
-# location extraction — implicit-NULL CASE mirrors F.when without otherwise
+# location extraction (P7; reference core/pedri_analysis.py:136-151)
 LOC_X_S = "(CASE WHEN size(location) >= 2 THEN CAST(location[0] AS DOUBLE) END)"
 LOC_Y_S = "(CASE WHEN size(location) >= 2 THEN CAST(location[1] AS DOUBLE) END)"
 _END_LOC_S = (

@@ -223,15 +223,6 @@ def minhash_from_base(dialect: str, base_expr: str, n_hashes: int) -> list[str]:
     return out
 
 
-def minhash_signature(dialect: str, shingles_expr: str, n_hashes: int) -> list[str]:
-    """One min-hash value per permutation (NULL on empty shingle set).
-    Column HOF math only — JVM-side in Spark, no Python in the hot path.
-    Composes base_hash_array + minhash_from_base inline; callers that can
-    stage the base array in its own projection should do so (one md5 per
-    shingle total)."""
-    return minhash_from_base(dialect, base_hash_array(dialect, shingles_expr), n_hashes)
-
-
 def band_key(dialect: str, sig_cols: list[str], band: int, rows_per_band: int) -> str:
     """LSH band key: hash of the band's signature slice."""
     sl = sig_cols[band * rows_per_band : (band + 1) * rows_per_band]

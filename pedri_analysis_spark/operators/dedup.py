@@ -38,10 +38,6 @@ from pedri_analysis_spark.functions import textexpr as tx
 from pedri_analysis_spark.operators import spread  # noqa: E402  (re-export for callers)
 
 
-def with_tokens(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return df.withColumn("toks", F.expr(tx.tokens(tx.SPARK, text_col)))
-
-
 def with_shingles(df: DataFrame, text_col: str = "text", k: int = 3) -> DataFrame:
     """Distinct word k-shingles as column ``sh``. Tokens are staged as a
     real column and shingles use the zip_with/slice formulation — see

@@ -362,204 +362,3 @@ def wav_roundtrip_stats(ids: DataFrame, id_col: str = "media_id") -> DataFrame:
             )
 
     return ids.select(F.col(id_col)).mapInPandas(batches, WAV_STATS_SCHEMA)
-
-
-WAV_HAAR_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("level", T.LongType(), False),
-        T.StructField("n_blocks", T.LongType(), False),
-        T.StructField("detail_energy", T.LongType(), False),
-    ]
-)
-
-WAV_HAAR_LEVELS = 3
-
-
-def wav_haar_energy(ids: DataFrame, id_col: str = "media_id") -> DataFrame:
-    """REAL decode → EXACT spectral features: per id the same
-    deterministic RIFF round trip as :func:`wav_roundtrip_stats`, then
-    a {WAV_HAAR_LEVELS}-level integer Haar pyramid over the DECODED
-    samples — detail d_k(b) = s_{k-1}(2b−1) − s_{k-1}(2b) with a
-    singleton tail carried as +s (the haar_energy_daily convention),
-    energy_k = Σ d².  Everything after the codec is int64 numpy — no
-    float ever — so an analytic SQL mirror predicts each level's
-    energy exactly from the PCM generator formula.
-
-    Scale: Arrow-batched mapInPandas, one pass, no shuffle; payload
-    bytes never leave the executor — only {WAV_HAAR_LEVELS} integer
-    rows per clip travel."""
-    import pandas as pd
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-
-        for pdf in it:
-            out = []
-            for mid in pdf[id_col].astype("int64"):
-                mid = int(mid)
-                n = 64 + mid % 32
-                pcm = bytes((mid * 7 + j * 13) % 256 for j in range(n))
-                buf = io.BytesIO()
-                with wave.open(buf, "wb") as w:
-                    w.setnchannels(1)
-                    w.setsampwidth(1)
-                    w.setframerate(8000)
-                    w.writeframes(pcm)
-                with wave.open(io.BytesIO(buf.getvalue()), "rb") as r:
-                    raw = r.readframes(r.getnframes())
-                s = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
-                for k in range(1, WAV_HAAR_LEVELS + 1):
-                    if s.size % 2:
-                        s = np.concatenate([s, np.zeros(1, dtype=np.int64)])
-                    a, b = s[0::2], s[1::2]
-                    d = a - b
-                    out.append((mid, k, int(d.size), int((d * d).sum())))
-                    s = a + b
-            yield pd.DataFrame(
-                out, columns=[f.name for f in WAV_HAAR_SCHEMA.fields]
-            )
-
-    return ids.select(F.col(id_col)).mapInPandas(batches, WAV_HAAR_SCHEMA)
-
-
-PNG_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("width", T.LongType(), False),
-        T.StructField("height", T.LongType(), False),
-        T.StructField("n_chunks", T.LongType(), False),
-        T.StructField("crc_ok", T.LongType(), False),
-        T.StructField("sum_px", T.LongType(), False),
-        T.StructField("sum_px_sq", T.LongType(), False),
-    ]
-)
-
-_PNG_SIG = b"\x89PNG\r\n\x1a\n"
-
-
-def _png_chunk(typ: bytes, payload: bytes) -> bytes:
-    import binascii
-    import struct
-
-    return (
-        struct.pack(">I", len(payload))
-        + typ
-        + payload
-        + struct.pack(">I", binascii.crc32(typ + payload) & 0xFFFFFFFF)
-    )
-
-
-def _png_encode_gray8(rows: list[bytes]) -> bytes:
-    """A REAL minimal PNG writer (stdlib only): 8-bit grayscale, SUB
-    (type 1) row filter — the non-trivial filter, so the decoder must
-    actually undo per-pixel delta arithmetic, not just strip a byte."""
-    import struct
-    import zlib
-
-    h, w = len(rows), len(rows[0])
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0)
-    raw = bytearray()
-    for line in rows:
-        raw.append(1)  # filter type 1 = Sub
-        prev = 0
-        for px in line:
-            raw.append((px - prev) & 0xFF)
-            prev = px
-    return (
-        _PNG_SIG
-        + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"IDAT", zlib.compress(bytes(raw), 6))
-        + _png_chunk(b"IEND", b"")
-    )
-
-
-def _png_decode_gray8(data: bytes) -> tuple[int, int, int, bool, list[bytes]]:
-    """A REAL minimal PNG reader (stdlib only): validates the
-    signature, walks the chunk stream verifying EVERY chunk's CRC32,
-    inflates the IDAT stream with zlib, and undoes the per-row filter
-    (types 0 = None and 1 = Sub).  Returns (w, h, n_chunks, crc_ok,
-    pixel rows)."""
-    import binascii
-    import struct
-    import zlib
-
-    if data[:8] != _PNG_SIG:
-        raise ValueError("bad PNG signature")
-    pos, n_chunks, crc_ok, idat = 8, 0, True, b""
-    w = h = 0
-    while pos < len(data):
-        (ln,) = struct.unpack(">I", data[pos : pos + 4])
-        typ = data[pos + 4 : pos + 8]
-        payload = data[pos + 8 : pos + 8 + ln]
-        (crc,) = struct.unpack(">I", data[pos + 8 + ln : pos + 12 + ln])
-        crc_ok = crc_ok and (binascii.crc32(typ + payload) & 0xFFFFFFFF) == crc
-        n_chunks += 1
-        if typ == b"IHDR":
-            w, h = struct.unpack(">II", payload[:8])
-            if payload[8] != 8 or payload[9] != 0:
-                raise ValueError("not 8-bit grayscale")
-        elif typ == b"IDAT":
-            idat += payload
-        pos += 12 + ln
-        if typ == b"IEND":
-            break
-    raw = zlib.decompress(idat)
-    stride = w + 1
-    rows: list[bytes] = []
-    for r in range(h):
-        seg = raw[r * stride : (r + 1) * stride]
-        ft, line = seg[0], bytearray(seg[1:])
-        if ft == 1:
-            for x in range(1, w):
-                line[x] = (line[x] + line[x - 1]) & 0xFF
-        elif ft != 0:
-            raise ValueError(f"unsupported filter {ft}")
-        rows.append(bytes(line))
-    return w, h, n_chunks, crc_ok, rows
-
-
-def png_roundtrip_stats(ids: DataFrame, id_col: str = "media_id") -> DataFrame:
-    """REAL image-codec round-trip proof, the PNG sibling of
-    :func:`wav_roundtrip_stats`: per id, synthesize a deterministic
-    8-bit grayscale tile (pixel(x, y) = (id*7 + y*13 + x*5) mod 256,
-    w = 16 + id mod 16, h = 8 + id mod 8), encode it into ACTUAL PNG
-    bytes (stdlib zlib deflate + per-chunk CRC32 + SUB row filter),
-    decode those bytes back with the real reader — signature check,
-    CRC verification of every chunk, zlib inflate, per-pixel
-    un-filtering — and emit exact integer pixel statistics.
-
-    Because the tile is pure integer arithmetic, an analytic SQL
-    mirror predicts the decoded stats exactly; any codec bug (chunk
-    framing, CRC math, deflate round trip, filter reconstruction)
-    breaks the hash match.
-
-    Scale: Arrow-batched mapInPandas, one pass, no shuffle; the PNG
-    payloads never leave the executor — only the 7-integer stat row
-    per image travels."""
-    import pandas as pd
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        out_rows = []
-        for pdf in it:
-            for mid in pdf[id_col].astype("int64"):
-                mid = int(mid)
-                w, h = 16 + mid % 16, 8 + mid % 8
-                tile = [
-                    bytes((mid * 7 + y * 13 + x * 5) % 256 for x in range(w))
-                    for y in range(h)
-                ]
-                png = _png_encode_gray8(tile)
-                dw, dh, nch, crc_ok, rows = _png_decode_gray8(png)
-                s = sq = 0
-                for line in rows:
-                    for px in line:
-                        s += px
-                        sq += px * px
-                out_rows.append((mid, dw, dh, nch, int(crc_ok), s, sq))
-            yield pd.DataFrame(
-                out_rows, columns=[f.name for f in PNG_SCHEMA.fields]
-            )
-            out_rows = []
-
-    return ids.select(F.col(id_col)).mapInPandas(batches, PNG_SCHEMA)

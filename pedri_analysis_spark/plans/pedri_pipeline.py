@@ -49,19 +49,9 @@ def pround(c: str | Column, ndigits: int) -> Column:
     return F.floor(col * f + F.lit(0.5)) / f
 
 
-def _cnt(pred) -> F.Column:
-    return F.sum(F.when(pred, 1).otherwise(0))
-
-
 def _cnt_s(pred: str) -> str:
     """Textual twin of _cnt (one-parse construction, see predicates.py)."""
     return f"sum(CASE WHEN {pred} THEN 1 ELSE 0 END)"
-
-
-def _xg_dec(col: str = "shot.statsbomb_xg") -> F.Column:
-    """xG summed in decimal for order-independent exactness, emitted as
-    double (cross-engine deterministic; see plans.relational docstring)."""
-    return F.sum(F.col(col).cast("decimal(18,10)")).cast("double")
 
 
 def attack_directions(events: DataFrame) -> DataFrame:
@@ -69,9 +59,8 @@ def attack_directions(events: DataFrame) -> DataFrame:
     completed first-half passes >= 0 (reference extended.py:89-107; J4/A7).
 
     Scale: a narrow filtered aggregate over (match, team) — broadcast the
-    result back to the event stream.  Built from the textual predicate
-    twins (predicates.py) — one parse instead of hundreds of py4j calls;
-    the expressions are identical (pinned by tests/test_pedri_sql_twins)."""
+    result back to the event stream.  Built from the SQL-text predicates
+    (predicates.py) — one parse instead of hundreds of py4j calls."""
     dx = f"({P.END_X_S} - {P.LOC_X_S})"
     return (
         events.filter(

@@ -201,9 +201,9 @@ def run_all(
         artifacts["profile_json"] = profile_out
 
         # -- stage 3: match-id discovery (reference find_pedri_matches) --
-        from pedri_analysis_spark.functions.predicates import PLAYER_ID
+        from pedri_analysis_spark.functions.predicates import by_player_s
 
-        mids = events.filter(F.col("player.id") == PLAYER_ID).select("match_id")
+        mids = events.filter(F.expr(by_player_s())).select("match_id")
         artifacts["match_ids_txt"] = write_text_list(
             mids, os.path.join(out_dir, "pedri_match_ids.txt"), "match_id"
         )

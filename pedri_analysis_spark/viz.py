@@ -45,12 +45,12 @@ def heatmap_data(events: DataFrame, player_id: int = P.PLAYER_ID) -> DataFrame:
 
     Scale: groupBy(cell) over billions of events is a partial+final hash
     agg producing ≤1,536 rows; never collect raw points."""
-    x, y = P.loc_x(), P.loc_y()
+    cell_x, cell_y = P.PITCH_X / HEAT_NX, P.PITCH_Y / HEAT_NY
     return (
-        events.filter(P.by_player(player_id) & x.isNotNull())
+        events.filter(F.expr(f"{P.by_player_s(player_id)} AND {P.LOC_X_S} IS NOT NULL"))
         .groupBy(
-            F.floor(x / (P.PITCH_X / HEAT_NX)).cast("int").alias("gx"),
-            F.floor(y / (P.PITCH_Y / HEAT_NY)).cast("int").alias("gy"),
+            F.expr(f"CAST(floor({P.LOC_X_S} / {cell_x}e0) AS INT)").alias("gx"),
+            F.expr(f"CAST(floor({P.LOC_Y_S} / {cell_y}e0) AS INT)").alias("gy"),
         )
         .agg(F.count(F.lit(1)).alias("n"))
         .withColumn("intensity", F.log1p("n"))
@@ -76,31 +76,20 @@ def histogram_data(stats: DataFrame, metric: str, bin_width: float) -> DataFrame
     )
 
 
-def radar_data(stats: DataFrame, metrics: list[str]) -> DataFrame:
-    """Radar chart values: per-metric mean + min-max normalization bounds
-    (reference utils/viz_radar.py:23-30 F9) in one aggregate row."""
-    aggs = []
-    for m in metrics:
-        aggs += [
-            F.avg(m).alias(f"{m}_mean"),
-            F.min(m).alias(f"{m}_min"),
-            F.max(m).alias(f"{m}_max"),
-        ]
-    return stats.agg(*aggs)
-
-
 def pass_map_data(events: DataFrame, player_id: int = P.PLAYER_ID) -> DataFrame:
     """Pass-map segments (start→end, completed flag, progressive flag) —
     the reference quiver input (core/pedri_analysis.py:526-593). Kept as a
     DataFrame; collect only the single match being rendered."""
-    return events.filter(P.by_player(player_id) & P.is_pass()).select(
+    return events.filter(
+        F.expr(f"{P.by_player_s(player_id)} AND {P.IS_PASS_S}")
+    ).selectExpr(
         "match_id",
-        P.loc_x().alias("x1"),
-        P.loc_y().alias("y1"),
-        P.end_x().alias("x2"),
-        P.end_y().alias("y2"),
-        P.pass_completed_v1().alias("completed"),
-        P.progressive_pass_v1().alias("progressive"),
+        f"{P.LOC_X_S} AS x1",
+        f"{P.LOC_Y_S} AS y1",
+        f"{P.END_X_S} AS x2",
+        f"{P.END_Y_S} AS y2",
+        f"{P.PASS_COMPLETED_V1_S} AS completed",
+        f"{P.PROGRESSIVE_PASS_V1_S} AS progressive",
     )
 
 

@@ -17,93 +17,82 @@ import pytest
 
 from tests.conftest import SF_DIR, canonical_rows
 
-# float-aggregate, window, iterative-graph, digest-slice and draft
+# float-aggregate, window, iterative-graph and digest-slice
 # representatives — the surfaces where merge order COULD leak if the
 # discipline slipped
 SAMPLE = [
-    ("pricing_summary", None),  # DECIMAL->DOUBLE money aggregates
-    ("stats_moments_exact", None),  # higher central moments
-    ("tfidf_top_terms", None),  # 6-dp rounded idf products
-    ("pagerank_trade_graph", None),  # 5 iterations of rounded contributions
-    ("window_running_total", None),  # ordered window over shuffled input
-    ("bootstrap_ci_avg_order", "draft_r11"),  # digest-slice replicates
-    ("embedding_dim_health", "draft_r13"),  # rounded-square DECIMAL sums
-    ("hits_hubs_authorities", "draft_r13"),  # integer max-normalized graph
+    "pricing_summary",  # DECIMAL->DOUBLE money aggregates
+    "stats_moments_exact",  # higher central moments
+    "tfidf_top_terms",  # 6-dp rounded idf products
+    "pagerank_trade_graph",  # 5 iterations of rounded contributions
+    "window_running_total",  # ordered window over shuffled input
+    "bootstrap_ci_avg_order",  # digest-slice replicates
+    "embedding_dim_health",  # rounded-square DECIMAL sums
+    "hits_hubs_authorities",  # integer max-normalized graph
     # r13 registrations with merge-order-sensitive rank/float reducers
     # (VERDICT r12 ask #6)
-    ("spearman_corr_suppliers", None),  # avg-rank ties over hash splits
-    ("kendall_tau_daily", None),  # concordant-pair signs over self-join
-    ("ks_drift_doclen", None),  # running-max of CDF gaps via windows
+    "spearman_corr_suppliers",  # avg-rank ties over hash splits
+    "kendall_tau_daily",  # concordant-pair signs over self-join
+    "ks_drift_doclen",  # running-max of CDF gaps via windows
     # r12 registrations with merge-order-sensitive exact reducers
     # (VERDICT r11 ask #6)
-    ("power_iteration_top_pc", None),  # 6-dp quantized covariance sums
-    ("split_conformal_coverage", None),  # rank thresholds over hash splits
-    ("kcenter_coreset", None),  # iterative argmax with total-order ties
-    ("fellegi_sunter_parts", None),  # weighted pair counts via hash chunks
+    "power_iteration_top_pc",  # 6-dp quantized covariance sums
+    "split_conformal_coverage",  # rank thresholds over hash splits
+    "kcenter_coreset",  # iterative argmax with total-order ties
+    "fellegi_sunter_parts",  # weighted pair counts via hash chunks
     # r14 registrations with merge-order-sensitive rank/float reducers
     # (VERDICT r13 ask #5; registered r14)
-    ("autocorr_daily_revenue", None),  # ordered day windows + lag joins
-    ("mmr_diverse_topk", None),  # iterative double argmax (greatest chain)
-    ("prefix_filter_jaccard_dups", None),  # rank-prefix blocking windows
-    ("benjamini_hochberg_fdr", None),  # rank-ordered p-value thresholds
-    ("map_bm25_eval", None),  # per-query ranked AP over tie-broken top-k
-    ("ari_clusters_vs_labels", None),  # contingency pair sums over splits
+    "autocorr_daily_revenue",  # ordered day windows + lag joins
+    "mmr_diverse_topk",  # iterative double argmax (greatest chain)
+    "prefix_filter_jaccard_dups",  # rank-prefix blocking windows
+    "benjamini_hochberg_fdr",  # rank-ordered p-value thresholds
+    "map_bm25_eval",  # per-query ranked AP over tie-broken top-k
+    "ari_clusters_vs_labels",  # contingency pair sums over splits
     # r15 wave (registered r15) with merge-order-sensitive shapes
     # (VERDICT r14 ask #4: gkt / winnowing / seasonal / kmv)
-    ("winnowing_fingerprints", None),  # lag/lead selection windows
-    ("edit_distance_near_dups", None),  # groupBy-min representatives
-    ("goodman_kruskal_tau", None),  # contingency margins over hash splits
-    ("seasonal_decomposition_daily", None),  # ordered residual windows
-    ("kmv_distinct_estimate", None),  # k-min hash ordering over merges
-    # r16 staged drafts with merge-order-sensitive shapes
-    ("mann_whitney_u_values", "draft_r16"),  # value-grid cumulative window
-    ("harmonic_centrality_seeds", "draft_r16"),  # iterative frontier joins
-    ("rbo_rankings_eval", "draft_r16"),  # two tie-broken top-k rankings
-    # r17 staged drafts with merge-order-sensitive shapes
-    ("rfm_customer_segments", "draft_r17"),  # three banded-rank ntile passes
-    ("seasonal_residual_outliers", "draft_r17"),  # MA windows + rank medians
-    ("range_frame_trailing_30d", "draft_r17"),  # integer RANGE frame sums
-    # r19 staged drafts with merge-order-sensitive shapes
-    ("average_precision_value", "draft_r19"),  # desc grid window + explode
-    ("brown_forsythe_value", "draft_r19"),  # interpolated group percentiles
-    # r14-session additions to the staged waves (rank/grid reducers)
-    ("kruskal_wallis_h_values", "draft_r17"),  # k-group value-grid window
-    ("err_rankings_eval", "draft_r18"),  # two-stage sharded topk + cascade
-    ("kendalls_w_rankers", "draft_r19"),  # three distributed exact ranks
-    ("kaplan_meier_churn", "draft_r20"),  # recursive product over grid order
-    ("logrank_churn_cohorts", "draft_r20"),  # cohort prefix sums on the grid
-    ("dtw_daily_revenue_shapes", "draft_r20"),  # sorted-collect series arrays
-    # r15-session additions to the staged waves (grid windows, sorted
-    # collects, recursive chains)
-    ("jonckheere_terpstra_trend", "draft_r17"),  # value-grid cumulative window
-    ("isotonic_calibration_pava", "draft_r18"),  # B^2 pair frame + suffix-min
-    ("wasserstein_value_drift", "draft_r19"),  # CDF window over value grid
-    ("bradley_terry_event_types", "draft_r19"),  # sorted-collect duel arrays
-    ("holt_linear_forecast", "draft_r20"),  # recursive chain over month grid
-    # late-r15-session additions to the staged waves
-    ("wilcoxon_signed_rank_daily", "draft_r16"),  # |d|-grid cumulative window
-    ("misra_gries_heavy_tokens", "draft_r18"),  # sharded top-k + bounded frame
-    ("pettitt_changepoint_daily", "draft_r20"),  # value-rank + day-prefix windows
-    ("hoeffding_d_daily_arms", "draft_r19"),  # rank windows + BNLJ pair agg
+    "winnowing_fingerprints",  # lag/lead selection windows
+    "edit_distance_near_dups",  # groupBy-min representatives
+    "goodman_kruskal_tau",  # contingency margins over hash splits
+    "seasonal_decomposition_daily",  # ordered residual windows
+    "kmv_distinct_estimate",  # k-min hash ordering over merges
+    # staged drafts (STAGED below) with merge-order-sensitive shapes
+    "mann_whitney_u_values",  # value-grid cumulative window
+    "harmonic_centrality_seeds",  # iterative frontier joins
+    "rbo_rankings_eval",  # two tie-broken top-k rankings
+    "wilcoxon_signed_rank_daily",  # |d|-grid cumulative window
+    "rfm_customer_segments",  # three banded-rank ntile passes
+    "seasonal_residual_outliers",  # MA windows + rank medians
+    "range_frame_trailing_30d",  # integer RANGE frame sums
+    "kruskal_wallis_h_values",  # k-group value-grid window
+    "jonckheere_terpstra_trend",  # value-grid cumulative window
+    "err_rankings_eval",  # two-stage sharded topk + cascade
+    "isotonic_calibration_pava",  # B^2 pair frame + suffix-min
+    "misra_gries_heavy_tokens",  # sharded top-k + bounded frame
 ]
 
+# plans modules that define QUERIES but are not in registry._modules()
+# yet; known_queries() makes their queries addressable until they register
+STAGED = ("draft_r16", "draft_r17", "draft_r18")
 
-def _fn(name: str, module: str | None):
-    if module is None:
-        from pedri_analysis_spark.plans import registry
 
-        return registry.all_queries()[name]
+def known_queries() -> dict:
+    """Registered queries plus the queries of the STAGED draft modules."""
     import importlib
 
-    mod = importlib.import_module(f"pedri_analysis_spark.plans.{module}")
-    return mod.QUERIES[name]
+    from pedri_analysis_spark.plans.registry import all_queries
+
+    out = dict(all_queries())
+    for module in STAGED:
+        mod = importlib.import_module(f"pedri_analysis_spark.plans.{module}")
+        out.update(mod.QUERIES)
+    return out
 
 
-@pytest.mark.parametrize("name,module", SAMPLE, ids=[s[0] for s in SAMPLE])
-def test_results_invariant_under_hostile_partitioning(spark, name, module):
+@pytest.mark.parametrize("name", SAMPLE)
+def test_results_invariant_under_hostile_partitioning(spark, name):
     from pedri_analysis_spark.sources.tables import ensure_session_conf
 
-    fn = _fn(name, module)
+    fn = known_queries()[name]
     base = fn(spark, SF_DIR)
     cols = base.columns
     _, want = canonical_rows(cols, [tuple(r) for r in base.collect()])

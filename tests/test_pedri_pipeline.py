@@ -13,6 +13,9 @@ from __future__ import annotations
 import os
 
 import pytest
+from pyspark.sql import functions as F
+
+from pedri_analysis_spark.functions import predicates as P
 
 FIXTURES = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures")
 
@@ -156,3 +159,25 @@ def test_per90(spark, events):
 
     row = per90(per_match_basic(events), ["passes", "shots"]).collect()[0]
     assert row.passes_per90 == round(row.total_passes / row.total_minutes * 90.0, 2)
+
+
+def test_twins_cover_every_predicate(events):
+    """The fixture corpus must actually EXERCISE the twins: each boolean
+    twin should be true on at least one fixture row somewhere (otherwise
+    the parity pin is vacuous for its true-branch)."""
+    preds = {
+        "pass_completed_v1": P.PASS_COMPLETED_V1_S,
+        "pass_completed_v2": P.PASS_COMPLETED_V2_S,
+        "key_pass_v1": P.IS_KEY_PASS_V1_S,
+        "turnover": P.IS_TURNOVER_S,
+        "tackle_v1": P.IS_TACKLE_V1_S,
+        "progressive_v1": P.PROGRESSIVE_PASS_V1_S,
+    }
+    row = events.select(
+        *[
+            F.expr(f"sum(CASE WHEN {t} THEN 1 ELSE 0 END)").alias(n)
+            for n, t in preds.items()
+        ]
+    ).collect()[0]
+    for n in preds:
+        assert row[n] and row[n] > 0, f"fixture never exercises {n}"

@@ -28,3 +28,39 @@ def test_catalog_plan_invariants(spark):
     assert set(committed) == set(report), (
         "PLANAUDIT.json stale — rerun tools/plan_lint.py"
     )
+
+
+def test_allowlists_and_samples_name_known_queries():
+    """Every allowlist and sample entry must name a registered query or one
+    of a staged draft module: a stale allowlist name would silently exempt
+    a future query that reuses it, and a stale sample name pins nothing.
+    Every plans module that defines QUERIES must be registered or staged."""
+    import glob
+    import importlib
+    import os
+
+    from pedri_analysis_spark.plans import registry
+    from tests.test_partition_invariance import SAMPLE, STAGED, known_queries
+    from tools import plan_lint
+
+    registered = {m.__name__.rsplit(".", 1)[1] for m in registry._modules()}
+    assert not registered & set(STAGED), "staged draft already registered"
+    plans_dir = os.path.dirname(registry.__file__)
+    for path in glob.glob(os.path.join(plans_dir, "*.py")):
+        name = os.path.splitext(os.path.basename(path))[0]
+        mod = importlib.import_module(f"pedri_analysis_spark.plans.{name}")
+        if hasattr(mod, "QUERIES"):
+            assert name in registered or name in STAGED, (
+                f"plans/{name}.py defines QUERIES but is neither registered "
+                "nor staged"
+            )
+
+    known = set(known_queries())
+    for label, names in (
+        ("plan_lint._BNLJ_ALLOWED", plan_lint._BNLJ_ALLOWED),
+        ("plan_lint._PYTHON_ALLOWED", plan_lint._PYTHON_ALLOWED),
+        ("plan_lint._EAGER_EXECUTING", plan_lint._EAGER_EXECUTING),
+        ("test_partition_invariance.SAMPLE", SAMPLE),
+    ):
+        stale = sorted(set(names) - known)
+        assert not stale, f"{label} names unknown queries: {stale}"

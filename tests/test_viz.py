@@ -6,6 +6,9 @@ from __future__ import annotations
 import os
 
 import pytest
+from pyspark.sql import functions as F
+
+from tests.conftest import SF_DIR
 
 FIXTURES = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures")
 
@@ -46,6 +49,41 @@ def test_pass_map_segments(spark, events):
     seg = pass_map_data(events).filter("match_id = 1001").collect()
     assert all(s.x1 is not None for s in seg)
     assert any(s.progressive for s in seg)
+
+
+def test_heatmap_data_matches_heat_grid_query(spark, events):
+    """The figure's heat grid equals the oracle-checked pedri_heat_grid
+    query cell for cell."""
+    from pedri_analysis_spark.plans.pedri_queries import q_pedri_heat_grid
+    from pedri_analysis_spark.viz import heatmap_data
+
+    got = sorted((r.gx, r.gy, r.n) for r in heatmap_data(events).collect())
+    want = sorted(
+        (r.gx, r.gy, r.n) for r in q_pedri_heat_grid(spark, SF_DIR).collect()
+    )
+    assert len(want) == 15
+    assert got == want
+
+
+def test_pass_map_data_matches_per_match_basic(spark, events):
+    """Per match, the pass-map segments count the same passes, completed
+    passes (P5 v1) and progressive passes (P8 v1) as the oracle-checked
+    per-match basic stats."""
+    from pedri_analysis_spark.plans.pedri_pipeline import per_match_basic
+    from pedri_analysis_spark.viz import pass_map_data
+
+    seg = pass_map_data(events).groupBy("match_id").agg(
+        F.expr("count(*) AS n"),
+        F.expr("sum(CAST(completed AS INT)) AS completed"),
+        F.expr("sum(CAST(progressive AS INT)) AS progressive"),
+    )
+    got = {r.match_id: (r.n, r.completed, r.progressive) for r in seg.collect()}
+    want = {
+        r.match_id: (r.passes, r.passes_completed, r.progressive_passes)
+        for r in per_match_basic(events).filter("passes > 0").collect()
+    }
+    assert len(want) == 9
+    assert got == want
 
 
 def test_render_raises_without_matplotlib(spark, events):

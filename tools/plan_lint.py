@@ -132,17 +132,6 @@ _BNLJ_ALLOWED = {
     "isotonic_calibration_pava",  # bounded ~40x40 bucket-grid non-equi
     # pair frame (j <= k interval enumeration; both sides the $12.5k
     # price-bucket rollup — domain-bounded at every SF)
-    "hoeffding_d_daily_arms",  # calendar-bounded daily pair frame
-    # (<= 2.6k-row broadcast side, SF-invariant: the bivariate-rank
-    # q4 count needs the joint <,= comparison both ways — a non-equi
-    # a.day <> b.day self-pair over the DAY rollup, never corpus rows)
-    # r20 drafts (plans/draft_r20.py — staged r13, facts pinned by
-    # tests/test_draft_r20.py)
-    "cvm_drift_doclen",  # source-pair build: |sources|^2 non-equi (ks precedent)
-    # r19 drafts (plans/draft_r19.py — staged r13, facts pinned by
-    # tests/test_draft_r19.py)
-    "average_precision_value",  # 1-row negative-total scalar subquery
-    "dedup_pair_prf",  # three 1-row combinatorics frames crossed (ARI shape)
 }
 
 # Arrow-vectorized Python kernels with written justifications (see the
@@ -153,8 +142,6 @@ _PYTHON_ALLOWED = {
     "hard_negative_mining",  # cosine_fast Arrow kernel (probe + candidate scoring)
     "ivf_recall_at_k",  # cosine_fast Arrow kernel (per-pair vector dot)
     "wav_roundtrip_stats",  # REAL stdlib-wave codec round trip (mapInPandas)
-    "wav_haar_energy_audit",  # REAL wave decode -> integer Haar pyramid (r19 draft)
-    "png_roundtrip_energy_audit",  # REAL PNG codec round trip (r19 draft)
     "cosine_topk_bruteforce",  # einsum pandas_udf (operators/similarity.py)
     "ivf_topk",  # Arrow probe scoring kernel
     "multimodal_feature_stub",  # mapInPandas decode path (multimodal.py)
