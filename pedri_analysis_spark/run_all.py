@@ -23,14 +23,16 @@ matplotlib render is an optional driver-side detail (import-gated), so
 the artifact set is deterministic in containers without plotting libs.
 
 Scale: each stage is a DataFrame plan over ONE cached parse of the event
-corpus; sinks are the coalesce(1) single-file writers (correct for the
-per-match/1-row grains they serve — see sources.sinks).
+corpus; the per-match/1-row outputs are bounded, so each sink collects its
+rows once and writes the file from the driver (see sources.sinks). Every
+frame cached here is released before ``run_all`` returns.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -169,6 +171,7 @@ def run_all(
     artifacts: dict[str, str] = {}
 
     events = read_events(spark, events_dir).cache()
+    cached = [events]
     try:
         # -- stage 1: lineup inspection (reference pedri_inspect_lineups) --
         positions = lineup_position(events)
@@ -210,6 +213,7 @@ def run_all(
 
         # -- stage 4: basic analysis + CSVs (reference pedri_analysis) --
         basic = per_match_basic(events).cache()
+        cached.append(basic)
         # reference sort: PARSED multi-format date, then match id
         # (core/pedri_analysis.py:621-634 — string order would put
         # dd/MM/yyyy dates wrong)
@@ -233,11 +237,13 @@ def run_all(
         # -- stage 5: extended analysis + CSVs + JSON summary --
         profile = read_profile(spark, profile_path or profile_out)
         ext = per_match_extended(events, profile).cache()
+        cached.append(ext)
         artifacts["extended_csv"] = write_csv_single(
             ext, os.path.join(csv_dir, "pedri_match_stats_extended.csv"), ["match_id"]
         )
-        artifacts["compat_csv"] = write_csv_single(
-            ext, os.path.join(csv_dir, "pedri_per_match_stats.csv"), ["match_id"]
+        # the compat file is the same frame in the same order
+        artifacts["compat_csv"] = shutil.copyfile(
+            artifacts["extended_csv"], os.path.join(csv_dir, "pedri_per_match_stats.csv")
         )
         ext_json = os.path.join(out_dir, "pedri_summary_extended.json")
         with open(ext_json, "w") as f:
@@ -280,6 +286,7 @@ def run_all(
             ["key_passes", "progressive_passes", "shots", "xg",
              "dribbles_successful", "pressures", "tackles", "interceptions"],
         ).cache()
+        cached.append(radar)
         radar_row = radar.collect()[0]
         raw_metrics = [c for c in radar.columns if c.endswith("_raw")]
         pct_metrics = [c for c in radar.columns if c.endswith("_pctile")]
@@ -333,7 +340,8 @@ def run_all(
             ["match_id"],
         )
     finally:
-        events.unpersist()
+        for df in cached:
+            df.unpersist()
     return artifacts
 
 

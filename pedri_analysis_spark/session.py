@@ -39,6 +39,14 @@ def get_spark(
       semantics, comparable with the DuckDB oracle (UTC-naive).
     - nested schema pruning on: the event schema is deeply nested and we
       want parquet/JSON scans to read only the touched leaves.
+    - ``spark.sql.codegen.cache.maxEntries``: Spark keeps 100 generated
+      classes by default, fewer than one ``run_all`` pass compiles (~256),
+      so every warm pass recompiled nearly all of them. A cold 279-query
+      ``bench.py`` sweep at sf0.1 compiles 3,827 classes with an unbounded
+      cache (6,062 with the default, and 5,646 again in a second sweep);
+      5,000 holds them with ~30% headroom. The cost is metaspace: 243 MB
+      after two sweeps against 207 MB with the default cache. A static
+      conf: it counts only when the SparkContext starts.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -54,6 +62,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
+        .config("spark.sql.codegen.cache.maxEntries", "5000")
         # Parquet ms/us timestamps (the current events table is
         # timestamp[us]) arrive as TIMESTAMP_NTZ; with the UTC session
         # timezone casting NTZ -> TIMESTAMP is an identity shift, matching

@@ -99,3 +99,73 @@ def test_profile_json_roundtrip(spark, artifacts):
     assert len(rows) == 9
     assert rows[1001].team == "Barcelona"
     assert rows[1001].minutes > 0
+
+
+def test_run_all_releases_its_caches(spark, tmp_path):
+    """Every frame run_all caches is unpersisted before it returns."""
+    from pedri_analysis_spark.run_all import run_all
+
+    def persistent():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = persistent()
+    run_all(spark, os.path.join(FIXTURES, "events"), out_dir=str(tmp_path))
+    assert persistent() == before
+
+
+def test_bounded_sinks_match_fallback_bytes(spark, tmp_path, monkeypatch):
+    """Every artifact is byte-identical whether the sinks write from the
+    driver or through the coalesce(1) Hadoop fallback, and the default run
+    never takes the fallback (no ``*.spark-tmp`` directory)."""
+    from pedri_analysis_spark.run_all import run_all
+    from pedri_analysis_spark.sources import sinks
+
+    moves = []
+    real_move = sinks._move_single_part
+    monkeypatch.setattr(
+        sinks, "_move_single_part", lambda *a: moves.append(a) or real_move(*a)
+    )
+    events = os.path.join(FIXTURES, "events")
+    run_all(spark, events, out_dir=str(tmp_path / "bounded"))
+    assert moves == []
+    monkeypatch.setattr(sinks, "BOUNDED_ROWS", 0)
+    run_all(spark, events, out_dir=str(tmp_path / "fallback"))
+    assert len(moves) == 17  # every CSV sink but the compat copy, plus the id list
+    for rel in EXPECTED_FILES:
+        bounded, fallback = (tmp_path / side / rel for side in ("bounded", "fallback"))
+        assert bounded.read_bytes() == fallback.read_bytes(), rel
+
+
+def test_warm_run_all_reuses_generated_code(tmp_path):
+    """A second run_all in the same JVM compiles at most 10% of the classes
+    the first (cold) one compiled: the session's codegen cache holds a whole
+    pass. Runs in a fresh process so the first run is really cold."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = f"""
+import os
+from pedri_analysis_spark.run_all import run_all
+from pedri_analysis_spark.session import get_spark
+
+spark = get_spark(app_name="codegen-reuse", master="local[2]", shuffle_partitions=2)
+metric = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+counts = []
+for i in range(2):
+    before = metric.getCount()
+    run_all(spark, {os.path.join(FIXTURES, "events")!r}, out_dir=os.path.join({str(tmp_path)!r}, str(i)))
+    counts.append(metric.getCount() - before)
+print("COMPILES", *counts)
+spark.stop()
+"""
+    path = os.pathsep.join(filter(None, [repo, os.environ.get("PYTHONPATH")]))
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g", PYTHONPATH=path)
+    proc = subprocess.run(
+        [sys.executable, "-c", script], cwd=repo, env=env, capture_output=True,
+        text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    cold, warm = (int(x) for x in proc.stdout.split("COMPILES")[1].split())
+    assert cold > 0
+    assert warm <= 0.10 * cold, (cold, warm)

@@ -6,6 +6,56 @@ import csv
 import glob
 import json
 import os
+from pathlib import Path
+
+import pytest
+
+# Frames for the bounded-vs-fallback byte check: (SQL, order_by).
+_CSV_CASES = {
+    "empty": ("SELECT 1 AS a, 'x' AS b WHERE false", None),
+    "quoting": (
+        "SELECT * FROM VALUES (1, 'a,b', 'say \"hi\"'), (2, 'two\nlines', 'cr\r')"
+        " AS t(k, s1, s2)",
+        ["k"],
+    ),
+    "null_vs_empty": (
+        "SELECT * FROM VALUES (1, CAST(NULL AS STRING), ''), (2, '', CAST(NULL AS STRING))"
+        " AS t(k, s1, s2)",
+        ["k"],
+    ),
+    "one_column_null": ("SELECT * FROM VALUES (CAST(NULL AS STRING)), ('x') AS t(s)", ["s"]),
+    "whitespace": ("SELECT '  lead' AS a, 'trail  ' AS b, '  both  ' AS c", None),
+    "doubles_and_timestamp": (
+        "SELECT * FROM VALUES (1, 1e-7D, TIMESTAMP'2023-03-10 12:34:56.789'),"
+        " (2, 1.2345678901235E12D, TIMESTAMP'1999-12-31 23:59:59'),"
+        " (3, CAST('NaN' AS DOUBLE), CAST(NULL AS TIMESTAMP)) AS t(k, d, ts)",
+        ["k"],
+    ),
+    "quoted_column_names": (
+        "SELECT 1 AS `#first`, 2 AS `a,b`, 3 AS ` pad `, 4 AS `q\"x`, 5 AS `back\\slash,`,"
+        " 6 AS `new\nline`",
+        None,
+    ),
+}
+
+
+def _both_paths(monkeypatch, write):
+    """(bounded bytes, fallback bytes) of one sink call, asserting which path
+    each side took; BOUNDED_ROWS = -1 sends even an empty frame to the
+    coalesce(1) fallback."""
+    from pedri_analysis_spark.sources import sinks
+
+    moves = []
+    real_move = sinks._move_single_part
+    monkeypatch.setattr(
+        sinks, "_move_single_part", lambda *a: moves.append(a) or real_move(*a)
+    )
+    bounded = Path(write()).read_bytes()
+    assert moves == []
+    monkeypatch.setattr(sinks, "BOUNDED_ROWS", -1)
+    fallback = Path(write()).read_bytes()
+    assert len(moves) == 1
+    return bounded, fallback
 
 
 def test_csv_single(spark, tmp_path):
@@ -19,6 +69,37 @@ def test_csv_single(spark, tmp_path):
         rows = list(csv.DictReader(f))
     assert [r["match_id"] for r in rows] == ["1", "2", "3"]
     assert rows[0]["name"] == "a"
+
+
+@pytest.mark.parametrize("case", sorted(_CSV_CASES))
+def test_csv_bounded_path_matches_spark_writer(spark, tmp_path, monkeypatch, case):
+    """The driver-side CSV path writes the same bytes as the Spark CSV
+    writer: quoting, null vs "", trimmed whitespace, doubles, timestamps
+    and header escaping."""
+    from pedri_analysis_spark.sources.sinks import write_csv_single
+
+    sql, order_by = _CSV_CASES[case]
+    df = spark.sql(sql)
+    out = str(tmp_path / "out.csv")
+    bounded, fallback = _both_paths(
+        monkeypatch, lambda: write_csv_single(df, out, order_by)
+    )
+    assert bounded == fallback
+    if case == "empty":
+        assert bounded == b"a,b\n"
+    assert not glob.glob(str(tmp_path / "*.spark-tmp"))
+
+
+def test_text_list_bounded_path_matches_spark_writer(spark, tmp_path, monkeypatch):
+    """A null value is an empty line on both paths."""
+    from pedri_analysis_spark.sources.sinks import write_text_list
+
+    df = spark.sql(
+        "SELECT * FROM VALUES ('b'), (CAST(NULL AS STRING)), ('a,\"x\"'), ('b') AS t(v)"
+    )
+    out = str(tmp_path / "ids.txt")
+    bounded, fallback = _both_paths(monkeypatch, lambda: write_text_list(df, out, "v"))
+    assert bounded == fallback == b'\na,"x"\nb\n'
 
 
 def test_json_summary(spark, tmp_path):
