@@ -3,7 +3,7 @@ $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]
 and prints ONE JSON line:
   {"metric": ..., "value": <total sec>, "unit": "sec", "queries": {...}, "sf": ...}
 
-Each query is executed through a no-op action (count on the final plan) so
+Each query is executed through a ``noop``-format write of the final plan so
 we measure engine execution, not driver-side row materialization.
 """
 

@@ -1010,8 +1010,8 @@ def _ca_sql(dialect: str) -> str:
 def q_cochran_armitage_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cochran-Armitage test (1954/1955) for a LINEAR trend in the
     binary finalization rate across the five ORDERED priority classes
-    - the binary-outcome cousin of the staged Jonckheere-Terpstra
-    (draft_r17) and the dose-response workhorse: scores t_i = 1..5,
+    - the binary-outcome cousin of the Jonckheere-Terpstra ordered-
+    alternative test and the dose-response workhorse: scores t_i = 1..5,
     T = sum t_i (r_i - n_i R/N), z^2 = T^2/Var(T) ~ chi^2_1.
 
     Determinism: the numerator rationalizes EXACTLY as U = N*T =

@@ -56,15 +56,6 @@ SAMPLE = [
     "seasonal_decomposition_daily",  # ordered residual windows
     "kmv_distinct_estimate",  # k-min hash ordering over merges
     # staged drafts (STAGED below) with merge-order-sensitive shapes
-    "mann_whitney_u_values",  # value-grid cumulative window
-    "harmonic_centrality_seeds",  # iterative frontier joins
-    "rbo_rankings_eval",  # two tie-broken top-k rankings
-    "wilcoxon_signed_rank_daily",  # |d|-grid cumulative window
-    "rfm_customer_segments",  # three banded-rank ntile passes
-    "seasonal_residual_outliers",  # MA windows + rank medians
-    "range_frame_trailing_30d",  # integer RANGE frame sums
-    "kruskal_wallis_h_values",  # k-group value-grid window
-    "jonckheere_terpstra_trend",  # value-grid cumulative window
     "err_rankings_eval",  # two-stage sharded topk + cascade
     "isotonic_calibration_pava",  # B^2 pair frame + suffix-min
     "misra_gries_heavy_tokens",  # sharded top-k + bounded frame
@@ -72,7 +63,7 @@ SAMPLE = [
 
 # plans modules that define QUERIES but are not in registry._modules()
 # yet; known_queries() makes their queries addressable until they register
-STAGED = ("draft_r16", "draft_r17", "draft_r18")
+STAGED = ("draft_r18",)
 
 
 def known_queries() -> dict:

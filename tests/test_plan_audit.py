@@ -64,3 +64,51 @@ def test_allowlists_and_samples_name_known_queries():
     ):
         stale = sorted(set(names) - known)
         assert not stale, f"{label} names unknown queries: {stale}"
+
+
+def test_staged_modules_are_leaves():
+    """No shipped file imports a STAGED draft module, so deleting one
+    leaves every registered query's closure hash, the tools and the
+    benchmarks unchanged.  Scans import statements (relative ones
+    resolved); the registry's own module list is checked above."""
+    import ast
+    import glob
+    import os
+
+    from tests.test_partition_invariance import STAGED
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    staged = {f"pedri_analysis_spark.plans.{m}" for m in STAGED}
+    paths = [
+        *glob.glob(
+            os.path.join(root, "pedri_analysis_spark", "**", "*.py"), recursive=True
+        ),
+        *glob.glob(os.path.join(root, "tools", "*.py")),
+        *glob.glob(os.path.join(root, "perfbench", "*.py")),
+        os.path.join(root, "bench.py"),
+        os.path.join(root, "__spark_entry__.py"),
+    ]
+    offenders = []
+    for path in paths:
+        rel = os.path.relpath(path, root)
+        module = os.path.splitext(rel)[0].replace(os.sep, ".")
+        if module in staged:
+            continue
+        package = module.rsplit(".", 1)[0].split(".")
+        with open(path, encoding="utf-8") as f:
+            tree = ast.parse(f.read(), rel)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                names = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                parts = package[: len(package) - node.level + 1] if node.level else []
+                base = ".".join(parts + ([node.module] if node.module else []))
+                names = [base] + [f"{base}.{a.name}" for a in node.names]
+            else:
+                continue
+            offenders += [
+                f"{rel}:{node.lineno} imports {n}"
+                for n in names
+                if any(n == s or n.startswith(s + ".") for s in staged)
+            ]
+    assert not offenders, "\n".join(offenders)

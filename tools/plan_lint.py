@@ -97,13 +97,13 @@ _BNLJ_ALLOWED = {
     # r11 queries (plans/draft_r11.py — registered in r11)
     "bootstrap_ci_avg_order",  # 1-row point/lo/hi CI frames crossed together
     "vocab_coverage_curve",  # 1-row n_vocab/occ_total frames (ntile + ppm share)
-    # r12 drafts (plans/draft_r12.py — unregistered in r11, facts pinned
-    # by tests/test_draft_r12.py so registration is friction-free)
+    # r12 queries (plans/draft_r12.py — registered in r12, facts pinned
+    # by tests/test_draft_r12.py)
     "kcore_decomposition",  # per-round report crosses three 1-row counts
     "chi2_token_selection",  # 1-row corpus-total frame (contingency n)
     "source_divergence_audit",  # |sources| + 1-row total frames vs vocab
     "matryoshka_recall_at_k",  # 8-row query frame (sq_recall precedent)
-    # r13 drafts (plans/draft_r13.py — unregistered in r11, facts pinned
+    # r13 queries (plans/draft_r13.py — registered in r13, facts pinned
     # by tests/test_draft_r13.py)
     "hits_hubs_authorities",  # 1-row max frame per normalization (3x)
     "ndcg_eval_topk",  # 4-row query frame (ivf_recall precedent)
@@ -114,18 +114,6 @@ _BNLJ_ALLOWED = {
     "lagged_spearman_ccf",  # 7-row literal lag frame against the daily rollup
     "permutation_test_segments",  # 1-row observed-statistic frame
     "mrr_bm25_phrases",  # 1-row corpus-stats frame (bm25 precedent) x4 legs
-    # r16 drafts (plans/draft_r16.py — staged r13, facts pinned by
-    # tests/test_draft_r16.py)
-    "mann_whitney_u_values",  # 1-row sums/stat frames chained
-    "cliffs_delta_values",  # 1-row sums/stat frames chained
-    "tv_distance_sources",  # 1-row corpus token-total frame crossed twice
-    "kmv_jaccard_sources",  # 1-row sketch + 1-row exact-audit frames crossed
-    "hilbert_layout_orders",  # 1-row quantization-bounds frame (zorder precedent)
-    "rbo_rankings_eval",  # 1-row corpus-stats frame (bm25 precedent)
-    # r17 drafts (plans/draft_r17.py — staged r13, facts pinned by
-    # tests/test_draft_r17.py)
-    "rfm_customer_segments",  # 1-row max/total frame + band-domain offset frames
-    "seasonal_residual_outliers",  # 1-row median and 1-row MAD frames crossed
     # r18 drafts (plans/draft_r18.py — staged r13, facts pinned by
     # tests/test_draft_r18.py)
     "bloom_semijoin_reduction",  # four 1-row count frames crossed together
@@ -155,10 +143,10 @@ _PYTHON_ALLOWED = {
     # measured superlinear on the 2x-step probe; justifications in the
     # two query docstrings.
     "embedding_near_dups",  # cosine_fast Arrow kernel (pair scoring)
-    # r12 drafts (plans/draft_r12.py — unregistered in r11)
+    # r12 queries (plans/draft_r12.py — registered in r12)
     "matryoshka_recall_at_k",  # dot_fast Arrow kernel (full + prefix dots)
     "negative_hardness_histogram",  # cosine_fast Arrow kernel (pair sims)
-    # r13 drafts (plans/draft_r13.py — unregistered in r11)
+    # r13 queries (plans/draft_r13.py — registered in r13)
     "ndcg_eval_topk",  # cosine_fast Arrow kernel (same audit topology as ivf_recall_at_k)
     "semantic_dedup_prune",  # cosine_fast Arrow kernel (pair scoring)
     # NOTE: kmeans_embeddings also uses a justified Arrow kernel, but its
