@@ -1,12 +1,9 @@
-"""Draft queries staged for r11 registration (NOT in the registry).
+"""The r11 query wave, registered in r11 (``registry._modules``).
 
-The r10 registry is FROZEN so the driver's 50-slot correctness window
-drains the r05/r06 verification-staleness tail instead of spending
-slots on first-contact checks (VERDICT r9 ask #2/#6).  These four are
-implemented, oracle-paired, and proven green by tests/test_draft_r11.py
-under the driver-identical comparison — registering them in r11 is one
-line each in ``registry._modules`` plus moving this module's dicts into
-the union (or simply importing it there).
+These four were implemented, oracle-paired and proven green under the
+driver-identical comparison before registration; the catalog-wide
+sweeps now check them, and tests/test_draft_r11.py keeps the checks the
+sweeps cannot express.
 
 Every query follows the established determinism discipline (integer /
 DECIMAL arithmetic only, hash-seeded pseudo-randomness via

@@ -1,11 +1,10 @@
-"""The r11-staged query wave, REGISTERED in r12 (registry._modules).
+"""The r12 query wave, registered in r12 (``registry._modules``).
 
-Staged-draft protocol (established r10→r11): the module was fully
-implemented, oracle-paired, plan-invariant-pinned and proven green by
-tests/test_draft_r12.py under the driver-identical comparison in r11;
-r12 registered it (one line in ``registry._modules``) and reworked
-``fellegi_sunter_parts`` with field-agreement candidate blocking
-(VERDICT r11 ask #3) before first driver contact.
+The module was implemented, oracle-paired, plan-invariant-pinned and
+proven green under the driver-identical comparison in r11; r12
+registered it and reworked ``fellegi_sunter_parts`` with
+field-agreement candidate blocking (VERDICT r11 ask #3) before first
+driver contact.
 
 Every query follows the determinism discipline (integer / DECIMAL
 arithmetic, hash-seeded pseudo-randomness, total orders on every rank,
@@ -30,7 +29,7 @@ Families and the public designs they implement:
 - l_diversity_audit — l-diversity (Machanavajjhala et al. 2007), the
   companion to k_anonymity_report on the same QI ladder.
 
-Wave B (same staging round):
+Wave B (same round):
 - chi2_token_selection — chi-square discriminative-vocabulary selection
   (the classic text-classification feature selector).
 - source_divergence_audit — per-source L1 unigram drift from the corpus

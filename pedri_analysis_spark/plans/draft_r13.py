@@ -1,11 +1,9 @@
-"""Draft queries staged for r13 registration (NOT in the registry).
+"""The r13 query wave, registered in r13 (``registry._modules``).
 
-Staged-draft protocol (r10→r12): fully implemented, oracle-paired,
-plan-invariant-pinned and proven green by tests/test_draft_r13.py under
-the driver-identical comparison THIS round; registering later is one
-line in ``registry._modules``.  The r12 verification window is already
-spoken for (15 r12 drafts + the r07 stale drain), so this wave targets
-r13.
+Every query was implemented, oracle-paired, plan-invariant-pinned and
+proven green under the driver-identical comparison in r12, the round
+before its registration (the r12 verification window was spent on the
+15 r12 queries and the r07 stale drain).
 
 Determinism discipline (unchanged): integer / DECIMAL arithmetic only,
 hash-seeded pseudo-randomness, total orders on every rank, ratio
@@ -50,7 +48,7 @@ Wave D families and the public designs they implement:
   keys.  The audit a runtime-filter (bloom join) deployment runs to
   size m/k.
 
-Wave E (same staging round):
+Wave E (same round):
 - t_closeness_audit — t-closeness (Li, Li & Venkatasubramanian, ICDE
   2007) over the QI ladder's (nation × segment) groups: ordered-EMD
   between each group's account-balance distribution and the global
@@ -76,7 +74,7 @@ Wave E (same staging round):
   other's top trade partner), the classic high-precision entity/link
   resolution rule (mutual nearest neighbors).
 
-Wave F (same staging round):
+Wave F (same round):
 - lagged_spearman_ccf — Spearman cross-correlation of the daily order
   and revenue series at leads/lags ±3 (the cross-series companion to
   the within-series trend tests).
@@ -89,7 +87,7 @@ Wave F (same staging round):
   1957) for a segment mean difference, null replicates from one sliced
   digest per row.
 
-Wave G (same staging round):
+Wave G (same round):
 - containment_near_dups — asymmetric Broder containment verification
   on the shared MinHash-LSH candidate chain: catches short-inside-long
   duplication that Jaccard structurally misses.

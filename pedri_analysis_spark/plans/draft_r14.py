@@ -1,12 +1,9 @@
-"""Draft queries staged for r14 registration (NOT in the registry).
+"""The r14 query wave, registered in r14 (``registry._modules``).
 
-Staged-draft protocol (established r10→r13): the module is fully
-implemented, oracle-paired, plan-invariant-pinned and proven green by
-tests/test_draft_r14.py under the driver-identical comparison in the
-round that stages it; registering later is one line in
-``registry._modules``.  Keeping it out of the r12/r13 registries
-preserves those verification windows for the r13 wave and the stale
-drain (see COVERAGE.md "Registration-window plan").
+The module was implemented, oracle-paired, plan-invariant-pinned and
+proven green under the driver-identical comparison before registration;
+it waited for r14 so the r12/r13 verification windows went to the r13
+wave and the stale drain (see COVERAGE.md "Registration-window plan").
 
 Every query follows the determinism discipline (integer / DECIMAL
 arithmetic, hash-seeded pseudo-randomness, total orders on every rank,

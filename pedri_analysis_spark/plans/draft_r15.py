@@ -1,10 +1,8 @@
-"""Draft queries staged for r15 registration (NOT in the registry).
+"""The r15 query wave, registered in r15 (``registry._modules``).
 
-Staged-draft protocol (established r10→r14): fully implemented,
-oracle-paired, plan-invariant-pinned and proven green by
-tests/test_draft_r15.py under the driver-identical comparison in the
-round that stages them; registering later is one line in
-``registry._modules`` (see COVERAGE.md "Registration-window plan").
+The module was implemented, oracle-paired, plan-invariant-pinned and
+proven green under the driver-identical comparison before registration
+(see COVERAGE.md "Registration-window plan").
 
 Every query follows the determinism discipline (integer / DECIMAL
 arithmetic, hash-seeded pseudo-randomness, total orders on every rank,

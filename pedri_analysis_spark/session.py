@@ -47,6 +47,15 @@ def get_spark(
       5,000 holds them with ~30% headroom. The cost is metaspace: 243 MB
       after two sweeps against 207 MB with the default cache. A static
       conf: it counts only when the SparkContext starts.
+    - ``spark.sql.codegen.useIdInClassName=false``: by default each
+      whole-stage class is named after its codegen stage id, and AQE
+      numbers the stages as it re-plans a running query, so the same code
+      can arrive under another id, and so another cache key, from one run
+      to the next. Seen in the cache keys of three ``run_all`` passes over
+      the fixtures: every class a warm pass compiled (10 and 3 of 236) was
+      a cold-pass class with only the stage id changed. Without the id the
+      warm passes compile none, and the cold pass 218. Stage ids stay in
+      the plan strings.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -63,6 +72,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
         .config("spark.sql.codegen.cache.maxEntries", "5000")
+        .config("spark.sql.codegen.useIdInClassName", "false")
         # Parquet ms/us timestamps (the current events table is
         # timestamp[us]) arrive as TIMESTAMP_NTZ; with the UTC session
         # timezone casting NTZ -> TIMESTAMP is an identity shift, matching

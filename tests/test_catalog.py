@@ -5,17 +5,20 @@ into tmp_path so a stale run FAILS without rewriting the committed file
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 
+from tests.conftest import ROOT
+
 
 def test_query_catalog_is_current(tmp_path):
-    committed = open("/root/repo/QUERIES.md").read()
+    committed = open(os.path.join(ROOT, "QUERIES.md")).read()
     out = tmp_path / "QUERIES.md"
     subprocess.run(
-        [sys.executable, "/root/repo/tools/gen_query_catalog.py", str(out)],
+        [sys.executable, os.path.join(ROOT, "tools", "gen_query_catalog.py"), str(out)],
         check=True,
-        cwd="/root/repo",
+        cwd=ROOT,
     )
     regenerated = out.read_text()
     assert regenerated == committed, (
@@ -116,9 +119,7 @@ def test_source_manifest_covers_every_green_query():
 
 def test_bench_diff_flags_regressions_and_failures(tmp_path):
     import json
-    import sys
 
-    sys.path.insert(0, "/root/repo")
     from tools.bench_diff import diff
 
     old = {"value": 10.0, "queries": {"a": 1.0, "b": 2.0, "tiny": 0.05}}

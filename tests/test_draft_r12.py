@@ -1,9 +1,6 @@
-"""The r12-staged draft queries (plans/draft_r12.py) must already pass
-the driver-identical oracle comparison — registration in r12 is then a
-registry toggle, not new risk.  The module is intentionally NOT in
-``registry._modules`` this round (the r11 verification window is spent
-on the 10 rewritten-since-green re-proofs + 6 r11-draft first contacts
-+ the r06/r07 stale drain)."""
+"""The r12 wave (plans/draft_r12.py), registered in r12: registration,
+driver-identical oracle parity, plan invariants and the property pins
+of its queries."""
 
 from __future__ import annotations
 

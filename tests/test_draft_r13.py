@@ -1,8 +1,6 @@
-"""The r13-staged draft queries (plans/draft_r13.py) must already pass
-the driver-identical oracle comparison — registration in r13 is then a
-registry toggle, not new risk.  The module is intentionally NOT in
-``registry._modules``: the r12 verification window is already spent on
-the 15 r12 drafts plus the stale drain."""
+"""The r13 wave (plans/draft_r13.py), registered in r13: registration,
+driver-identical oracle parity, plan invariants and the property pins
+of its queries."""
 
 from __future__ import annotations
 

@@ -1,8 +1,6 @@
-"""The r15-staged draft queries (plans/draft_r15.py) must already pass
-the driver-identical oracle comparison — registration in r15 is then a
-registry toggle, not new risk.  Registered at r15 round-start per the
-COVERAGE.md "r15 window allocation" plan (7 first-contacts + 43 LRU
-drains covering the entire 22-query r09 tail + the 21 oldest r10s)."""
+"""The r15 wave (plans/draft_r15.py), registered in r15: registration,
+driver-identical oracle parity, plan invariants and the property pins
+of its queries."""
 
 from __future__ import annotations
 
@@ -39,23 +37,20 @@ def test_draft_matches_oracle(spark, duck, name, qfn, sql):
 def test_draft_plan_invariants(spark, name, qfn, sql):
     """The drafts must already satisfy the catalog plan rules
     (tools/plan_lint.py): no CartesianProduct, Python boundaries only
-    for pre-allowlisted justified Arrow kernels, BNLJ only for
+    for pre-allowlisted justified Arrow kernels, and BNLJ only for
     pre-allowlisted bounded build sides."""
     from tools.plan_lint import _BNLJ_ALLOWED, _PYTHON_ALLOWED, lint_plan
 
     facts = lint_plan(
-        qfn(spark, "/root/testdata/sf0.01")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
+        qfn(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
     )
     assert not facts["cartesian"]
     if facts["python"]:
         assert name in _PYTHON_ALLOWED, (
-            f"{name}: Python boundary without a pre-staged Arrow-kernel entry"
+            f"{name}: Python boundary without an allowlisted Arrow-kernel entry"
         )
     if facts["bnlj"]:
-        assert name in _BNLJ_ALLOWED, f"{name}: BNLJ without a pre-staged allowlist entry"
+        assert name in _BNLJ_ALLOWED, f"{name}: BNLJ without an allowlist entry"
 
 
 def test_mcnemar_cells_partition_corpus(spark, duck):

@@ -4,10 +4,6 @@ monotonicity, imputation cascade conservation."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from pyspark.sql import functions as F
 
 from pedri_analysis_spark.plans import governance_queries as gq

@@ -55,35 +55,15 @@ SAMPLE = [
     "goodman_kruskal_tau",  # contingency margins over hash splits
     "seasonal_decomposition_daily",  # ordered residual windows
     "kmv_distinct_estimate",  # k-min hash ordering over merges
-    # staged drafts (STAGED below) with merge-order-sensitive shapes
-    "err_rankings_eval",  # two-stage sharded topk + cascade
-    "isotonic_calibration_pava",  # B^2 pair frame + suffix-min
-    "misra_gries_heavy_tokens",  # sharded top-k + bounded frame
 ]
-
-# plans modules that define QUERIES but are not in registry._modules()
-# yet; known_queries() makes their queries addressable until they register
-STAGED = ("draft_r18",)
-
-
-def known_queries() -> dict:
-    """Registered queries plus the queries of the STAGED draft modules."""
-    import importlib
-
-    from pedri_analysis_spark.plans.registry import all_queries
-
-    out = dict(all_queries())
-    for module in STAGED:
-        mod = importlib.import_module(f"pedri_analysis_spark.plans.{module}")
-        out.update(mod.QUERIES)
-    return out
 
 
 @pytest.mark.parametrize("name", SAMPLE)
 def test_results_invariant_under_hostile_partitioning(spark, name):
+    from pedri_analysis_spark.plans.registry import all_queries
     from pedri_analysis_spark.sources.tables import ensure_session_conf
 
-    fn = known_queries()[name]
+    fn = all_queries()[name]
     base = fn(spark, SF_DIR)
     cols = base.columns
     _, want = canonical_rows(cols, [tuple(r) for r in base.collect()])

@@ -7,11 +7,10 @@ a new query that silently plans a pairwise blowup fails here, not in a
 
 from __future__ import annotations
 
-import sys
+import os
 
-sys.path.insert(0, "/root/repo")
-
-from tools.plan_lint import audit  # noqa: E402
+from tests.conftest import ROOT
+from tools.plan_lint import audit
 
 SF = "/root/testdata/sf0.01"
 
@@ -23,7 +22,7 @@ def test_catalog_plan_invariants(spark):
     # the committed audit artifact must stay in sync with the catalog
     import json
 
-    with open("/root/repo/PLANAUDIT.json") as f:
+    with open(os.path.join(ROOT, "PLANAUDIT.json")) as f:
         committed = json.load(f)
     assert set(committed) == set(report), (
         "PLANAUDIT.json stale — rerun tools/plan_lint.py"
@@ -31,31 +30,28 @@ def test_catalog_plan_invariants(spark):
 
 
 def test_allowlists_and_samples_name_known_queries():
-    """Every allowlist and sample entry must name a registered query or one
-    of a staged draft module: a stale allowlist name would silently exempt
-    a future query that reuses it, and a stale sample name pins nothing.
-    Every plans module that defines QUERIES must be registered or staged."""
+    """Every allowlist and sample entry must name a registered query: a
+    stale allowlist name would silently exempt a future query that reuses
+    it, and a stale sample name pins nothing.  Every plans module that
+    defines QUERIES must be registered."""
     import glob
     import importlib
-    import os
 
     from pedri_analysis_spark.plans import registry
-    from tests.test_partition_invariance import SAMPLE, STAGED, known_queries
+    from tests.test_partition_invariance import SAMPLE
     from tools import plan_lint
 
     registered = {m.__name__.rsplit(".", 1)[1] for m in registry._modules()}
-    assert not registered & set(STAGED), "staged draft already registered"
     plans_dir = os.path.dirname(registry.__file__)
     for path in glob.glob(os.path.join(plans_dir, "*.py")):
         name = os.path.splitext(os.path.basename(path))[0]
         mod = importlib.import_module(f"pedri_analysis_spark.plans.{name}")
         if hasattr(mod, "QUERIES"):
-            assert name in registered or name in STAGED, (
-                f"plans/{name}.py defines QUERIES but is neither registered "
-                "nor staged"
+            assert name in registered, (
+                f"plans/{name}.py defines QUERIES but is not registered"
             )
 
-    known = set(known_queries())
+    known = set(registry.all_queries())
     for label, names in (
         ("plan_lint._BNLJ_ALLOWED", plan_lint._BNLJ_ALLOWED),
         ("plan_lint._PYTHON_ALLOWED", plan_lint._PYTHON_ALLOWED),
@@ -66,49 +62,30 @@ def test_allowlists_and_samples_name_known_queries():
         assert not stale, f"{label} names unknown queries: {stale}"
 
 
-def test_staged_modules_are_leaves():
-    """No shipped file imports a STAGED draft module, so deleting one
-    leaves every registered query's closure hash, the tools and the
-    benchmarks unchanged.  Scans import statements (relative ones
-    resolved); the registry's own module list is checked above."""
-    import ast
+def test_no_hard_coded_checkout_path():
+    """Tests and tools locate the repo from their own __file__.  A quoted
+    absolute path to this checkout, or to a repo file inside some other
+    checkout, makes a run from any other checkout import and read that
+    fixed copy instead of its own."""
     import glob
-    import os
+    import re
 
-    from tests.test_partition_invariance import STAGED
+    def names_a_checkout(path: str) -> bool:
+        parts = path.strip("/").split("/")
+        return (
+            path == ROOT
+            or path.startswith(ROOT + "/")
+            or any(os.path.exists(os.path.join(ROOT, *parts[i:])) for i in range(1, len(parts)))
+        )
 
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    staged = {f"pedri_analysis_spark.plans.{m}" for m in STAGED}
-    paths = [
-        *glob.glob(
-            os.path.join(root, "pedri_analysis_spark", "**", "*.py"), recursive=True
-        ),
-        *glob.glob(os.path.join(root, "tools", "*.py")),
-        *glob.glob(os.path.join(root, "perfbench", "*.py")),
-        os.path.join(root, "bench.py"),
-        os.path.join(root, "__spark_entry__.py"),
-    ]
     offenders = []
-    for path in paths:
-        rel = os.path.relpath(path, root)
-        module = os.path.splitext(rel)[0].replace(os.sep, ".")
-        if module in staged:
-            continue
-        package = module.rsplit(".", 1)[0].split(".")
+    for path in sorted(
+        glob.glob(os.path.join(ROOT, "tests", "*.py"))
+        + glob.glob(os.path.join(ROOT, "tools", "*.py"))
+    ):
         with open(path, encoding="utf-8") as f:
-            tree = ast.parse(f.read(), rel)
-        for node in ast.walk(tree):
-            if isinstance(node, ast.Import):
-                names = [a.name for a in node.names]
-            elif isinstance(node, ast.ImportFrom):
-                parts = package[: len(package) - node.level + 1] if node.level else []
-                base = ".".join(parts + ([node.module] if node.module else []))
-                names = [base] + [f"{base}.{a.name}" for a in node.names]
-            else:
-                continue
-            offenders += [
-                f"{rel}:{node.lineno} imports {n}"
-                for n in names
-                if any(n == s or n.startswith(s + ".") for s in staged)
-            ]
-    assert not offenders, "\n".join(offenders)
+            for lineno, line in enumerate(f, 1):
+                for literal in re.findall(r"""["'](/[^"'\s{]+)""", line):
+                    if names_a_checkout(literal):
+                        offenders.append(f"{os.path.relpath(path, ROOT)}:{lineno} {literal}")
+    assert not offenders, "absolute checkout path in:\n" + "\n".join(offenders)

@@ -4,10 +4,6 @@ the oracle hash-check alone would not localize if broken."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 SF = "/root/testdata/sf0.001"
 
 

@@ -11,11 +11,14 @@ Pure DuckDB — no Spark session needed; runs the real generator at
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 
 import duckdb
 import pytest
+
+from tests.conftest import ROOT
 
 SRC = "/root/testdata/sf0.001"
 
@@ -26,7 +29,7 @@ def synth_dir(tmp_path_factory):
     subprocess.run(
         [
             sys.executable,
-            "/root/repo/tools/gen_sf_synth.py",
+            os.path.join(ROOT, "tools", "gen_sf_synth.py"),
             "--src",
             SRC,
             "--replicas",

@@ -36,26 +36,7 @@ def main() -> int:
     from pedri_analysis_spark.session import get_spark
 
     spark = get_spark(app_name="ab-bench")
-    queries = dict(all_queries())
-    # staged draft modules are probed on staging day (SCALE.md protocol)
-    # but are not registered yet — make them addressable here too
-    import glob as _glob
-
-    for path in _glob.glob(
-        os.path.join(root, "pedri_analysis_spark", "plans", "draft_*.py")
-    ):
-        name = os.path.splitext(os.path.basename(path))[0]
-        try:
-            mod = __import__(
-                f"pedri_analysis_spark.plans.{name}", fromlist=[name]
-            )
-        except Exception as exc:
-            # loud, not silent: a draft that fails to import would
-            # otherwise surface as a phantom KeyError on the query name
-            print(f"draft module {name} failed to import: {exc!r}", file=sys.stderr)
-            continue
-        for qn, fn in getattr(mod, "QUERIES", {}).items():
-            queries.setdefault(qn, fn)
+    queries = all_queries()
     spark.range(1000).selectExpr("sum(id)").collect()
 
     import pandas as pd

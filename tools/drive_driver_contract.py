@@ -2,7 +2,7 @@
 session-factory configs), import __spark_entry__, run entry + all queries,
 compare each against its oracle_sql via DuckDB — like CORRECTNESS_r{N}."""
 import os, sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession
 import duckdb
 

@@ -1,9 +1,11 @@
 """Generate QUERIES.md: the full registered-query inventory with family,
 oracle status, and each query's first docstring sentence. Run after
 adding queries; CI-checked by tests/test_catalog.py."""
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def first_sentence(doc: str) -> str:
@@ -19,7 +21,7 @@ def first_sentence(doc: str) -> str:
     return text
 
 
-def main(out_path: str = "/root/repo/QUERIES.md") -> None:
+def main(out_path: str = os.path.join(ROOT, "QUERIES.md")) -> None:
     from pedri_analysis_spark.plans.registry import all_oracle_sql, all_queries
 
     qs = all_queries()

@@ -46,7 +46,7 @@ No randomness anywhere; re-running produces byte-identical parquet.
 Usage:
     python tools/gen_sf_synth.py --replicas 10        # -> .scratch/sf1.0synth
     python tools/scaling_check.py --sf-dirs /root/testdata/sf0.1 \
-        /root/repo/.scratch/sf1.0synth
+        .scratch/sf1.0synth
 """
 
 from __future__ import annotations

@@ -65,7 +65,6 @@ _BNLJ_ALLOWED = {
     "pmi_top_cooccurrence",  # 1-row corpus doc-count frame (PMI denominator)
     "ari_clusters_vs_labels",  # four 1-row combinatorics frames crossed
     "map_bm25_eval",  # 1-row corpus-stats frame per scoring leg (as mrr)
-    "err_rankings_eval",  # 1-row corpus-stats frame per scoring leg (as mrr/map)
     "personalized_pagerank",  # 1-row seed-count frame (as pagerank)
     "goodman_kruskal_tau",  # 1-row column-margin frame crossed
     "pedri_radar_percentiles",  # 1-row league-means frame
@@ -114,12 +113,6 @@ _BNLJ_ALLOWED = {
     "lagged_spearman_ccf",  # 7-row literal lag frame against the daily rollup
     "permutation_test_segments",  # 1-row observed-statistic frame
     "mrr_bm25_phrases",  # 1-row corpus-stats frame (bm25 precedent) x4 legs
-    # r18 drafts (plans/draft_r18.py — staged r13, facts pinned by
-    # tests/test_draft_r18.py)
-    "bloom_semijoin_reduction",  # four 1-row count frames crossed together
-    "isotonic_calibration_pava",  # bounded ~40x40 bucket-grid non-equi
-    # pair frame (j <= k interval enumeration; both sides the $12.5k
-    # price-bucket rollup — domain-bounded at every SF)
 }
 
 # Arrow-vectorized Python kernels with written justifications (see the

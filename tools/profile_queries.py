@@ -22,7 +22,8 @@ import sys
 import time
 from contextlib import redirect_stdout
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -48,7 +49,7 @@ def main() -> int:
     queries = all_queries()
     if args and args[0] == "--top":
         n = int(args[1])
-        detail = json.load(open(os.path.join(os.path.dirname(out_path) or ".", "/root/repo/BENCH_DETAIL.json")))
+        detail = json.load(open(os.path.join(ROOT, "BENCH_DETAIL.json")))
         names = [k for k, _ in sorted(detail["queries"].items(), key=lambda kv: -kv[1])[:n]]
     else:
         names = args

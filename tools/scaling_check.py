@@ -64,7 +64,7 @@ KNOWN_QUADRATIC: dict[str, str] = {}
 # SCALING.json so the approximation is reported, not implied exact.
 APPROX_PAST_CAP: dict[str, str] = {
     "containment_near_dups": (
-        "r13 draft, pre-staged: inherits minhash_near_dups' MAX_BUCKET "
+        "registered r13: inherits minhash_near_dups' MAX_BUCKET "
         "drop-cap; the cap does not engage at sf1.0synth and forcing it "
         "to 16 and even 4 still yields MEASURED pair recall 1.0000 "
         "(tools/chunk_recall.py --containment, r11) — high-containment "
@@ -133,7 +133,7 @@ APPROX_PAST_CAP: dict[str, str] = {
         "passes"
     ),
     "winnowing_fingerprints": (
-        "r15 draft, pre-staged: fingerprints run over DISTINCT texts "
+        "registered r15: fingerprints run over DISTINCT texts "
         "(two-layer rule), so posting lists stay small and the shared "
         "minhash drop cap (MAX_BUCKET=64) does NOT engage at any "
         "measured scale (sf1.0synth: shipped == uncapped, top-50 "

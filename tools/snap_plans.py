@@ -8,7 +8,10 @@ import os
 import sys
 from contextlib import redirect_stdout
 
-OUT_DIR = os.environ.get("SNAP_OUT_DIR", "/root/repo/plans/r16")
+OUT_DIR = os.environ.get(
+    "SNAP_OUT_DIR",
+    os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r16"),
+)
 
 
 def main() -> int:
