@@ -94,16 +94,11 @@ def run_bench(
     return timings, failures
 
 
-def main() -> None:
-    from pedri_analysis_spark.session import get_spark
-    from pedri_analysis_spark.plans import all_queries
-
-    spark = get_spark(app_name="pedri-bench")
-
-    queries = all_queries()
-
-    # Warm up the JVM/codegen paths with one trivial action so the first
-    # measured query doesn't pay session startup.
+def warm(spark, sf_dir: str) -> None:
+    """Pay a session's one-time costs before anything is timed.  Every
+    timing tool calls this, so they all measure from the same state."""
+    # The JVM/codegen paths: one trivial action, so the first measured
+    # query doesn't pay session startup.
     spark.range(1000).selectExpr("sum(id)").collect()
     # ... and the Arrow/Python worker pool, so the first pandas-UDF query
     # (alphabetically ann_lsh) isn't charged several seconds of worker
@@ -117,18 +112,26 @@ def main() -> None:
     try:
         from pedri_analysis_spark.plans.layout_queries import ensure_bucketed_tables
 
-        ensure_bucketed_tables(spark, SF_DIR)
+        ensure_bucketed_tables(spark, sf_dir)
     except Exception as exc:  # noqa: BLE001
         print(f"bench: bucketed-table warmup failed: {exc}", file=sys.stderr)
 
+
+def main() -> None:
+    from pedri_analysis_spark.session import get_spark
+    from pedri_analysis_spark.plans import all_queries
+
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2"))
-    # Record host load before and after: the container shares a host and
-    # co-tenant CPU steal has inflated identical-code totals up to ~1.4x
-    # (committed noise study) — cross-round per-query comparisons need the
-    # load context to normalize instead of re-litigating regressions.
-    load_before = _loadavg()
-    timings, failures = run_bench(spark, queries, SF_DIR, runs)
-    load_after = _loadavg()
+    with get_spark(app_name="pedri-bench") as spark:
+        queries = all_queries()
+        warm(spark, SF_DIR)
+        # Record host load before and after: the container shares a host and
+        # co-tenant CPU steal has inflated identical-code totals up to ~1.4x
+        # (committed noise study) — cross-round per-query comparisons need the
+        # load context to normalize instead of re-litigating regressions.
+        load_before = _loadavg()
+        timings, failures = run_bench(spark, queries, SF_DIR, runs)
+        load_after = _loadavg()
     total = round(sum(timings.values()), 4)
     # Full per-query map goes to a file; stdout gets ONE compact line the
     # driver can parse even if it keeps only a tail of the output.  (Round-1
@@ -169,7 +172,6 @@ def main() -> None:
         "loadavg": [load_before, load_after],
     }
     print(json.dumps(compact))
-    spark.stop()
 
 
 if __name__ == "__main__":

@@ -168,6 +168,65 @@ def test_run_bench_isolates_failures(spark):
     assert timings["ok"] > 0
 
 
+def test_ab_bench_isolates_failures_and_releases_cache(spark):
+    """ab_bench's per-query loop records a broken query and goes on, and
+    each run starts with nothing persisted, so best-of-N never replays an
+    earlier run's cached frame."""
+    from pyspark.sql import functions as F
+
+    from tools.ab_bench import time_queries
+
+    jsc = spark.sparkContext._jsc
+    baseline = set(jsc.getPersistentRDDs().keys())
+    held_at_start = []
+
+    def persists(s, sf):
+        held_at_start.append(set(jsc.getPersistentRDDs().keys()) - baseline)
+        df = s.range(100).withColumn("v", F.col("id") * 2).persist()
+        df.count()
+        return df.agg(F.sum("v").alias("s"))
+
+    def broken(s, sf):
+        return s.range(10).selectExpr("no_such_column + 1")
+
+    timings, failures = time_queries(
+        spark, {"broken": broken, "persists": persists}, "unused", 3
+    )
+    assert set(failures) == {"broken"}
+    assert set(timings) == {"persists"} and timings["persists"] > 0
+    assert held_at_start == [set(), set(), set()]
+    assert set(jsc.getPersistentRDDs().keys()) <= baseline
+
+
+def test_tools_warm_up_only_through_bench():
+    """bench.warm is the one session warm-up: a tool that calls a pandas
+    UDF, builds the bucketed tables or runs its own spark.range action
+    times queries from a different state than bench.py does."""
+    import ast
+    import glob
+
+    banned = {"pandas_udf", "_warm_udf", "ensure_bucketed_tables"}
+    offenders = []
+    for path in sorted(glob.glob(os.path.join(ROOT, "tools", "*.py"))):
+        with open(path, encoding="utf-8") as f:
+            tree = ast.parse(f.read())
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            fn = node.func
+            if isinstance(fn, ast.Name):
+                name = fn.id
+            elif isinstance(fn, ast.Attribute):
+                name = fn.attr
+                if name == "range" and getattr(fn.value, "id", None) == "spark":
+                    name = "spark.range"
+            else:
+                continue
+            if name in banned or name == "spark.range":
+                offenders.append(f"{os.path.basename(path)}:{node.lineno} {name}")
+    assert not offenders, "warm-up outside bench.warm:\n" + "\n".join(offenders)
+
+
 def test_extract_fn_source_includes_decorators_and_rejects_ambiguity():
     """The source-stamp hash must cover the @_register decorator (the
     oracle SQL lives in its argument, so an oracle edit is a rewrite)

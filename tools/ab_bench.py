@@ -1,74 +1,67 @@
-"""Isolated per-query A/B bench across git versions — the exoneration
-protocol (bench-noise lesson, enforced since r9).
+"""Isolated per-query A/B bench across git versions or session confs.
 
-Co-tenant load inflates in-sweep timings up to ~1.4x, so a cross-round
-bench_diff flag is evidence of LOAD as often as of a plan defect.  The
-protocol that has settled every flag so far (dedup_cascade_report r9;
-ngram/embedding/mad_robust/graph-edges r10):
+Host load skews in-sweep timings, so settle a bench flag by running this
+back-to-back per variant (a checkout per commit, or a `--conf` per conf):
 
-1. `git worktree add .scratch/wt_X <commit>` for each version under test
-2. run THIS script against each worktree back-to-back, same sf_dir,
-   same runs, noting loadavg (printed) — the versions see the same host
-3. compare best-of-N; delete the worktrees
+    python tools/ab_bench.py <repo_root> <sf_dir> <runs> q1 [q2 ...] [--conf k=v,...]
 
-Usage:
-    python tools/ab_bench.py <repo_root> <sf_dir> <runs> q1 [q2 ...]
-
-Prints one JSON line {"loadavg": [...], "timings": {...}}.  <repo_root>
-is prepended to sys.path, so the same script measures any worktree's
-code under the identical protocol (fresh session, bench.py's noop-write
-measurement, clearCache between queries, warm JVM + Arrow pool).
+It measures <repo_root>'s package with THIS checkout's bench.py: `warm`,
+then per query the best of `runs` one-run `run_bench` calls, each of
+which clears the cache after it (cold-plan cost, no replay of an earlier
+run's persisted frame).  Prints one JSON line {"conf", "loadavg", "total",
+"n_failed", "timings", "failures"}.
 """
 
+import argparse
 import json
 import os
 import sys
-import time
+
+# bench before <repo_root> joins sys.path: an older worktree has no warm().
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from bench import run_bench, warm  # noqa: E402
+
+
+def time_queries(spark, queries, sf_dir, runs):
+    """(timings, failures) of ``queries``, each the best of ``runs``
+    cold-plan runs; a failing query is recorded and the rest still run."""
+    timings, failures = {}, {}
+    for name, fn in queries.items():
+        for _ in range(runs):
+            t, f = run_bench(spark, {name: fn}, sf_dir, 1)
+            if f:
+                failures.update(f)
+                timings.pop(name, None)
+                break
+            timings[name] = min(t[name], timings.get(name, t[name]))
+    return timings, failures
 
 
 def main() -> int:
-    root, sf_dir, runs = sys.argv[1], sys.argv[2], int(sys.argv[3])
-    names = sys.argv[4:]
-    sys.path.insert(0, root)
-    os.chdir(root)
+    p = argparse.ArgumentParser()
+    p.add_argument("root")
+    p.add_argument("sf_dir")
+    p.add_argument("runs", type=int)
+    p.add_argument("names", nargs="+")
+    p.add_argument("--conf", default="", help="extra session confs k=v,k=v")
+    a = p.parse_args()
+    sys.path.insert(0, a.root)
+    os.chdir(a.root)
 
     from pedri_analysis_spark.plans import all_queries
     from pedri_analysis_spark.session import get_spark
 
-    spark = get_spark(app_name="ab-bench")
-    queries = all_queries()
-    spark.range(1000).selectExpr("sum(id)").collect()
-
-    import pandas as pd
-    from pyspark.sql import functions as F  # noqa: F401
-    from pyspark.sql.types import LongType
-
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(LongType())
-    def _warm(s: pd.Series) -> pd.Series:
-        return s
-
-    spark.range(1024).select(_warm("id")).collect()
-
-    timings = {}
-    for name in names:
-        fn = queries[name]
-        best = None
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            el = time.perf_counter() - t0
-            best = el if best is None else min(best, el)
-            # between runs, not after the loop: queries that persist
-            # frames (ann_lsh, pagerank, LPA, BFS) would otherwise
-            # plan-cache-match run 1's InMemoryRelation and best-of-N
-            # would measure a warm-cache replay instead of cold-plan cost
-            spark.catalog.clearCache()
-        timings[name] = round(best, 4)
-
-    print(json.dumps({"loadavg": list(os.getloadavg()), "timings": timings}))
+    extra = dict(kv.split("=", 1) for kv in a.conf.split(",") if kv)
+    with get_spark(app_name="ab-bench", extra_conf=extra) as spark:
+        queries = all_queries()
+        warm(spark, a.sf_dir)
+        timings, failures = time_queries(
+            spark, {n: queries[n] for n in a.names}, a.sf_dir, a.runs
+        )
+    total = round(sum(timings.values()), 4)
+    loadavg = [round(x, 2) for x in os.getloadavg()]
+    print(json.dumps({"conf": a.conf or "baseline", "loadavg": loadavg, "total": total,
+                      "n_failed": len(failures), "timings": timings, "failures": failures}))
     return 0
 
 

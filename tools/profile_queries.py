@@ -53,22 +53,17 @@ def main() -> int:
         names = [k for k, _ in sorted(detail["queries"].items(), key=lambda kv: -kv[1])[:n]]
     else:
         names = args
-    spark = get_spark(app_name="profile")
+    with get_spark(app_name="profile") as spark:
+        _profile(spark, queries, names, runs, out_path)
+    return 0
+
+
+def _profile(spark, queries, names, runs, out_path) -> None:
+    from bench import warm
+
     sc = spark.sparkContext
-    # warm exactly like bench.py
-    spark.range(1000).selectExpr("sum(id)").collect()
-    from bench import _warm_udf
-
-    spark.range(1024).select(_warm_udf()("id")).collect()
-    try:
-        from pedri_analysis_spark.plans.layout_queries import ensure_bucketed_tables
-
-        ensure_bucketed_tables(spark, SF_DIR)
-    except Exception as exc:  # noqa: BLE001
-        print(f"profile: bucketed warmup failed: {exc}", file=sys.stderr)
-
+    warm(spark, SF_DIR)
     tracker = sc.statusTracker()
-    results = []
     with open(out_path, "w") as fh:
         for name in names:
             fn = queries[name]
@@ -119,7 +114,6 @@ def main() -> int:
                     pass
             fh.write(json.dumps(rec) + "\n")
             fh.flush()
-            results.append(rec)
             if "error" in rec:
                 print(f"{name}: ERROR {rec['error']}")
             else:
@@ -128,8 +122,6 @@ def main() -> int:
                     f"bench_like={rec['bench_like_s']}s jobs={rec['jobs_total']} "
                     f"exch={rec['n_exchange']} bcast={rec['n_bcast']} py={rec['n_pyeval']}"
                 )
-    spark.stop()
-    return 0
 
 
 if __name__ == "__main__":

@@ -174,14 +174,15 @@ def main() -> int:
     )
     a = p.parse_args()
 
-    from bench import run_bench
-    from pedri_analysis_spark.plans import all_queries
     from pedri_analysis_spark.session import get_spark
 
-    spark = get_spark(app_name="pedri-scaling-check")
-    # same warmup rationale as bench.py: don't charge the first SF for
-    # JVM/codegen/Arrow-worker spin-up
-    spark.range(1000).selectExpr("sum(id)").collect()
+    with get_spark(app_name="pedri-scaling-check") as spark:
+        return _check(spark, a)
+
+
+def _check(spark, a) -> int:
+    from bench import run_bench, warm
+    from pedri_analysis_spark.plans import all_queries
 
     queries = all_queries()
     if a.only:
@@ -194,6 +195,8 @@ def main() -> int:
     failures: dict[str, dict[str, str]] = {}
     for sf_dir in a.sf_dirs:
         label = os.path.basename(sf_dir.rstrip("/"))
+        # per SF: the bucketed tables are built from this SF's data
+        warm(spark, sf_dir)
         t, f = run_bench(spark, queries, sf_dir, a.runs)
         timings[label] = t
         if f:
