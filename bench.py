@@ -9,6 +9,7 @@ we measure engine execution, not driver-side row materialization.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import sys
@@ -67,13 +68,16 @@ def run_bench(
         fn = queries[name]
         best = None
         try:
-            for _ in range(runs):
-                t0 = time.perf_counter()
-                df = fn(spark, sf_dir)
-                # Force full execution of the plan without collecting rows.
-                df.write.format("noop").mode("overwrite").save()
-                elapsed = time.perf_counter() - t0
-                best = elapsed if best is None else min(best, elapsed)
+            # Whatever a query prints (run_all's lineup report) goes to
+            # stderr: the bench's stdout is its one JSON line.
+            with contextlib.redirect_stdout(sys.stderr):
+                for _ in range(runs):
+                    t0 = time.perf_counter()
+                    df = fn(spark, sf_dir)
+                    # Force full execution of the plan without collecting rows.
+                    df.write.format("noop").mode("overwrite").save()
+                    elapsed = time.perf_counter() - t0
+                    best = elapsed if best is None else min(best, elapsed)
         except Exception as exc:  # noqa: BLE001
             failures[name] = f"{type(exc).__name__}: {exc}"[:500]
             print(f"bench: {name} FAILED: {failures[name]}", file=sys.stderr)

@@ -24,16 +24,38 @@ the artifact set is deterministic in containers without plotting libs.
 
 Scale: each stage is a DataFrame plan over ONE cached parse of the event
 corpus; the per-match/1-row outputs are bounded, so each sink collects its
-rows once and writes the file from the driver (see sources.sinks). Every
-frame cached here is released before ``run_all`` returns.
+rows once and writes the file from the driver (see sources.sinks). A pass
+is ~25 small Spark actions, each paying fixed driver cost (tens of ms per
+collect) for little data work, so the independent ones overlap:
+
+- the calling thread fills the ``events`` cache with the lineup report,
+  which stays the first stdout output;
+- then three chains fan out on a thread pool no wider than
+  ``spark.sparkContext.defaultParallelism``:
+  profile JSON -> ``ext`` -> {extended CSV + compat copy, summary JSON,
+  trend, scatter}; ``basic`` -> {basic CSV, summary CSV, 3 bars,
+  3 histograms, radar}; and match ids, heatmap and both pass maps;
+- a shared cache is filled by its first sink before its consumers are
+  submitted, so no cache is filled twice;
+- every task runs under ``inheritable_thread_target``, so the caller's job
+  group and local properties reach every job.
+
+``_fan_out`` holds all of the concurrency. Figures render (when matplotlib)
+on the calling thread after the join, because pyplot is not thread-safe.
+Every frame cached here is released only after all threads have joined,
+on success and on failure, and no thread outlives ``run_all``.
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
+from collections.abc import Callable
+from concurrent.futures import FIRST_EXCEPTION, Future, ThreadPoolExecutor, wait
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -141,20 +163,34 @@ def _have_matplotlib() -> bool:
         return False
 
 
-def _figure(
-    artifacts: dict[str, str],
-    name: str,
-    data_df: DataFrame,
-    fig_dir: str,
-    render,
-    order_by: list[str] | None = None,
-) -> None:
-    """Write the figure's data CSV always; render PNG+SVG when possible."""
-    data_path = write_csv_single(data_df, os.path.join(fig_dir, f"{name}.csv"), order_by)
-    artifacts[f"fig:{name}:data"] = data_path
-    if _have_matplotlib():
-        for p in render(os.path.join(fig_dir, name)):
-            artifacts[f"fig:{name}:{os.path.splitext(p)[1][1:]}"] = p
+@contextlib.contextmanager
+def _fan_out(spark: SparkSession):
+    """Yield ``submit(fn, *args)``, which runs ``fn`` on a thread pool no
+    wider than the session's default parallelism, under the caller's job
+    group and local properties; a running task may submit more.  Leaving
+    the block waits for every task and re-raises the first failure (in
+    submission order); the pool's threads are joined on every exit path."""
+    pool = ThreadPoolExecutor(spark.sparkContext.defaultParallelism)
+    futures: list[Future] = []
+
+    def submit(fn, *args) -> None:
+        # Wrapped per task, so each task gets its own copy of the caller's
+        # local properties: Spark writes the SQL execution id into them.
+        futures.append(pool.submit(inheritable_thread_target(spark)(fn), *args))
+
+    try:
+        yield submit
+        while True:
+            snapshot = list(futures)
+            failed = [f for f in snapshot if f.done() and f.exception() is not None]
+            if failed:
+                raise failed[0].exception()
+            pending = [f for f in snapshot if not f.done()]
+            if not pending:
+                return
+            wait(pending, return_when=FIRST_EXCEPTION)
+    finally:
+        pool.shutdown(wait=True, cancel_futures=True)
 
 
 def run_all(
@@ -163,17 +199,29 @@ def run_all(
     profile_path: str | None = None,
     out_dir: str = "outputs",
 ) -> dict[str, str]:
-    """Run every stage end-to-end; returns {artifact-name: path}."""
+    """Run every stage end-to-end; returns {artifact-name: path}, sorted by
+    name."""
     csv_dir = os.path.join(out_dir, "csv")
     fig_dir = os.path.join(out_dir, "figures")
     for d in (out_dir, csv_dir, fig_dir):
         os.makedirs(d, exist_ok=True)
+    # Written by the tasks under distinct keys; returned sorted, so the
+    # map does not depend on which thread finished first.
     artifacts: dict[str, str] = {}
+    renders: list[tuple[str, Callable[[str], list[str]]]] = []
+
+    def figure(name: str, data_df: DataFrame, render, order_by: list[str] | None = None) -> None:
+        """Write the figure's data CSV always; queue its PNG+SVG render
+        for the calling thread (pyplot is not thread-safe)."""
+        data_path = write_csv_single(data_df, os.path.join(fig_dir, f"{name}.csv"), order_by)
+        artifacts[f"fig:{name}:data"] = data_path
+        renders.append((name, render))
 
     events = read_events(spark, events_dir).cache()
     cached = [events]
     try:
-        # -- stage 1: lineup inspection (reference pedri_inspect_lineups) --
+        # -- stage 1: lineup inspection (reference pedri_inspect_lineups);
+        # its aggregate reads every events partition, filling the cache --
         positions = lineup_position(events)
         pos_report = positions.groupBy(
             F.col("position_xi").alias("position")
@@ -185,164 +233,160 @@ def run_all(
         )
         pos_report.show(truncate=False)  # the reference's stdout report
 
-        # -- stage 2: profile build (reference pedri_profile) --
-        profile_rows = (
-            player_team(events)
-            .join(minutes_estimate(events), "match_id", "left")
-            .join(positions, "match_id", "left")
-            .select(
-                "match_id",
-                F.col("team").alias("team_name"),
-                pround(F.coalesce("minutes_est", F.lit(90.0)), 1).alias("minutes"),
-                F.col("position_xi").alias("position"),
+        def extended() -> None:
+            # -- stage 2: profile build (reference pedri_profile) --
+            profile_rows = (
+                player_team(events)
+                .join(minutes_estimate(events), "match_id", "left")
+                .join(positions, "match_id", "left")
+                .select(
+                    "match_id",
+                    F.col("team").alias("team_name"),
+                    pround(F.coalesce("minutes_est", F.lit(90.0)), 1).alias("minutes"),
+                    F.col("position_xi").alias("position"),
+                )
             )
-        )
-        profile_out = os.path.join(out_dir, "pedri_profile.json")
-        rows = [r.asDict() for r in profile_rows.orderBy("match_id").collect()]
-        with open(profile_out, "w") as f:
-            json.dump(rows, f, indent=1, default=str)
-        artifacts["profile_json"] = profile_out
+            profile_out = os.path.join(out_dir, "pedri_profile.json")
+            rows = [r.asDict() for r in profile_rows.orderBy("match_id").collect()]
+            with open(profile_out, "w") as f:
+                json.dump(rows, f, indent=1, default=str)
+            artifacts["profile_json"] = profile_out
 
-        # -- stage 3: match-id discovery (reference find_pedri_matches) --
-        from pedri_analysis_spark.functions.predicates import by_player_s
-
-        mids = events.filter(F.expr(by_player_s())).select("match_id")
-        artifacts["match_ids_txt"] = write_text_list(
-            mids, os.path.join(out_dir, "pedri_match_ids.txt"), "match_id"
-        )
-
-        # -- stage 4: basic analysis + CSVs (reference pedri_analysis) --
-        basic = per_match_basic(events).cache()
-        cached.append(basic)
-        # reference sort: PARSED multi-format date, then match id
-        # (core/pedri_analysis.py:621-634 — string order would put
-        # dd/MM/yyyy dates wrong)
-        parsed_date = F.coalesce(
-            F.expr("try_to_timestamp(match_date, 'yyyy-MM-dd')"),
-            F.expr("try_to_timestamp(match_date, 'yyyy-MM-dd HH:mm:ss')"),
-            F.expr("try_to_timestamp(match_date, 'dd/MM/yyyy')"),
-        )
-        basic_subset = basic.withColumn("_dt", parsed_date).select(
-            "_dt",
-            *[F.col(src).alias(dst) for src, dst in BASIC_CSV_COLS if src in basic.columns],
-        )
-        artifacts["basic_csv"] = write_csv_single(
-            basic_subset.orderBy("_dt", "match_id").drop("_dt"),
-            os.path.join(csv_dir, "pedri_match_stats.csv"),
-        )
-        artifacts["summary_csv"] = write_csv_single(
-            _summary_basic(basic), os.path.join(csv_dir, "pedri_summary.csv")
-        )
-
-        # -- stage 5: extended analysis + CSVs + JSON summary --
-        profile = read_profile(spark, profile_path or profile_out)
-        ext = per_match_extended(events, profile).cache()
-        cached.append(ext)
-        artifacts["extended_csv"] = write_csv_single(
-            ext, os.path.join(csv_dir, "pedri_match_stats_extended.csv"), ["match_id"]
-        )
-        # the compat file is the same frame in the same order
-        artifacts["compat_csv"] = shutil.copyfile(
-            artifacts["extended_csv"], os.path.join(csv_dir, "pedri_per_match_stats.csv")
-        )
-        ext_json = os.path.join(out_dir, "pedri_summary_extended.json")
-        with open(ext_json, "w") as f:
-            json.dump(_summary_extended_payload(ext), f, indent=2)
-        artifacts["summary_extended_json"] = ext_json
-
-        # -- stage 6: figures (data always; render when matplotlib) --
-        for metric in ("key_passes", "progressive_passes", "pass_pct"):
-            top = viz.top_matches_data(basic, metric, k=20)
-            _figure(
-                artifacts,
-                f"pedri_{metric}_per_match",
-                top,
-                fig_dir,
-                lambda base, t=top, m=metric: viz.render_bars(t, m, base),
+            # -- stage 5: extended analysis; its CSV fills the ext cache --
+            profile = read_profile(spark, profile_path or profile_out)
+            ext = per_match_extended(events, profile).cache()
+            cached.append(ext)
+            extended_csv = write_csv_single(
+                ext, os.path.join(csv_dir, "pedri_match_stats_extended.csv"), ["match_id"]
             )
-        for metric in ("pressures", "tackles", "interceptions"):
-            hist = viz.histogram_data(
-                basic.withColumn(f"{metric}_p90", _p90(metric)), f"{metric}_p90", 1.0
+            artifacts["extended_csv"] = extended_csv
+            # the compat file is the same frame in the same order
+            artifacts["compat_csv"] = shutil.copyfile(
+                extended_csv, os.path.join(csv_dir, "pedri_per_match_stats.csv")
             )
-            _figure(
-                artifacts,
-                f"pedri_{metric}_p90_hist",
-                hist,
-                fig_dir,
-                lambda base, h=hist: viz.render_histogram(h, base),
-                ["bin_start"],
+            submit(summary_extended_json, ext)
+            trend = viz.trend_per90_data(ext)
+            submit(
+                figure, "trend_kp_pp_per90", trend,
+                lambda base: viz.render_trend(trend, base), ["idx"],
             )
-        heat = viz.heatmap_data(events)
-        _figure(
-            artifacts,
-            "pedri_event_heatmap",
-            heat,
-            fig_dir,
-            lambda base, h=heat: viz.render_heatmap(h, base),
-            ["gx", "gy"],
-        )
-        radar = viz.radar_percentile_data(
-            basic,
-            ["key_passes", "progressive_passes", "shots", "xg",
-             "dribbles_successful", "pressures", "tackles", "interceptions"],
-        ).cache()
-        cached.append(radar)
-        radar_row = radar.collect()[0]
-        raw_metrics = [c for c in radar.columns if c.endswith("_raw")]
-        pct_metrics = [c for c in radar.columns if c.endswith("_pctile")]
-        _figure(
-            artifacts,
-            "pedri_radar_p90_raw",
-            radar.select(*raw_metrics),
-            fig_dir,
-            lambda base: viz.render_radar(radar_row, raw_metrics, base),
-        )
-        _figure(
-            artifacts,
-            "pedri_radar_p90_percentile",
-            radar.select(*pct_metrics),
-            fig_dir,
-            lambda base: viz.render_radar(radar_row, pct_metrics, base, rmax=100.0),
-        )
-        segments = viz.pass_map_data(events)
-        _figure(
-            artifacts,
-            "pedri_pass_map_all",
-            segments,
-            fig_dir,
-            lambda base, s=segments: viz.render_pass_map(s, base),
-            ["match_id", "x1", "y1"],
-        )
-        _figure(
-            artifacts,
-            "pedri_pass_map_progressive",
-            segments.filter(F.col("progressive")),
-            fig_dir,
-            lambda base, s=segments: viz.render_pass_map(s, base, progressive_only=True),
-            ["match_id", "x1", "y1"],
-        )
-        trend = viz.trend_per90_data(ext)
-        _figure(
-            artifacts,
-            "trend_kp_pp_per90",
-            trend,
-            fig_dir,
-            lambda base, t=trend: viz.render_trend(t, base),
-            ["idx"],
-        )
-        scatter = viz.scatter_pp_pc_data(ext)
-        _figure(
-            artifacts,
-            "scatter_pp_vs_pc",
-            scatter,
-            fig_dir,
-            lambda base, s=scatter: viz.render_scatter(s, base),
-            ["match_id"],
-        )
+            scatter = viz.scatter_pp_pc_data(ext)
+            submit(
+                figure, "scatter_pp_vs_pc", scatter,
+                lambda base: viz.render_scatter(scatter, base), ["match_id"],
+            )
+
+        def summary_extended_json(ext: DataFrame) -> None:
+            ext_json = os.path.join(out_dir, "pedri_summary_extended.json")
+            with open(ext_json, "w") as f:
+                json.dump(_summary_extended_payload(ext), f, indent=2)
+            artifacts["summary_extended_json"] = ext_json
+
+        def basic_analysis() -> None:
+            # -- stage 4: basic analysis (reference pedri_analysis); its
+            # CSV fills the basic cache --
+            basic = per_match_basic(events).cache()
+            cached.append(basic)
+            # reference sort: PARSED multi-format date, then match id
+            # (core/pedri_analysis.py:621-634 — string order would put
+            # dd/MM/yyyy dates wrong)
+            parsed_date = F.coalesce(
+                F.expr("try_to_timestamp(match_date, 'yyyy-MM-dd')"),
+                F.expr("try_to_timestamp(match_date, 'yyyy-MM-dd HH:mm:ss')"),
+                F.expr("try_to_timestamp(match_date, 'dd/MM/yyyy')"),
+            )
+            basic_subset = basic.withColumn("_dt", parsed_date).select(
+                "_dt",
+                *[F.col(src).alias(dst) for src, dst in BASIC_CSV_COLS if src in basic.columns],
+            )
+            artifacts["basic_csv"] = write_csv_single(
+                basic_subset.orderBy("_dt", "match_id").drop("_dt"),
+                os.path.join(csv_dir, "pedri_match_stats.csv"),
+            )
+            submit(summary_csv, basic)
+            # -- stage 6: figures (data always; render when matplotlib) --
+            for metric in ("key_passes", "progressive_passes", "pass_pct"):
+                top = viz.top_matches_data(basic, metric, k=20)
+                submit(
+                    figure, f"pedri_{metric}_per_match", top,
+                    lambda base, t=top, m=metric: viz.render_bars(t, m, base),
+                )
+            for metric in ("pressures", "tackles", "interceptions"):
+                hist = viz.histogram_data(
+                    basic.withColumn(f"{metric}_p90", _p90(metric)), f"{metric}_p90", 1.0
+                )
+                submit(
+                    figure, f"pedri_{metric}_p90_hist", hist,
+                    lambda base, h=hist: viz.render_histogram(h, base), ["bin_start"],
+                )
+            submit(radar_figures, basic)
+
+        def summary_csv(basic: DataFrame) -> None:
+            artifacts["summary_csv"] = write_csv_single(
+                _summary_basic(basic), os.path.join(csv_dir, "pedri_summary.csv")
+            )
+
+        def radar_figures(basic: DataFrame) -> None:
+            radar = viz.radar_percentile_data(
+                basic,
+                ["key_passes", "progressive_passes", "shots", "xg",
+                 "dribbles_successful", "pressures", "tackles", "interceptions"],
+            ).cache()
+            cached.append(radar)
+            radar_row = radar.collect()[0]
+            raw_metrics = [c for c in radar.columns if c.endswith("_raw")]
+            pct_metrics = [c for c in radar.columns if c.endswith("_pctile")]
+            submit(
+                figure, "pedri_radar_p90_raw", radar.select(*raw_metrics),
+                lambda base: viz.render_radar(radar_row, raw_metrics, base),
+            )
+            submit(
+                figure, "pedri_radar_p90_percentile", radar.select(*pct_metrics),
+                lambda base: viz.render_radar(radar_row, pct_metrics, base, rmax=100.0),
+            )
+
+        def match_ids() -> None:
+            # -- stage 3: match-id discovery (reference find_pedri_matches) --
+            from pedri_analysis_spark.functions.predicates import by_player_s
+
+            mids = events.filter(F.expr(by_player_s())).select("match_id")
+            artifacts["match_ids_txt"] = write_text_list(
+                mids, os.path.join(out_dir, "pedri_match_ids.txt"), "match_id"
+            )
+
+        def heatmap() -> None:
+            heat = viz.heatmap_data(events)
+            figure(
+                "pedri_event_heatmap", heat,
+                lambda base: viz.render_heatmap(heat, base), ["gx", "gy"],
+            )
+
+        def pass_map(progressive: bool) -> None:
+            segments = viz.pass_map_data(events)
+            figure(
+                f"pedri_pass_map_{'progressive' if progressive else 'all'}",
+                segments.filter(F.col("progressive")) if progressive else segments,
+                lambda base: viz.render_pass_map(segments, base, progressive_only=progressive),
+                ["match_id", "x1", "y1"],
+            )
+
+        # The longest chain goes first: the pool starts tasks in order.
+        with _fan_out(spark) as submit:
+            submit(extended)
+            submit(basic_analysis)
+            submit(match_ids)
+            submit(heatmap)
+            submit(pass_map, False)
+            submit(pass_map, True)
+        if _have_matplotlib():
+            for name, render in sorted(renders):
+                for p in render(os.path.join(fig_dir, name)):
+                    artifacts[f"fig:{name}:{os.path.splitext(p)[1][1:]}"] = p
     finally:
+        # only after every thread has joined: no sink still reads a cache
         for df in cached:
             df.unpersist()
-    return artifacts
+    return dict(sorted(artifacts.items()))
 
 
 def main() -> None:

@@ -168,6 +168,53 @@ def test_run_bench_isolates_failures(spark):
     assert timings["ok"] > 0
 
 
+def test_run_bench_keeps_query_output_off_stdout(spark, capsys):
+    """A query that prints (run_all's lineup report does) leaves the
+    bench's stdout empty, so its one JSON line stays the whole stdout."""
+    from bench import run_bench
+
+    def prints(s, sf):
+        df = s.range(3)
+        df.show()
+        print("query chatter")
+        return df
+
+    timings, failures = run_bench(spark, {"prints": prints}, "unused", 1)
+    out, err = capsys.readouterr()
+    assert set(timings) == {"prints"} and not failures
+    assert out == ""
+    assert "query chatter" in err
+
+
+def test_scaling_check_discards_a_first_sweep(tmp_path, monkeypatch):
+    """scaling_check runs one discarded runs=1 sweep at the first SF before
+    any timed sweep, and records only the timed sweeps."""
+    import argparse
+    import json
+
+    import bench
+    from tools import scaling_check
+
+    names = ["bucketed_join_segment_revenue", "cosine_topk_bruteforce"]
+    calls = []
+
+    def fake_run_bench(spark, queries, sf_dir, runs):
+        calls.append((sf_dir, runs))
+        cold = len(calls) == 1
+        return {n: 9.0 if cold else 1.0 for n in queries}, {}
+
+    monkeypatch.setattr(bench, "run_bench", fake_run_bench)
+    monkeypatch.setattr(bench, "warm", lambda spark, sf_dir: None)
+    out = tmp_path / "scaling.json"
+    args = argparse.Namespace(
+        sf_dirs=["x/sf0.001", "x/sf0.01"], runs=2, only=",".join(names), out=str(out)
+    )
+    assert scaling_check._check(None, args) == 0
+    assert calls == [("x/sf0.001", 1), ("x/sf0.001", 2), ("x/sf0.01", 2)]
+    timings = json.loads(out.read_text())["timings"]
+    assert timings == {"sf0.001": dict.fromkeys(names, 1.0), "sf0.01": dict.fromkeys(names, 1.0)}
+
+
 def test_ab_bench_isolates_failures_and_releases_cache(spark):
     """ab_bench's per-query loop records a broken query and goes on, and
     each run starts with nothing persisted, so best-of-N never replays an

@@ -101,16 +101,88 @@ def test_profile_json_roundtrip(spark, artifacts):
     assert rows[1001].minutes > 0
 
 
+def _persistent(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
 def test_run_all_releases_its_caches(spark, tmp_path):
     """Every frame run_all caches is unpersisted before it returns."""
     from pedri_analysis_spark.run_all import run_all
 
-    def persistent():
-        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
-
-    before = persistent()
+    before = _persistent(spark)
     run_all(spark, os.path.join(FIXTURES, "events"), out_dir=str(tmp_path))
-    assert persistent() == before
+    assert _persistent(spark) == before
+
+
+def test_run_all_jobs_stay_in_callers_job_group(spark, tmp_path):
+    """Every job run_all launches, from whichever pool thread, carries the
+    caller's job group, and every pool thread is joined on return."""
+    import threading
+
+    from pedri_analysis_spark.run_all import run_all
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    threads = threading.active_count()
+    sc.setJobGroup("run-all-group-test", "run_all job group test")
+    try:
+        run_all(spark, os.path.join(FIXTURES, "events"), out_dir=str(tmp_path))
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    bus.waitUntilEmpty()
+    assert threading.active_count() == threads
+    assert len(tracker.getJobIdsForGroup("run-all-group-test")) > 0
+    # the status store may have evicted old jobs, but it holds no new ungrouped one
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+
+
+def test_run_all_reraises_a_failed_branch(spark, tmp_path, monkeypatch):
+    """An exception in one pool branch reaches the caller, after every
+    thread has joined and every cache has been released."""
+    import threading
+
+    from pedri_analysis_spark import viz
+    from pedri_analysis_spark.run_all import run_all
+
+    def broken(events, *args, **kwargs):
+        raise RuntimeError("heatmap branch failed")
+
+    monkeypatch.setattr(viz, "heatmap_data", broken)
+    before, threads = _persistent(spark), threading.active_count()
+    with pytest.raises(RuntimeError, match="heatmap branch failed"):
+        run_all(spark, os.path.join(FIXTURES, "events"), out_dir=str(tmp_path))
+    assert _persistent(spark) == before
+    assert threading.active_count() == threads
+
+
+def test_run_all_is_deterministic(spark, tmp_path):
+    """Two passes in one session write the same bytes to every artifact and
+    return the same map in the same order, whatever order the threads
+    finished in. The pool (8 wide) outnumbers the cores, and a short switch
+    interval makes the threads interleave often, so a lost update to the
+    shared artifact map would show as a missing key."""
+    import sys
+
+    from pedri_analysis_spark.run_all import run_all
+
+    events = os.path.join(FIXTURES, "events")
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        first = run_all(spark, events, out_dir=str(tmp_path / "a"))
+        second = run_all(spark, events, out_dir=str(tmp_path / "b"))
+    finally:
+        sys.setswitchinterval(interval)
+    assert list(first) == list(second)
+    rels = [os.path.relpath(p, tmp_path / "a") for p in first.values()]
+    assert rels == [os.path.relpath(p, tmp_path / "b") for p in second.values()]
+    assert set(EXPECTED_FILES) <= set(rels)
+    for rel in EXPECTED_FILES:
+        assert (tmp_path / "a" / rel).read_bytes() == (tmp_path / "b" / rel).read_bytes(), rel
 
 
 def test_bounded_sinks_match_fallback_bytes(spark, tmp_path, monkeypatch):
