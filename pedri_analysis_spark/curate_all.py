@@ -31,6 +31,7 @@ import os
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from pedri_analysis_spark.cache import materialize, released
 from pedri_analysis_spark.functions import textexpr as tx
 from pedri_analysis_spark.operators import dedup as dd
 from pedri_analysis_spark.sources.sinks import write_csv_single, write_jsonl_sharded
@@ -76,68 +77,68 @@ def curate_all(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
     for sub in ("health", "curation", "dedup", "packing", "tokens", "export"):
         os.makedirs(os.path.join(out_dir, sub), exist_ok=True)
 
-    # 1. ingestion gate over the relational side (fail-fast signal).
-    # 5 rows — collect once, reuse for both the CSV and the manifest.
-    health = REL_EXT["table_health_report"](spark, sf_dir)
-    health_rows = health.collect()
-    write_csv_single(
-        health, os.path.join(out_dir, "health", "table_health.csv"), ["check_name"]
-    )
+    with released():
+        # 1. ingestion gate over the relational side (fail-fast signal).
+        # 5 rows — collect once, reuse for both the CSV and the manifest.
+        health = REL_EXT["table_health_report"](spark, sf_dir)
+        health_rows = health.collect()
+        write_csv_single(
+            health, os.path.join(out_dir, "health", "table_health.csv"), ["check_name"]
+        )
 
-    # 2. per-reason curation accounting (planted-dup corpus)
-    report = TEXT_Q["corpus_curation_report"](spark, sf_dir)
-    write_csv_single(
-        report,
-        os.path.join(out_dir, "curation", "curation_report.csv"),
-        ["lang", "reason"],
-    )
+        # 2. per-reason curation accounting (planted-dup corpus)
+        report = TEXT_Q["corpus_curation_report"](spark, sf_dir)
+        write_csv_single(
+            report,
+            os.path.join(out_dir, "curation", "curation_report.csv"),
+            ["lang", "reason"],
+        )
 
-    # 3. near-dup pairs over the kept corpus. `kept` feeds the pair scan,
-    # the anti-join, both counts, and the export — persist so the
-    # md5-rank window + quality projection run once, not four times.
-    kept = _kept_documents(spark, sf_dir).persist()
-    # constants passed EXPLICITLY from plans.dedup_queries: the manifest
-    # oracle (plans.pipeline_queries) embeds those constants via
-    # minhash_pair_ctes, so relying on dedup.py keyword defaults
-    # coincidentally matching would let a one-sided retune silently
-    # desynchronize the artifact from its oracle
-    from pedri_analysis_spark.plans import dedup_queries as dq
+        # 3. near-dup pairs over the kept corpus. `kept` feeds the pair scan,
+        # the anti-join, both counts, and the export — materialize so the
+        # md5-rank window + quality projection run once, not four times.
+        kept, n_kept = materialize(_kept_documents(spark, sf_dir))
+        # constants passed EXPLICITLY from plans.dedup_queries: the manifest
+        # oracle (plans.pipeline_queries) embeds those constants via
+        # minhash_pair_ctes, so relying on dedup.py keyword defaults
+        # coincidentally matching would let a one-sided retune silently
+        # desynchronize the artifact from its oracle
+        from pedri_analysis_spark.plans import dedup_queries as dq
 
-    pairs = dd.minhash_near_dups(
-        kept,
-        n_hashes=dq.N_HASHES,
-        bands=dq.BANDS,
-        shingle_k=dq.SHINGLE_K,
-        threshold=dq.JACCARD_T,
-        max_bucket=dq.MAX_BUCKET,
-    )
-    write_csv_single(
-        pairs, os.path.join(out_dir, "dedup", "near_dup_pairs.csv"), ["a", "b"]
-    )
-    # drop the higher-keyed side of each verified pair (min-key survives)
-    losers = pairs.select(F.col("b").alias("doc_id")).distinct()
-    final = kept.join(losers, "doc_id", "left_anti")
+        pairs = dd.minhash_near_dups(
+            kept,
+            n_hashes=dq.N_HASHES,
+            bands=dq.BANDS,
+            shingle_k=dq.SHINGLE_K,
+            threshold=dq.JACCARD_T,
+            max_bucket=dq.MAX_BUCKET,
+        )
+        write_csv_single(
+            pairs, os.path.join(out_dir, "dedup", "near_dup_pairs.csv"), ["a", "b"]
+        )
+        # drop the higher-keyed side of each verified pair (min-key survives)
+        losers = pairs.select(F.col("b").alias("doc_id")).distinct()
+        final = kept.join(losers, "doc_id", "left_anti")
 
-    # 4. token budgets + packing efficiency
-    write_csv_single(
-        TEXT_Q["bpe_token_stats"](spark, sf_dir),
-        os.path.join(out_dir, "tokens", "bpe_token_stats.csv"),
-        ["lang"],
-    )
-    write_csv_single(
-        q_sequence_packing(spark, sf_dir),
-        os.path.join(out_dir, "packing", "packing_stats.csv"),
-        ["shard"],
-    )
+        # 4. token budgets + packing efficiency
+        write_csv_single(
+            TEXT_Q["bpe_token_stats"](spark, sf_dir),
+            os.path.join(out_dir, "tokens", "bpe_token_stats.csv"),
+            ["lang"],
+        )
+        write_csv_single(
+            q_sequence_packing(spark, sf_dir),
+            os.path.join(out_dir, "packing", "packing_stats.csv"),
+            ["shard"],
+        )
 
-    # 5. JSONL export of the final corpus
-    export_dir = write_jsonl_sharded(
-        final.repartition(4), os.path.join(out_dir, "export")
-    )
+        # 5. JSONL export of the final corpus
+        export_dir = write_jsonl_sharded(
+            final.repartition(4), os.path.join(out_dir, "export")
+        )
 
-    n_raw = load_table(spark, "documents", sf_dir).count()
-    n_kept = kept.count()
-    n_final = final.count()
+        n_raw = load_table(spark, "documents", sf_dir).count()
+        n_final = final.count()
     manifest = {
         "n_raw_docs": n_raw,
         "n_after_curation": n_kept,
@@ -148,7 +149,6 @@ def curate_all(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
     }
     with open(os.path.join(out_dir, "manifest.json"), "w") as f:
         json.dump(manifest, f, indent=2, sort_keys=True)
-    kept.unpersist(False)
     return manifest
 
 

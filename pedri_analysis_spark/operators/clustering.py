@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pedri_analysis_spark.cache import released
+
 __all__ = ["kmeans_fit", "kmeans_assign"]
 
 _DEC = "decimal(27,10)"
@@ -138,16 +140,15 @@ def kmeans_fit(
         .collect()
     )
     centroids = [[float(x) for x in r[vec_col]] for r in init]
-    emb = embeddings.persist()
-    try:
+    # Each iteration materializes via _update's collect, so the cache
+    # has served its purpose; release executor memory before handing
+    # the (lazy) final assignment back.  The returned plan binds to
+    # the caller's original frame, so it recomputes from lineage —
+    # one scan — rather than pinning cache for the library's caller.
+    with released() as held:
+        emb = embeddings.persist()
+        held.append(emb)
         for _ in range(iters):
             assigned = kmeans_assign(emb, centroids, vec_col)
             centroids = _update(assigned, centroids, vec_col)
-    finally:
-        # Each iteration materializes via _update's collect, so the cache
-        # has served its purpose; release executor memory before handing
-        # the (lazy) final assignment back.  The returned plan binds to
-        # the caller's original frame, so it recomputes from lineage —
-        # one scan — rather than pinning cache for the library's caller.
-        emb.unpersist()
     return centroids, kmeans_assign(embeddings, centroids, vec_col)

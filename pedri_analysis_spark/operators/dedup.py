@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from pedri_analysis_spark.cache import materialize
 from pedri_analysis_spark.functions import textexpr as tx
 
 
@@ -193,17 +194,14 @@ def minhash_near_dups(
     (a, b, jaccard) with jaccard ≥ threshold.  ``max_bucket`` forwards
     to the LSH bucket cap so callers that bake the cap into an oracle
     (plans/dedup_queries.MAX_BUCKET) can keep both sides in lockstep."""
-    # persist: the signature table feeds both the bucket self-join and the
-    # Jaccard verify — without it the tokenize/shingle/hash chain runs
+    # materialize: the signature table feeds both the bucket self-join and
+    # the Jaccard verify — without it the tokenize/shingle/hash chain runs
     # twice. Narrowed to (key, sh, mh*) first: the raw text column is dead
     # weight in the cache.
     sigs = minhash_signatures(spread(df), text_col, n_hashes, shingle_k).select(
         key_col, "sh", *[f"mh{i}" for i in range(n_hashes)]
-    ).persist()
-    # materialize BEFORE the multi-consumer job: two scans of a lazily-
-    # persisted frame inside one job race the cache fill and both
-    # recompute the signature kernel (the ann_lsh double-execution bug)
-    sigs.count()
+    )
+    sigs, _ = materialize(sigs)
     pairs = lsh_candidate_pairs(sigs, key_col, n_hashes, bands, max_bucket)
     return jaccard_verify(pairs, sigs.select(key_col, "sh"), key_col, threshold)
 
@@ -231,12 +229,10 @@ def simhash_near_dups(
     Scale: at 100 TB block on bit-chunks of the simhash itself instead of
     a domain column — that variant is ``simhash_prefix_near_dups`` below
     (pigeonhole over max_hamming+1 chunks, no block column needed)."""
-    hashed = (
-        with_simhash(spread(df), text_col)
-        .select(F.col(key_col), F.col(block_col), "simhash")
-        .persist()  # feeds both sides of the self-join
+    hashed = with_simhash(spread(df), text_col).select(
+        F.col(key_col), F.col(block_col), "simhash"
     )
-    hashed.count()  # materialize before the self-join (cache-race guard)
+    hashed, _ = materialize(hashed)  # feeds both sides of the self-join
     a = hashed.select(
         F.col(key_col).alias("a"), F.col(block_col).alias("blk"), F.col("simhash").alias("sh_a")
     )
@@ -278,12 +274,8 @@ def simhash_prefix_near_dups(
     widths = [base + (1 if i < extra else 0) for i in range(n_chunks)]
     offsets = [sum(widths[:i]) for i in range(n_chunks)]
 
-    hashed = (
-        with_simhash(spread(df), text_col)
-        .select(F.col(key_col), "simhash")
-        .persist()  # feeds both sides of the chunk self-join
-    )
-    hashed.count()  # materialize before the self-join (cache-race guard)
+    hashed = with_simhash(spread(df), text_col).select(F.col(key_col), "simhash")
+    hashed, _ = materialize(hashed)  # feeds both sides of the chunk self-join
     chunk_vals = F.array(
         *[
             F.shiftright("simhash", off).bitwiseAND(F.lit((1 << w) - 1))
@@ -357,13 +349,13 @@ def incremental_minhash_dedup(
     ).unionByName(
         delta.select(F.lit("d").alias("_tag"), F.col(key_col), F.col(text_col))
     )
-    # persist: signatures feed the bucket join AND the Jaccard verify
+    # materialize: signatures feed the bucket join AND the Jaccard verify
     # (same rationale as minhash_near_dups; LRU eviction reclaims it);
     # narrowed — the cached frame never needs the raw text
     sigs = minhash_signatures(spread(tagged), text_col, n_hashes, shingle_k).select(
         "_tag", key_col, "sh", *[f"mh{i}" for i in range(n_hashes)]
-    ).persist()
-    sigs.count()  # materialize before multi-consumer scans (see minhash_near_dups)
+    )
+    sigs, _ = materialize(sigs)
     sig_cols = [f"mh{i}" for i in range(n_hashes)]
     band_structs = F.array(
         *[

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pedri_analysis_spark.cache import materialize, released
 from pedri_analysis_spark.functions import textexpr as tx
 from pedri_analysis_spark.operators import chunking as chk
 from pedri_analysis_spark.operators import dedup as dd, spread
@@ -512,37 +513,33 @@ def _components_propagate(
         .repartition(p, "node")
         .localCheckpoint()
     )
-    # The iteration's shuffles must also run at graph-parallelism, not the
-    # session default (32 near-empty shuffle partitions per join/agg per
-    # iteration is pure scheduling overhead). Scoped + restored.
-    sess_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(p))
+    # The per-node rollup shuffles at graph-parallelism p, not the session
+    # default (32 near-empty shuffle partitions per iteration is pure
+    # scheduling overhead); the joins' exchanges run at the session width
+    # and AQE coalesces them. The session conf is never set here: other
+    # threads share the session.
     converged = False
-    try:
-        prev_sum = labels.agg(F.sum("lab")).collect()[0][0]
-        for _ in range(max_iter):
-            neigh = (
-                edges.join(labels, edges.src == labels.node)
-                .groupBy(F.col("dst").alias("node"))
-                .agg(F.min("lab").alias("nmin"))
+    prev_sum = labels.agg(F.sum("lab")).collect()[0][0]
+    for _ in range(max_iter):
+        neigh = (
+            edges.join(labels, edges.src == labels.node)
+            .repartition(p, F.col("dst"))
+            .groupBy(F.col("dst").alias("node"))
+            .agg(F.min("lab").alias("nmin"))
+        )
+        labels = (
+            labels.join(neigh, "node", "left")
+            .select(
+                "node",
+                F.least(F.col("lab"), F.coalesce("nmin", F.col("lab"))).alias("lab"),
             )
-            labels = (
-                labels.join(neigh, "node", "left")
-                .select(
-                    "node",
-                    F.least(
-                        F.col("lab"), F.coalesce("nmin", F.col("lab"))
-                    ).alias("lab"),
-                )
-                .localCheckpoint()
-            )
-            cur_sum = labels.agg(F.sum("lab")).collect()[0][0]
-            if cur_sum == prev_sum:
-                converged = True
-                break
-            prev_sum = cur_sum
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", sess_parts)
+            .localCheckpoint()
+        )
+        cur_sum = labels.agg(F.sum("lab")).collect()[0][0]
+        if cur_sum == prev_sum:
+            converged = True
+            break
+        prev_sum = cur_sum
     if not converged:
         raise RuntimeError(
             f"connected components did not converge in {max_iter} rounds "
@@ -764,8 +761,7 @@ def trade_graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("e")
     ).select("e.src", "e.dst")
-    edges = edges.repartition("src").persist()
-    edges.count()
+    edges, _ = materialize(edges.repartition("src"))
     return edges
 
 
@@ -794,8 +790,7 @@ def q_pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     # edges and deg are static across all five iterations; without a
     # materialized persist each iteration's join re-runs the
     # lineitem x orders pair-build (5x the dominant cost — measured
-    # 5.97s -> ~1s at sf0.1).  Same cache-fill-race discipline as the
-    # LSH self-join: materialize BEFORE fan-out.  Pre-partitioned by
+    # 5.97s -> ~1s at sf0.1).  Pre-partitioned by
     # src (r10, ADVICE fix): without that one-time exchange the
     # shuffle-join fallback (when ranks outgrow AQE's broadcast
     # threshold) would re-shuffle the full edge list EVERY iteration;
@@ -907,11 +902,10 @@ def q_dedup_cascade_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # counts are DRIVER-side (four bounded longs — the job metrics a
     # pipeline reports anyway); assembling them as lazy 1-row crossJoins
     # instead would re-print every cached subtree into one giant plan
-    # for zero execution benefit.
-    s1 = dd.exact_dedup(d, "text", "doc_id").persist()
-    s2 = None
-    try:
-        n_exact = s1.count()
+    # for zero execution benefit.  All are taken inside the scope, which
+    # releases the stage caches and the stages' own signature caches.
+    with released():
+        s1, n_exact = materialize(dd.exact_dedup(d, "text", "doc_id"))
         mh_pairs = dd.minhash_near_dups(
             s1,
             n_hashes=N_HASHES,
@@ -920,12 +914,13 @@ def q_dedup_cascade_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             threshold=JACCARD_T,
             max_bucket=MAX_BUCKET,
         )
-        s2 = s1.join(
-            mh_pairs.select(F.col("b").alias("doc_id")).distinct(),
-            on="doc_id",
-            how="left_anti",
-        ).persist()
-        n_minhash = s2.count()
+        s2, n_minhash = materialize(
+            s1.join(
+                mh_pairs.select(F.col("b").alias("doc_id")).distinct(),
+                on="doc_id",
+                how="left_anti",
+            )
+        )
         sh_pairs = dd.simhash_prefix_near_dups(s2, max_hamming=HAMMING_T)
         s3 = s2.join(
             sh_pairs.select(F.col("b").alias("doc_id")).distinct(),
@@ -934,12 +929,6 @@ def q_dedup_cascade_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         n_simhash = s3.count()
         n_input = d.count()
-    finally:
-        # every count is materialized by here — release the stage caches
-        # so a catalog-wide run doesn't accumulate executor storage
-        s1.unpersist()
-        if s2 is not None:
-            s2.unpersist()
     return spark.createDataFrame(
         [(n_input, n_exact, n_minhash, n_simhash)],
         "n_input long, n_after_exact long, n_after_minhash long, n_after_simhash long",
@@ -999,15 +988,14 @@ def q_minhash_estimate_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the double itself is a single division of exact ints — identical
     both engines — but summing doubles would be fold-order-dependent)."""
     d = load_table(spark, "documents", sf_dir).select("doc_id", "text")
-    # persist WITHOUT unpersist (the minhash_near_dups convention): the
-    # returned frame is lazy and re-reads sigs from three consumers at
-    # execution time; the harness clears the cache between queries.
-    sigs = (
-        dd.minhash_signatures(spread(d), "text", N_HASHES, SHINGLE_K)
-        .select("doc_id", "sh", *[f"mh{i}" for i in range(N_HASHES)])
-        .persist()
+    # no released() scope (the minhash_near_dups convention): the returned
+    # frame is lazy and re-reads sigs from three consumers at execution
+    # time; the harness clears the cache between queries.
+    sigs, _ = materialize(
+        dd.minhash_signatures(spread(d), "text", N_HASHES, SHINGLE_K).select(
+            "doc_id", "sh", *[f"mh{i}" for i in range(N_HASHES)]
+        )
     )
-    sigs.count()  # materialize before the multi-consumer job
     pairs = dd.lsh_candidate_pairs(sigs, "doc_id", N_HASHES, BANDS, MAX_BUCKET)
     sa = sigs.select(
         F.col("doc_id").alias("a"),

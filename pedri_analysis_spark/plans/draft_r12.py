@@ -51,6 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from pedri_analysis_spark.cache import materialize
 from pedri_analysis_spark.functions import textexpr as tx
 from pedri_analysis_spark.operators import chunking as chk
 from pedri_analysis_spark.operators import similarity as sim
@@ -214,6 +215,12 @@ def q_importance_resampling_select(spark: SparkSession, sf_dir: str) -> DataFram
     d = load_table(spark, "documents", sf_dir).select(
         "doc_id", "lang", "source", F.expr(tx.tokens(tx.SPARK, "text")).alias("t")
     )
+    # Materialize once (r15): the feature stream fed three consumers
+    # (target counts, rest counts, the score join), each re-running the
+    # tokenize + bigram + hash kernel; and the two per-lang bucket
+    # counts collapse into ONE conditional aggregate over the same pass
+    # (identical values — a bucket row exists iff any occurrence).
+    # A/B at sf0.1 warm best-of-2: 6.3 s -> 2.8 s.
     fb = d.select(
         "doc_id",
         "lang",
@@ -222,14 +229,8 @@ def q_importance_resampling_select(spark: SparkSession, sf_dir: str) -> DataFram
         "doc_id",
         "lang",
         (F.expr(tx.seeded_hash64(tx.SPARK, "bg", "dsir")) % DSIR_BUCKETS).alias("b"),
-    ).persist()
-    # Materialize once (r15): the feature stream fed three consumers
-    # (target counts, rest counts, the score join), each re-running the
-    # tokenize + bigram + hash kernel; and the two per-lang bucket
-    # counts collapse into ONE conditional aggregate over the same pass
-    # (identical values — a bucket row exists iff any occurrence).
-    # A/B at sf0.1 warm best-of-2: 6.3 s -> 2.8 s.
-    fb.count()
+    )
+    fb, _ = materialize(fb)
     both = fb.groupBy("b").agg(
         F.count_if(F.col("lang") == DSIR_TARGET_LANG).cast("bigint").alias("ct"),
         F.count_if(F.col("lang") != DSIR_TARGET_LANG).cast("bigint").alias("co"),
@@ -1311,9 +1312,8 @@ def q_link_prediction_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     (jaccard_ppm DESC, a, b)."""
     from pedri_analysis_spark.plans.resolution_queries import _copurchase_edges
 
-    # r15: materialize the edge persist BEFORE fan-out (the ann_lsh
-    # lazy-persist lesson — three consumers in one job race the cache
-    # fill and each recomputes the co-purchase aggregate), and generate
+    # r15: materialize the edges BEFORE the three-consumer fan-out (each
+    # consumer recomputed the co-purchase aggregate), and generate
     # candidate pairs from ONE sorted neighbor set per intermediary
     # (collect_set + in-JVM pair explode, the _copurchase_edges pattern)
     # instead of the adj x adj self-join: the x/y join legs' two
@@ -1321,8 +1321,7 @@ def q_link_prediction_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per intermediary is the same C(deg, 2), deg <= LP_DEG_CAP by the
     # size() gate (identical to the old mid semi-join: y-rows whose v
     # fails the cap never matched an x-row).
-    e = _copurchase_edges(spark, sf_dir).select("pa", "pb").persist()
-    e.count()
+    e, _ = materialize(_copurchase_edges(spark, sf_dir).select("pa", "pb"))
     adj = e.select(
         F.explode(
             F.expr(
@@ -1794,14 +1793,12 @@ def q_split_conformal_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, "customer", sf_dir).select(
         F.col("c_custkey").alias("o_custkey"), F.col("c_mktsegment").alias("segment")
     )
-    base = o.join(c, "o_custkey").select("segment", "cents", "fold").persist()
     # r16: base feeds THREE consumers (model fit, calibration scores, the
     # eval pass) — unpersisted, each re-ran the orders scan + customer
     # join. The projection is narrow (segment, cents, fold) and every
     # downstream join is an EXPLICIT broadcast hint, so the fellegi
-    # stats-loss rejection does not apply; eager count avoids the
-    # lazy-persist cache race (ann_lsh lesson).
-    base.count()
+    # stats-loss rejection does not apply.
+    base, _ = materialize(o.join(c, "o_custkey").select("segment", "cents", "fold"))
     model = (
         base.filter(F.col("fold") == 0)
         .groupBy("segment")

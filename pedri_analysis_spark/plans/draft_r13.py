@@ -113,6 +113,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from pedri_analysis_spark.cache import materialize
 from pedri_analysis_spark.functions import textexpr as tx
 from pedri_analysis_spark.operators import similarity as sim
 from pedri_analysis_spark.operators import spread
@@ -680,8 +681,7 @@ def q_hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("l_suppkey").alias("s"), F.col("o_custkey").alias("c"))
         .distinct()
     )
-    edges = edges.persist()
-    edges.count()
+    edges, _ = materialize(edges)
 
     def norm(df: DataFrame, key: str) -> DataFrame:
         # the input is read twice (max + main pass) — callers persist it
@@ -2248,12 +2248,10 @@ def q_containment_near_dups(
     if max_bucket is None:
         max_bucket = MAX_BUCKET
     docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
-    sigs = (
-        minhash_signatures(spread(docs), "text", N_HASHES, SHINGLE_K)
-        .select("doc_id", "sh", *[f"mh{i}" for i in range(N_HASHES)])
-        .persist()
+    sigs = minhash_signatures(spread(docs), "text", N_HASHES, SHINGLE_K).select(
+        "doc_id", "sh", *[f"mh{i}" for i in range(N_HASHES)]
     )
-    sigs.count()  # materialize before fan-out (cache-race discipline)
+    sigs, _ = materialize(sigs)
     pairs = lsh_candidate_pairs(sigs, "doc_id", N_HASHES, BANDS, max_bucket)
     left = sigs.select(F.col("doc_id").alias("a"), F.col("sh").alias("sh_a"))
     right = sigs.select(F.col("doc_id").alias("b"), F.col("sh").alias("sh_b"))
@@ -2381,10 +2379,8 @@ def q_mrr_bm25_phrases(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = spread(docs).select(
         "doc_id", F.expr(tx.tokens(tx.SPARK, "text")).alias("toks")
     )
-    t2 = toks.select(
-        "doc_id", "toks", F.size("toks").cast("bigint").alias("dl")
-    ).persist()
-    t2.count()  # one tokenize pass feeds stats + 4 scoring legs
+    t2 = toks.select("doc_id", "toks", F.size("toks").cast("bigint").alias("dl"))
+    t2, _ = materialize(t2)  # one tokenize pass feeds stats + 4 scoring legs
     df_aggs = []
     for i, ph in enumerate(MRR_PHRASES):
         t1, tb = ph.split(" ")
@@ -2436,8 +2432,7 @@ def q_mrr_bm25_phrases(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("x.gold").alias("gold"),
         )
     )
-    scored = scored.persist()
-    scored.count()  # feeds both the argmax and the rank-count pass
+    scored, _ = materialize(scored)  # feeds both the argmax and the rank-count pass
     best = (
         scored.filter("gold")
         .groupBy("phrase")

@@ -69,6 +69,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from pedri_analysis_spark.cache import materialize, released
 from pedri_analysis_spark.functions import textexpr as tx
 from pedri_analysis_spark.operators import spread
 from pedri_analysis_spark.plans.relational import QueryFn, factor, money
@@ -1213,10 +1214,8 @@ def q_map_bm25_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = load_table(spark, "documents", sf_dir).select(
         "doc_id", F.expr(tx.tokens(tx.SPARK, "text")).alias("toks")
     )
-    t2 = toks.select(
-        "doc_id", "toks", F.size("toks").cast("bigint").alias("dl")
-    ).persist()
-    t2.count()
+    t2 = toks.select("doc_id", "toks", F.size("toks").cast("bigint").alias("dl"))
+    t2, _ = materialize(t2)
     df_aggs = []
     for i, ph in enumerate(MRR_PHRASES):
         t1, tb = ph.split(" ")
@@ -1253,8 +1252,7 @@ def q_map_bm25_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = legs[0]
     for leg in legs[1:]:
         scored = scored.unionAll(leg)
-    scored = scored.persist()
-    scored.count()
+    scored, _ = materialize(scored)
     ng = scored.groupBy("phrase").agg(
         F.sum(F.when(F.col("gold"), 1).otherwise(0)).cast("bigint").alias("n_gold")
     )
@@ -1394,14 +1392,14 @@ def q_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Substrate build shared + optimized r15: trade_graph_edges.
     edges = trade_graph_edges(spark, sf_dir)
-    deg = edges.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("deg")
-    ).persist()
     # Materialize (r15): deg and the restart table below are referenced
     # in every one of the {PPR_ITERS} iterations; filling the cache
     # before the fan-out keeps each reference a cache hit instead of a
     # re-derivation inside the final multi-stage job.
-    deg.count()
+    deg = edges.groupBy(F.col("src").alias("node")).agg(
+        F.count(F.lit(1)).cast("bigint").alias("deg")
+    )
+    deg, _ = materialize(deg)
     sup = load_table(spark, "supplier", sf_dir).select("s_suppkey", "s_nationkey")
     seed_nat = sup.orderBy(F.asc("s_suppkey")).limit(1).select(
         F.col("s_nationkey").alias("z_nationkey")
@@ -1429,9 +1427,8 @@ def q_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.lit(0.0))
             .alias("restart"),
         )
-        .persist()
     )
-    rs.count()  # see deg above — referenced every iteration
+    rs, _ = materialize(rs)  # see deg above — referenced every iteration
     ranks = rs.select("node", F.col("restart").alias("rank"))
     for _ in range(PPR_ITERS):
         rank_deg = ranks.join(deg, "node").withColumnRenamed("node", "src")
@@ -1557,52 +1554,47 @@ def q_k_truss_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     round's CTEs for the same linearization."""
     from pedri_analysis_spark.plans.resolution_queries import _copurchase_edges
 
-    e = _copurchase_edges(spark, sf_dir).select("pa", "pb").persist()
-    counts = [e.count()]
-    out_rows = []
-    gens = [e]
-    for i in range(KTRUSS_ITERS):
-        cur = gens[-1]
-        e1 = cur.select(F.col("pa").alias("a"), F.col("pb").alias("b"))
-        e2 = cur.select(F.col("pa").alias("b2"), F.col("pb").alias("c"))
-        e3 = cur.select(F.col("pa").alias("a3"), F.col("pb").alias("c3"))
-        tri = (
-            e1.join(e2, F.col("b2") == F.col("b"))
-            .join(e3, (F.col("a3") == F.col("a")) & (F.col("c3") == F.col("c")))
-            .select("a", "b", "c")
-        )
-        # ONE explode leg instead of a 3-way unionAll of tri: each union
-        # leg re-derives the wedge double-join AND multiplies the round's
-        # lineage fan-out (~10 refs to the previous generation per round,
-        # so round k's ANALYSIS tree grows 10^k — measured 13 s of pure
-        # Catalyst time by round 3 on a 3-edge graph); the exploded form
-        # references the generation 4x and round 3 drops to ~1 s
-        sup = (
-            tri.select(
-                F.explode(
-                    F.expr(
-                        "array(struct(a AS pa, b AS pb), "
-                        "struct(b AS pa, c AS pb), struct(a AS pa, c AS pb))"
-                    )
-                ).alias("e")
+    # every generation stays cached until the last round is counted
+    with released():
+        cur, n = materialize(_copurchase_edges(spark, sf_dir).select("pa", "pb"))
+        out_rows = []
+        for i in range(KTRUSS_ITERS):
+            e1 = cur.select(F.col("pa").alias("a"), F.col("pb").alias("b"))
+            e2 = cur.select(F.col("pa").alias("b2"), F.col("pb").alias("c"))
+            e3 = cur.select(F.col("pa").alias("a3"), F.col("pb").alias("c3"))
+            tri = (
+                e1.join(e2, F.col("b2") == F.col("b"))
+                .join(e3, (F.col("a3") == F.col("a")) & (F.col("c3") == F.col("c")))
+                .select("a", "b", "c")
             )
-            .select("e.pa", "e.pb")
-            .groupBy("pa", "pb")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("sup"))
-            .filter(F.col("sup") >= KTRUSS_K - 2)
-        )
-        # r15: the join back onto cur was a no-op — every projected
-        # triangle edge IS a cur edge by construction (all three legs of
-        # the wedge join read cur), and the support rollup already
-        # dedups to one row per edge, so the survivor set is sup itself.
-        # One join + exchange removed per round.
-        nxt = sup.select("pa", "pb").persist()
-        n = nxt.count()
-        out_rows.append((i + 1, counts[-1] - n, n))
-        counts.append(n)
-        gens.append(nxt)
-    for g in gens:
-        g.unpersist()
+            # ONE explode leg instead of a 3-way unionAll of tri: each union
+            # leg re-derives the wedge double-join AND multiplies the round's
+            # lineage fan-out (~10 refs to the previous generation per round,
+            # so round k's ANALYSIS tree grows 10^k — measured 13 s of pure
+            # Catalyst time by round 3 on a 3-edge graph); the exploded form
+            # references the generation 4x and round 3 drops to ~1 s
+            sup = (
+                tri.select(
+                    F.explode(
+                        F.expr(
+                            "array(struct(a AS pa, b AS pb), "
+                            "struct(b AS pa, c AS pb), struct(a AS pa, c AS pb))"
+                        )
+                    ).alias("e")
+                )
+                .select("e.pa", "e.pb")
+                .groupBy("pa", "pb")
+                .agg(F.count(F.lit(1)).cast("bigint").alias("sup"))
+                .filter(F.col("sup") >= KTRUSS_K - 2)
+            )
+            # r15: the join back onto cur was a no-op — every projected
+            # triangle edge IS a cur edge by construction (all three legs of
+            # the wedge join read cur), and the support rollup already
+            # dedups to one row per edge, so the survivor set is sup itself.
+            # One join + exchange removed per round.
+            prev_n = n
+            cur, n = materialize(sup.select("pa", "pb"))
+            out_rows.append((i + 1, prev_n - n, n))
     return spark.createDataFrame(out_rows, "iter long, n_removed long, n_edges long")
 
 
@@ -1714,9 +1706,8 @@ def q_prefix_filter_jaccard_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.size("gs").cast("bigint").alias("sz"),
         )
         .withColumn("pfx", F.expr(f"slice(ga, 1, {p})"))
-        .persist()
     )
-    docs.count()  # feeds the candidate join and both verify legs
+    docs, _ = materialize(docs)  # feeds the candidate join and both verify legs
     a = docs.select(
         F.col("doc_id").alias("ia"),
         F.explode("pfx").alias("g"),

@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from pedri_analysis_spark.cache import materialize
 from pedri_analysis_spark.functions import textexpr as tx
 from pedri_analysis_spark.plans.relational import QueryFn
 from pedri_analysis_spark.sources.tables import load_table
@@ -537,10 +538,10 @@ def q_kmv_distinct_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         else:
             vals = df.select(F.col("o_custkey").alias("v"))
         h = tx.seeded_hash64(tx.SPARK, "CAST(v AS STRING)", "kmv")
-        hashes = vals.select(F.expr(h).alias("h")).distinct().persist()
-        n_exact = hashes.count()  # distinct hashes == distinct values
-        # (a 60-bit md5-prefix collision over these cardinalities is
-        # ~1e-9; the oracle computes the identical quantity either way)
+        # distinct hashes == distinct values (a 60-bit md5-prefix collision
+        # over these cardinalities is ~1e-9; the oracle computes the
+        # identical quantity either way)
+        hashes, n_exact = materialize(vals.select(F.expr(h).alias("h")).distinct())
         topk = hashes.orderBy(F.asc("h")).limit(KMV_K)
         est_expr = (
             f"CAST((CAST({KMV_K - 1} AS DECIMAL(19,0)) * {KMV_HASH_MAX}) "
@@ -998,8 +999,7 @@ def q_winnowing_fingerprints(
 
     if max_bucket is None:  # explicit for tools/chunk_recall (ADVICE r11)
         max_bucket = MAX_BUCKET
-    fp = _winnow_fp_frame(spark, sf_dir).persist()
-    fp.count()  # feeds the bucket rollup and both join legs
+    fp, _ = materialize(_winnow_fp_frame(spark, sf_dir))  # feeds the rollup + both joins
     bn = fp.groupBy("fph").agg(F.count(F.lit(1)).cast("bigint").alias("bucket_n"))
     a = fp.select(F.col("doc_id").alias("a"), "fph")
     b = fp.select(F.col("doc_id").alias("b"), F.col("fph").alias("fpb"))

@@ -50,7 +50,7 @@ def pround(c: str | Column, ndigits: int) -> Column:
 
 
 def _cnt_s(pred: str) -> str:
-    """Textual twin of _cnt (one-parse construction, see predicates.py)."""
+    """Row count where SQL-text ``pred`` holds (one parse, see predicates.py)."""
     return f"sum(CASE WHEN {pred} THEN 1 ELSE 0 END)"
 
 
@@ -239,7 +239,7 @@ def per_match_basic(events: DataFrame, player_id: int = P.PLAYER_ID) -> DataFram
     # minutes_estimate() as conditional min/max), and the lineup pick
     # (P15). Non-player rows needed by O6/P15 join the group via the
     # filter; the row set stays "matches with ≥1 player event" (_me_n).
-    # Aggregates are textual-twin SQL (predicates.py) — one parse per
+    # Aggregates are SQL text (predicates.py) — one parse per
     # column instead of thousands of py4j calls (r15 driver-cost fix).
     base = events.filter(
         F.expr(f"{me} OR {sub_on} OR {P.is_type_s('Starting XI')}")
@@ -429,7 +429,7 @@ def per_match_extended(
     # conjoin every main-loop predicate with `me`, and post-filter to
     # matches where the player actually appeared (preserving the row set of
     # the old main ⟕ receptions join).
-    # Aggregates are textual-twin SQL (predicates.py) — one parse per
+    # Aggregates are SQL text (predicates.py) — one parse per
     # column instead of thousands of py4j calls (r15 driver-cost fix).
     reception = f"(pass.recipient.id = {player_id} AND {pcv2} AND {prog})"
     base = ev.filter(F.expr(f"{me} OR pass.recipient.id = {player_id}"))

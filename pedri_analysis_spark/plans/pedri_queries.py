@@ -26,6 +26,7 @@ import weakref
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pedri_analysis_spark.functions.predicates import by_player_s
 from pedri_analysis_spark.plans.pedri_pipeline import (
     attack_directions,
     counterpress_per_match,
@@ -635,7 +636,7 @@ def q_pedri_match_dates(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("try_to_timestamp(match_date, 'dd/MM/yyyy')"),
     )
     dates = (
-        ev.filter((F.col("player.id") == PID) & F.col("match_date").isNotNull())
+        ev.filter(F.expr(by_player_s(PID)) & F.col("match_date").isNotNull())
         .groupBy("match_id")
         .agg(F.min(F.unix_micros(parsed.cast("timestamp"))).alias("date_us"))
     )
@@ -706,7 +707,7 @@ def q_pedri_heat_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     x = F.col("location")[0]
     y = F.col("location")[1]
     return (
-        ev.filter((F.col("player.id") == PID) & (F.size("location") >= 2))
+        ev.filter(F.expr(by_player_s(PID)) & (F.size("location") >= 2))
         .groupBy(
             F.floor(x / 2.5).cast("long").alias("gx"),
             F.floor(y / 2.5).cast("long").alias("gy"),

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from pedri_analysis_spark.cache import materialize
 from pedri_analysis_spark.functions import textexpr as tx
 from pedri_analysis_spark.operators import spread
 from pedri_analysis_spark.plans.relational import QueryFn
@@ -207,18 +208,17 @@ def q_contamination_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame
     # row; Spark skips subexpression elimination around lambdas)
     shingles = tx.word_shingles_spark_fast("_toks", CONTAM_K)
     grams = f"transform({shingles}, g -> {gh})"
-    d = (
-        spread(load_table(spark, "documents", sf_dir))
-        .withColumn("_toks", F.expr(tx.tokens(tx.SPARK, "text")))
-        .select("doc_id", "lang", F.expr(grams).alias("grams"))
-        .persist()
-    )
     # Materialize once (r15): three consumers (eval split, the hits leg,
     # and the scored left-join leg) each re-derived the tokenize +
     # shingle + hash kernel — the dominant cost — without the cache
     # (A/B at sf0.1: 4.3 s -> 2.4 s warm, best-of-2).  The int64 gram
     # arrays columnar-encode cheaply, unlike the r9 string-array case.
-    d.count()
+    d = (
+        spread(load_table(spark, "documents", sf_dir))
+        .withColumn("_toks", F.expr(tx.tokens(tx.SPARK, "text")))
+        .select("doc_id", "lang", F.expr(grams).alias("grams"))
+    )
+    d, _ = materialize(d)
     eval_grams = (
         d.filter(F.col("doc_id") % CONTAM_EVAL_MOD == 0)
         .select(F.explode("grams").alias("g"))
@@ -947,7 +947,7 @@ def q_boilerplate_ngram_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = spread(docs).select(
         "doc_id", "lang", F.expr(tx.tokens(tx.SPARK, "text")).alias("toks")
     )
-    # persist: the exploded gram frame feeds BOTH the df aggregate and
+    # materialize: the exploded gram frame feeds BOTH the df aggregate and
     # the per-doc coverage join (the minhash_near_dups multi-consumer
     # convention — without it the tokenize/shingle/explode chain runs
     # twice; the harness clears the cache between queries).
@@ -955,8 +955,8 @@ def q_boilerplate_ngram_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "lang",
         F.explode(F.expr(tx.word_shingles(tx.SPARK, "toks", k=2))).alias("gram"),
-    ).persist()
-    g.count()  # materialize before the multi-consumer job
+    )
+    g, _ = materialize(g)
     tot = t.agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
     freq = (
         g.groupBy("gram")

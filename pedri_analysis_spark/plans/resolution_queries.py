@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from pedri_analysis_spark.cache import materialize
 from pedri_analysis_spark.functions import textexpr as tx
 from pedri_analysis_spark.plans.relational import QueryFn, events_us
 from pedri_analysis_spark.sources.tables import load_table
@@ -309,14 +310,12 @@ def q_triangle_count_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame is persisted: it feeds three join legs, and recomputing the
     order-pair aggregation three times would triple the dominant
     shuffle."""
-    e = _copurchase_edges(spark, sf_dir).select("pa", "pb").persist()
-    # NO unpersist here (r15 fix): the returned frame references e on all
-    # three join legs, and an eager unpersist made the caller's action
-    # re-derive the order-pair aggregate 3x (profiled: 12 parquet scans,
-    # 0 cache hits in the executed plan).  The bench clears the cache
-    # between queries; a resident pipeline would unpersist after its
-    # terminal action.
-    n_edges = e.count()  # bounded driver scalar; also materializes the cache
+    # NO released() scope here (r15 fix): the returned frame references e
+    # on all three join legs, and an eager unpersist made the caller's
+    # action re-derive the order-pair aggregate 3x (profiled: 12 parquet
+    # scans, 0 cache hits in the executed plan).  The bench clears the
+    # cache between queries.  n_edges is a bounded driver scalar.
+    e, n_edges = materialize(_copurchase_edges(spark, sf_dir).select("pa", "pb"))
     e1 = e.alias("e1")
     e2 = e.select(
         F.col("pa").alias("p2a"), F.col("pb").alias("p2b")

@@ -14,6 +14,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pedri_analysis_spark.cache import materialize
 from pedri_analysis_spark.functions import textexpr as tx
 from pedri_analysis_spark.operators import chunking as chk
 from pedri_analysis_spark.operators import similarity as sim, spread
@@ -388,19 +389,16 @@ def q_ann_lsh_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle's prefix guard) and the UDF accumulates dimensions in
     the oracle fold's exact order — bit-identical bucket assignment in
     both engines at every adaptive (k, L)."""
-    # persist both reused frames: emb feeds the bucket kernel AND both
+    # materialize both reused frames: emb feeds the bucket kernel AND both
     # verify sides; buckets feeds both sides of the pair self-join —
-    # without persist the Arrow bucket kernel runs twice in one plan.
-    # The persist is MATERIALIZED (count) before the self-join: two scans
-    # of a lazily-persisted frame inside one job race the cache fill and
-    # both recompute the kernel.  The count doubles as the k/L peek.
-    emb = spread(load_table(spark, "embeddings", sf_dir)).persist()
-    k_bits, n_tables = lsh_params(emb.count())
+    # without it the Arrow bucket kernel runs twice in one plan.  The fill
+    # count of emb doubles as the k/L peek.
+    emb, n_emb = materialize(spread(load_table(spark, "embeddings", sf_dir)))
+    k_bits, n_tables = lsh_params(n_emb)
     keys = _bucket_keys_udf(k_bits, n_tables)
-    buckets = emb.select(
-        "vec_id", F.posexplode(keys("embedding")).alias("tbl", "bk")
-    ).persist()
-    buckets.count()
+    buckets, _ = materialize(
+        emb.select("vec_id", F.posexplode(keys("embedding")).alias("tbl", "bk"))
+    )
     # mod-chunk the fixed 8x256 bucket domain (rollup <= 2048 rows, read
     # from the materialized persist) — at every real SF nch==1 and the
     # helper returns the unchunked plan
@@ -892,11 +890,9 @@ def q_sparse_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # wt feeds three consumers (norms + both sides of the term self-join);
     # without a materialized persist the corpus explode/aggregate subtree
-    # runs three times in one plan (verified: 12 scans -> 4).  Same
-    # cache-fill-race discipline as the LSH self-join above; the default
+    # runs three times in one plan (verified: 12 scans -> 4).  The default
     # MEMORY_AND_DISK level keeps the vocab-sized posting table spillable.
-    wt = wt.persist()
-    wt.count()
+    wt, _ = materialize(wt)
     norms = wt.groupBy("doc_id").agg(
         F.sqrt(F.sum(F.col("w") * F.col("w")).cast("double")).alias("nrm")
     )

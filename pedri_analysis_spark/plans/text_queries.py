@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pedri_analysis_spark.cache import materialize
 from pedri_analysis_spark.functions import textexpr as tx
 from pedri_analysis_spark.plans.relational import QueryFn
 from pedri_analysis_spark.sources.tables import load_table
@@ -793,15 +794,12 @@ def q_cross_source_leakage_matrix(spark: SparkSession, sf_dir: str) -> DataFrame
         .select("e.sa", "e.sb")
         .groupBy("sa", "sb")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-        # r16 (r15 ADVICE): m feeds THREE consumers (p, na, nb) and the
-        # static plan showed no exchange reuse — 6 parquet scans, the
-        # tokenize+shingle corpus pass planned 3x. m is |sources|²-bounded
-        # (tiny), so persist + materialize collapses the corpus pass to
-        # one execution; the lazy-persist race (ann_lsh lesson) is why
-        # the count is eager.
-        .persist()
     )
-    m.count()
+    # r16 (r15 ADVICE): m feeds THREE consumers (p, na, nb) and the
+    # static plan showed no exchange reuse — 6 parquet scans, the
+    # tokenize+shingle corpus pass planned 3x. m is |sources|²-bounded
+    # (tiny), so materializing it runs the corpus pass once.
+    m, _ = materialize(m)
     p = m.filter(F.col("sa") < F.col("sb")).select(
         F.col("sa").alias("source_a"),
         F.col("sb").alias("source_b"),

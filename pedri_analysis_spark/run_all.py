@@ -59,6 +59,7 @@ from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pedri_analysis_spark.cache import released
 from pedri_analysis_spark.plans.pedri_pipeline import (
     lineup_position,
     minutes_estimate,
@@ -217,9 +218,9 @@ def run_all(
         artifacts[f"fig:{name}:data"] = data_path
         renders.append((name, render))
 
-    events = read_events(spark, events_dir).cache()
-    cached = [events]
-    try:
+    with released() as cached:  # closes after every thread has joined
+        events = read_events(spark, events_dir).cache()
+        cached.append(events)
         # -- stage 1: lineup inspection (reference pedri_inspect_lineups);
         # its aggregate reads every events partition, filling the cache --
         positions = lineup_position(events)
@@ -382,10 +383,6 @@ def run_all(
             for name, render in sorted(renders):
                 for p in render(os.path.join(fig_dir, name)):
                     artifacts[f"fig:{name}:{os.path.splitext(p)[1][1:]}"] = p
-    finally:
-        # only after every thread has joined: no sink still reads a cache
-        for df in cached:
-            df.unpersist()
     return dict(sorted(artifacts.items()))
 
 

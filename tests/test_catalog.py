@@ -274,6 +274,42 @@ def test_tools_warm_up_only_through_bench():
     assert not offenders, "warm-up outside bench.warm:\n" + "\n".join(offenders)
 
 
+def test_package_caches_and_confs_only_through_their_owners():
+    """cache.py owns the materialize-and-release policy and the session
+    setup owns session conf: no bare ``x.count()`` statement (a cache fill
+    goes through cache.materialize), no ``.unpersist(`` outside cache.py
+    and no ``.conf.set(`` outside session.py and sources/tables.py, whose
+    ensure_session_conf sets what the driver's plain session lacks. A conf
+    set in a query body would change every thread sharing the session."""
+    import ast
+    import glob
+
+    pkg = os.path.join(ROOT, "pedri_analysis_spark")
+    owners = {"unpersist": {"cache.py"}, "set": {"session.py", "sources/tables.py"}}
+    offenders = []
+    for path in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
+        rel = os.path.relpath(path, pkg)
+        with open(path, encoding="utf-8") as f:
+            tree = ast.parse(f.read())
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Expr) and isinstance(node.value, ast.Call):
+                fn = node.value.func
+                if isinstance(fn, ast.Attribute) and fn.attr == "count" and not node.value.args:
+                    offenders.append(f"{rel}:{node.lineno} bare .count()")
+            if not isinstance(node, ast.Call) or not isinstance(node.func, ast.Attribute):
+                continue
+            fn = node.func
+            if fn.attr == "unpersist" and rel not in owners["unpersist"]:
+                offenders.append(f"{rel}:{node.lineno} .unpersist(")
+            if (
+                fn.attr == "set"
+                and getattr(fn.value, "attr", None) == "conf"
+                and rel not in owners["set"]
+            ):
+                offenders.append(f"{rel}:{node.lineno} .conf.set(")
+    assert not offenders, "\n".join(offenders)
+
+
 def test_extract_fn_source_includes_decorators_and_rejects_ambiguity():
     """The source-stamp hash must cover the @_register decorator (the
     oracle SQL lives in its argument, so an oracle edit is a rewrite)

@@ -7,12 +7,30 @@ import glob
 import json
 import os
 
+from tests.conftest import SF_DIR
+
+SF_TINY = os.path.join(os.path.dirname(SF_DIR), "sf0.001")
+
+
+def test_curate_all_releases_its_caches(spark, tmp_path):
+    """Every frame curate_all materializes, its own or a callee's (the
+    MinHash signatures of the pair scan), is unpersisted before it
+    returns. It runs first: at a later call the leaked frame's plan would
+    already be cached, and the leak would not show."""
+    from pedri_analysis_spark.curate_all import curate_all
+
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    curate_all(spark, SF_TINY, str(tmp_path / "curation"))
+    # nothing new is held; the map holds RDDs weakly, so a JVM GC may
+    # meanwhile drop an earlier test's unreferenced RDD from it
+    assert not set(spark.sparkContext._jsc.getPersistentRDDs().keys()) - before
+
 
 def test_curate_all_artifact_set(spark, tmp_path):
     from pedri_analysis_spark.curate_all import curate_all
 
     out = str(tmp_path / "curation")
-    manifest = curate_all(spark, "/root/testdata/sf0.001", out)
+    manifest = curate_all(spark, SF_TINY, out)
 
     for rel in (
         "health/table_health.csv",
@@ -47,3 +65,4 @@ def test_curate_all_artifact_set(spark, tmp_path):
     # exported docs are unique by content (exact dedup happened upstream)
     texts = [r["text"] for r in rows]
     assert len(texts) == len(set(texts))
+

@@ -1,18 +1,11 @@
-"""The r12 wave (plans/draft_r12.py), registered in r12: registration,
-driver-identical oracle parity, plan invariants and the property pins
-of its queries."""
+"""The r12 wave (plans/draft_r12.py), registered in r12: registration
+and the property pins of its queries. Oracle parity and plan invariants
+of every registered query are checked catalog-wide in
+test_oracle_parity.py and test_plan_audit.py."""
 
 from __future__ import annotations
 
-import pytest
-
 from tests.conftest import assert_query_matches_oracle
-
-
-def _pairs():
-    from pedri_analysis_spark.plans import draft_r12 as d
-
-    return [(n, d.QUERIES[n], d.ORACLE_SQL[n]) for n in sorted(d.QUERIES)]
 
 
 def test_drafts_are_registered():
@@ -27,34 +20,6 @@ def test_drafts_are_registered():
     )
     # every draft is oracle-paired (full hash-match contract)
     assert set(d.ORACLE_SQL) == set(d.QUERIES)
-
-
-@pytest.mark.parametrize("name,qfn,sql", _pairs(), ids=[p[0] for p in _pairs()])
-def test_draft_matches_oracle(spark, duck, name, qfn, sql):
-    assert_query_matches_oracle(spark, duck, qfn, sql)
-
-
-@pytest.mark.parametrize("name,qfn,sql", _pairs(), ids=[p[0] for p in _pairs()])
-def test_draft_plan_invariants(spark, name, qfn, sql):
-    """The drafts must already satisfy the catalog plan rules
-    (tools/plan_lint.py): no CartesianProduct, Python boundaries only
-    for pre-allowlisted justified Arrow kernels, and BNLJ only for
-    pre-allowlisted bounded build sides."""
-    from tools.plan_lint import _BNLJ_ALLOWED, _PYTHON_ALLOWED, lint_plan
-
-    facts = lint_plan(
-        qfn(spark, "/root/testdata/sf0.01")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert not facts["cartesian"]
-    if facts["python"]:
-        assert name in _PYTHON_ALLOWED, (
-            f"{name}: Python boundary without a pre-staged Arrow-kernel entry"
-        )
-    if facts["bnlj"]:
-        assert name in _BNLJ_ALLOWED, f"{name}: BNLJ without a pre-staged allowlist entry"
 
 
 def test_fellegi_sunter_chunked_branch_matches_oracle(spark, duck, monkeypatch):
