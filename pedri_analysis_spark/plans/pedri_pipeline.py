@@ -9,6 +9,13 @@ counters, xA join, receptions, counter-press) that are joined back on
 ``match_id`` — Catalyst fuses the narrow stages and each branch is a
 single partial+final hash aggregate.
 
+The basic per-match measures (the stat counters, the minutes estimate
+O6 and the Starting-XI pick P15) have one definition:
+``_player_match_agg``, one hash aggregate per match. ``per_match_basic``,
+``minutes_estimate``, ``lineup_position``, ``profile_rows`` and
+``lineup_report`` are filters and projections of it; Catalyst prunes the
+aggregate columns a projection does not read.
+
 Deliberate semantics fix (documented per SURVEY §7 watch-list): the
 reference memoizes attack direction per *team name*, first match wins
 (core/pedri_analysis_extended.py:214-223) — an iteration-order-dependent
@@ -52,6 +59,34 @@ def pround(c: str | Column, ndigits: int) -> Column:
 def _cnt_s(pred: str) -> str:
     """Row count where SQL-text ``pred`` holds (one parse, see predicates.py)."""
     return f"sum(CASE WHEN {pred} THEN 1 ELSE 0 END)"
+
+
+_CARRY_OK_S = (
+    f"({P.IS_CARRY_S} AND {P.END_X_S} IS NOT NULL"
+    f" AND {P.LOC_X_S} IS NOT NULL)"
+)
+
+
+def _carry_dist_s(me: str) -> str:
+    """Length of a carry of the player's with both ends known, else NULL."""
+    return (
+        f"(CASE WHEN {me} AND {_CARRY_OK_S}"
+        f" THEN {P.euclid_s(P.LOC_X_S, P.LOC_Y_S, P.END_X_S, P.END_Y_S)} END)"
+    )
+
+
+def _xg_sum_s(xg: str) -> str:
+    """Sum of an xG expression as a DOUBLE, 0 when there is none. Summed
+    in DECIMAL, which is exact and so independent of the fold order: the
+    oracle's sum gives the same double."""
+    return f"coalesce(CAST(sum(CAST({xg} AS DECIMAL(18,10))) AS DOUBLE), 0.0e0)"
+
+
+def _pct(num: str, den: str) -> Column:
+    """100 * num / den at 1 dp; 0 when den is 0."""
+    return F.when(
+        F.col(den) > 0, pround(100.0 * F.col(num) / F.col(den), 1)
+    ).otherwise(0.0)
 
 
 def attack_directions(events: DataFrame) -> DataFrame:
@@ -104,78 +139,110 @@ def with_direction(events: DataFrame) -> DataFrame:
     )
 
 
+def _player_match_agg(events: DataFrame, player_id: int = P.PLAYER_ID) -> DataFrame:
+    """The ONE per-match aggregate of the player's measures (A1, O6, P15):
+    every row that is the player's event, the player's sub-on, or a
+    Starting XI row, grouped by match in one hash aggregate. Unfiltered:
+    a match with a Starting XI row but no player event keeps its group
+    (``_me_n`` = 0), which ``lineup_position`` needs. The public builders
+    are filters + projections of it; Catalyst prunes the aggregate columns
+    a projection does not read.
+
+    - ``_t_first`` / ``_t_last`` / ``_on_min`` / ``_off_min``: the minutes
+      estimate's span (reference core/pedri_analysis.py:201-218) as
+      conditional min/max;
+    - ``_xi``: the Starting-XI pick (reference analysis.py:190-198) as an
+      ordered struct-min: min over (t, id, pos) structs is lexicographic,
+      so ``["pos"]`` of the minimum is the first qualifying row by (t, id).
+
+    Aggregates are SQL text (predicates.py) — one parse per column instead
+    of thousands of py4j calls."""
+    me = P.by_player_s(player_id)
+    t = P.EVENT_TIME_MIN_S
+    is_sub = P.is_type_s("Substitution")
+    sub_on = f"({is_sub} AND substitution.replacement.id = {player_id})"
+    xi_entry = (
+        f"filter(tactics.lineup, p -> p.player.id = {player_id}"
+        f" OR p.player_id = {player_id})"
+    )
+    xi_pos = (
+        f"(CASE WHEN size({xi_entry}) > 0"
+        f" THEN {xi_entry}[0].position.name END)"
+    )
+    xi_pick = (
+        f"min(CASE WHEN {P.is_type_s('Starting XI')} AND {xi_pos} IS NOT NULL"
+        f" THEN named_struct('t', {t}, 'id', id, 'pos', {xi_pos}) END)"
+    )
+    base = events.filter(
+        F.expr(f"{me} OR {sub_on} OR {P.is_type_s('Starting XI')}")
+    )
+    aggs = [
+        (_cnt_s(me), "_me_n"),
+        (_cnt_s(f"{me} AND {P.IS_PASS_S}"), "passes"),
+        (_cnt_s(f"{me} AND {P.PASS_COMPLETED_V1_S}"), "passes_completed"),
+        (_cnt_s(f"{me} AND {P.IS_KEY_PASS_V1_S}"), "key_passes"),
+        (_cnt_s(f"{me} AND {P.PROGRESSIVE_PASS_V1_S}"), "progressive_passes"),
+        (_cnt_s(f"{me} AND {P.IS_SHOT_S}"), "shots"),
+        (
+            _cnt_s(f"{me} AND {P.IS_SHOT_S} AND shot.outcome.name = 'Goal'"),
+            "goals",
+        ),
+        (_xg_sum_s(f"CASE WHEN {me} THEN shot.statsbomb_xg END"), "_xg_raw"),
+        (_cnt_s(f"{me} AND {P.IS_DRIBBLE_S}"), "dribbles"),
+        (_cnt_s(f"{me} AND {P.SUCCESSFUL_DRIBBLE_S}"), "dribbles_successful"),
+        (_cnt_s(f"{me} AND {P.IS_CARRY_S}"), "carries"),
+        (f"coalesce(sum({_carry_dist_s(me)}), 0.0e0)", "_carry_raw"),
+        (_cnt_s(f"{me} AND {P.IS_PRESSURE_S}"), "pressures"),
+        (_cnt_s(f"{me} AND {P.IS_TACKLE_V1_S}"), "tackles"),
+        (_cnt_s(f"{me} AND {P.IS_INTERCEPTION_S}"), "interceptions"),
+        (_cnt_s(f"{me} AND {P.IS_BALL_RECOVERY_S}"), "ball_recoveries"),
+        (f"min(CASE WHEN {me} THEN match_date END)", "match_date"),
+        (f"min(CASE WHEN {me} THEN {t} END)", "_t_first"),
+        (f"max(CASE WHEN {me} THEN {t} END)", "_t_last"),
+        (f"min(CASE WHEN {sub_on} THEN {t} END)", "_on_min"),
+        (f"min(CASE WHEN {me} AND {is_sub} THEN {t} END)", "_off_min"),
+        (xi_pick, "_xi"),
+    ]
+    return base.groupBy("match_id").agg(*[F.expr(s).alias(n) for s, n in aggs])
+
+
+def _minutes_est() -> Column:
+    """minutes = clamp(end - start, 10, 95) over the aggregate's span:
+    start = sub-on minute else the player's first event time, end =
+    sub-off minute else their last event time (SURVEY O6)."""
+    return F.least(
+        F.greatest(
+            F.coalesce("_off_min", "_t_last") - F.coalesce("_on_min", "_t_first"),
+            F.lit(10.0),
+        ),
+        F.lit(95.0),
+    )
+
+
+def _minutes(est: str | Column) -> Column:
+    """The reported minutes: the estimate, 90 when absent, 1 dp."""
+    return pround(F.coalesce(est, F.lit(90.0)), 1)
+
+
 def minutes_estimate(events: DataFrame, player_id: int = P.PLAYER_ID) -> DataFrame:
     """Per-match minutes-played estimate (SURVEY O6, reference
-    core/pedri_analysis.py:201-218):
-
-    - start = substitution-ON minute (player enters as replacement) else
-      the player's first event time;
-    - end = substitution-OFF minute (player substituted) else the player's
-      last event time;
-    - minutes = clamp(end - start, 10, 95).
-    """
-    t = P.EVENT_TIME_MIN_S
-    own = events.filter(F.expr(P.by_player_s(player_id))).groupBy("match_id").agg(
-        F.expr(f"min({t})").alias("t_first"), F.expr(f"max({t})").alias("t_last")
-    )
-    sub_on = (
-        events.filter(
-            F.expr(
-                f"{P.is_type_s('Substitution')}"
-                f" AND substitution.replacement.id = {player_id}"
-            )
-        )
-        .groupBy("match_id")
-        .agg(F.expr(f"min({t})").alias("on_min"))
-    )
-    sub_off = (
-        events.filter(
-            F.expr(
-                f"{P.is_type_s('Substitution')} AND {P.by_player_s(player_id)}"
-            )
-        )
-        .groupBy("match_id")
-        .agg(F.expr(f"min({t})").alias("off_min"))
-    )
+    core/pedri_analysis.py:201-218), one row per match the player appears
+    in: a projection of the per-match aggregate."""
     return (
-        own.join(sub_on, "match_id", "left")
-        .join(sub_off, "match_id", "left")
-        .select(
-            "match_id",
-            F.least(
-                F.greatest(
-                    F.coalesce("off_min", "t_last")
-                    - F.coalesce("on_min", "t_first"),
-                    F.lit(10.0),
-                ),
-                F.lit(95.0),
-            ).alias("minutes_est"),
-        )
+        _player_match_agg(events, player_id)
+        .filter(F.col("_me_n") > 0)
+        .select("match_id", _minutes_est().alias("minutes_est"))
     )
 
 
 def lineup_position(events: DataFrame, player_id: int = P.PLAYER_ID) -> DataFrame:
-    """Starting-XI position lookup (P15, reference analysis.py:190-198):
-    array higher-order filter over ``tactics.lineup`` — no explode needed,
-    stays a narrow per-row expression; first Starting XI row wins."""
-    entry = (
-        f"filter(tactics.lineup, p -> p.player.id = {player_id}"
-        f" OR p.player_id = {player_id})"
-    )
-    w = W.partitionBy("match_id").orderBy(F.expr(P.EVENT_TIME_MIN_S), F.col("id"))
+    """Starting-XI position lookup (P15, reference analysis.py:190-198),
+    one row per match whose Starting XI names the player: a projection of
+    the per-match aggregate's first-row pick."""
     return (
-        events.filter(F.expr(P.is_type_s("Starting XI")))
-        .withColumn(
-            "pos",
-            F.expr(
-                f"CASE WHEN size({entry}) > 0"
-                f" THEN {entry}[0].position.name END"
-            ),
-        )
-        .filter(F.col("pos").isNotNull())
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("match_id", F.col("pos").alias("position_xi"))
+        _player_match_agg(events, player_id)
+        .filter(F.col("_xi").isNotNull())
+        .select("match_id", F.col("_xi")["pos"].alias("position_xi"))
     )
 
 
@@ -199,106 +266,70 @@ def player_team(events: DataFrame, player_id: int = P.PLAYER_ID) -> DataFrame:
 
 def per_match_basic(events: DataFrame, player_id: int = P.PLAYER_ID) -> DataFrame:
     """The basic per-match stat row (A1, reference
-    core/pedri_analysis.py:231-299): ~15 measures folded in ONE hash
-    aggregate over the player's events, plus minutes / position / date
-    side-lookups joined on match_id.
+    core/pedri_analysis.py:231-299): ~15 measures, the minutes estimate
+    and the Starting-XI position, all from the one per-match aggregate,
+    over the matches with ≥1 player event.
 
     Scale: predicate counters are `sum(when(pred,1))` — partial aggregation
     collapses each partition before the shuffle; the whole row set is
     |matches| ≈ tiny."""
-    me = P.by_player_s(player_id)
-    t = P.EVENT_TIME_MIN_S
-    is_sub = P.is_type_s("Substitution")
-    sub_on = f"({is_sub} AND substitution.replacement.id = {player_id})"
-    # Starting-XI lineup pick (P15) fused into the same aggregate as an
-    # ordered struct-min: min over (t, id, pos) structs is lexicographic,
-    # so ["pos"] of the minimum == first qualifying row by (t, id) — the
-    # standalone lineup_position() window, without its extra scan + join.
-    xi_entry = (
-        f"filter(tactics.lineup, p -> p.player.id = {player_id}"
-        f" OR p.player_id = {player_id})"
-    )
-    xi_pos = (
-        f"(CASE WHEN size({xi_entry}) > 0"
-        f" THEN {xi_entry}[0].position.name END)"
-    )
-    xi_pick = (
-        f"min(CASE WHEN {P.is_type_s('Starting XI')} AND {xi_pos} IS NOT NULL"
-        f" THEN named_struct('t', {t}, 'id', id, 'pos', {xi_pos}) END)"
-    )
-    carry_ok = (
-        f"({P.IS_CARRY_S} AND {P.END_X_S} IS NOT NULL"
-        f" AND {P.LOC_X_S} IS NOT NULL)"
-    )
-    carry_dist = (
-        f"(CASE WHEN {me} AND {carry_ok}"
-        f" THEN {P.euclid_s(P.LOC_X_S, P.LOC_Y_S, P.END_X_S, P.END_Y_S)} END)"
-    )
-    # ONE scan, ONE hash aggregate for the whole basic row: the reference's
-    # per-file stat fold (A1), the minutes estimation branches (O6 —
-    # minutes_estimate() as conditional min/max), and the lineup pick
-    # (P15). Non-player rows needed by O6/P15 join the group via the
-    # filter; the row set stays "matches with ≥1 player event" (_me_n).
-    # Aggregates are SQL text (predicates.py) — one parse per
-    # column instead of thousands of py4j calls (r15 driver-cost fix).
-    base = events.filter(
-        F.expr(f"{me} OR {sub_on} OR {P.is_type_s('Starting XI')}")
-    )
-    aggs = [
-        (_cnt_s(me), "_me_n"),
-        (_cnt_s(f"{me} AND {P.IS_PASS_S}"), "passes"),
-        (_cnt_s(f"{me} AND {P.PASS_COMPLETED_V1_S}"), "passes_completed"),
-        (_cnt_s(f"{me} AND {P.IS_KEY_PASS_V1_S}"), "key_passes"),
-        (_cnt_s(f"{me} AND {P.PROGRESSIVE_PASS_V1_S}"), "progressive_passes"),
-        (_cnt_s(f"{me} AND {P.IS_SHOT_S}"), "shots"),
-        (
-            _cnt_s(f"{me} AND {P.IS_SHOT_S} AND shot.outcome.name = 'Goal'"),
-            "goals",
-        ),
-        (
-            f"coalesce(CAST(sum(CAST(CASE WHEN {me} THEN shot.statsbomb_xg END"
-            f" AS DECIMAL(18,10))) AS DOUBLE), 0.0e0)",
-            "_xg_raw",
-        ),
-        (_cnt_s(f"{me} AND {P.IS_DRIBBLE_S}"), "dribbles"),
-        (_cnt_s(f"{me} AND {P.SUCCESSFUL_DRIBBLE_S}"), "dribbles_successful"),
-        (_cnt_s(f"{me} AND {P.IS_CARRY_S}"), "carries"),
-        (f"coalesce(sum({carry_dist}), 0.0e0)", "_carry_raw"),
-        (_cnt_s(f"{me} AND {P.IS_PRESSURE_S}"), "pressures"),
-        (_cnt_s(f"{me} AND {P.IS_TACKLE_V1_S}"), "tackles"),
-        (_cnt_s(f"{me} AND {P.IS_INTERCEPTION_S}"), "interceptions"),
-        (_cnt_s(f"{me} AND {P.IS_BALL_RECOVERY_S}"), "ball_recoveries"),
-        (f"min(CASE WHEN {me} THEN match_date END)", "match_date"),
-        (f"min(CASE WHEN {me} THEN {t} END)", "_t_first"),
-        (f"max(CASE WHEN {me} THEN {t} END)", "_t_last"),
-        (f"min(CASE WHEN {sub_on} THEN {t} END)", "_on_min"),
-        (f"min(CASE WHEN {me} AND {is_sub} THEN {t} END)", "_off_min"),
-        (xi_pick, "_xi"),
-    ]
-    stats = (
-        base.groupBy("match_id")
-        .agg(*[F.expr(s).alias(n) for s, n in aggs])
-        .filter(F.col("_me_n") > 0)
-    )
-    pct = lambda num, den: F.when(den > 0, pround(100.0 * num / den, 1)).otherwise(0.0)
-    minutes_est = F.least(
-        F.greatest(
-            F.coalesce("_off_min", "_t_last") - F.coalesce("_on_min", "_t_first"),
-            F.lit(10.0),
-        ),
-        F.lit(95.0),
-    )
     return (
-        stats.withColumn("pass_pct", pct(F.col("passes_completed"), F.col("passes")))
-        .withColumn("dribble_pct", pct(F.col("dribbles_successful"), F.col("dribbles")))
+        _player_match_agg(events, player_id)
+        .filter(F.col("_me_n") > 0)
+        .withColumn("pass_pct", _pct("passes_completed", "passes"))
+        .withColumn("dribble_pct", _pct("dribbles_successful", "dribbles"))
         .withColumn("xg", pround("_xg_raw", 3))
         .withColumn("carry_distance", pround("_carry_raw", 1))
-        .withColumn("minutes", pround(F.coalesce(minutes_est, F.lit(90.0)), 1))
+        .withColumn("minutes", _minutes(_minutes_est()))
         .withColumn("position", F.coalesce(F.col("_xi")["pos"], F.lit("Unknown")))
         .drop(
             "_xg_raw", "_carry_raw", "_me_n", "_t_first", "_t_last",
             "_on_min", "_off_min", "_xi",
         )
+    )
+
+
+def profile_rows(events: DataFrame, player_id: int = P.PLAYER_ID) -> DataFrame:
+    """The per-match profile rows that the extended analysis reads back as
+    its JSON side input (reference core/pedri_profile.py:20-50):
+    (match_id, team, minutes, position) per match the player has a team
+    in — ``player_team`` plus the per-match aggregate's minutes and
+    Starting-XI position, one left join. Position is NULL when the player
+    was not in the Starting XI (a sub-on appearance)."""
+    measures = _player_match_agg(events, player_id).select(
+        "match_id",
+        _minutes_est().alias("minutes_est"),
+        F.col("_xi")["pos"].alias("position"),
+    )
+    return (
+        player_team(events, player_id)
+        .join(measures, "match_id", "left")
+        .select("match_id", "team", _minutes("minutes_est").alias("minutes"), "position")
+    )
+
+
+def lineup_report(events: DataFrame, player_id: int = P.PLAYER_ID) -> DataFrame:
+    """Position-distribution report (reference
+    core/pedri_inspect_lineups.py:59-83): matches per Starting-XI position
+    and the first ≤10 of their match ids, ascending, as an array.
+    collect_list is safe here: the grain is one row per match."""
+    preview = F.slice(F.sort_array(F.collect_list("match_id")), 1, 10)
+    return (
+        lineup_position(events, player_id)
+        .groupBy(F.col("position_xi").alias("position"))
+        .agg(F.count(F.lit(1)).alias("n_matches"), preview.alias("match_ids_preview"))
+    )
+
+
+def match_date_ts(col: str = "match_date") -> Column:
+    """A match date parsed from any of the reference's three formats
+    (core/pedri_analysis.py:621-634); NULL when none fits. Sorting on the
+    string would put dd/MM/yyyy dates in the wrong place."""
+    return F.coalesce(
+        *[
+            F.expr(f"try_to_timestamp({col}, '{fmt}')")
+            for fmt in ("yyyy-MM-dd", "yyyy-MM-dd HH:mm:ss", "dd/MM/yyyy")
+        ]
     )
 
 
@@ -323,12 +354,7 @@ def xa_per_match(events: DataFrame, player_id: int = P.PLAYER_ID) -> DataFrame:
             (shots.kp_id == passes.p_id) & (shots.s_match == passes.p_match),
         )
         .groupBy(F.col("s_match").alias("match_id"))
-        .agg(
-            F.expr(
-                "coalesce(CAST(sum(CAST(s_xg AS DECIMAL(18,10))) AS DOUBLE),"
-                " 0.0e0)"
-            ).alias("xa_raw")
-        )
+        .agg(F.expr(_xg_sum_s("s_xg")).alias("xa_raw"))
     )
 
 
@@ -391,12 +417,7 @@ def team_xg_per_match(events: DataFrame, player_id: int = P.PLAYER_ID) -> DataFr
         shots.join(F.broadcast(teams), "match_id")
         .filter(F.col("shot_team") == F.col("team"))
         .groupBy("match_id")
-        .agg(
-            F.expr(
-                "coalesce(CAST(sum(CAST(xg AS DECIMAL(18,10))) AS DOUBLE),"
-                " 0.0e0)"
-            ).alias("team_total_xg_raw")
-        )
+        .agg(F.expr(_xg_sum_s("xg")).alias("team_total_xg_raw"))
     )
 
 
@@ -413,14 +434,6 @@ def per_match_extended(
     ar = "attacks_right"
     pcv2 = P.PASS_COMPLETED_V2_S
     prog = P.progressive_v2_s(ar)
-    carry_ok = (
-        f"({P.IS_CARRY_S} AND {P.END_X_S} IS NOT NULL"
-        f" AND {P.LOC_X_S} IS NOT NULL)"
-    )
-    carry_dist = (
-        f"(CASE WHEN {me} AND {carry_ok}"
-        f" THEN {P.euclid_s(P.LOC_X_S, P.LOC_Y_S, P.END_X_S, P.END_Y_S)} END)"
-    )
     # The reference's receptions pass (extended.py:340-354) reads the SAME
     # direction-joined stream as the main loop, just without the player
     # filter (the pass is a teammate's; only the recipient is the player).
@@ -463,16 +476,12 @@ def per_match_extended(
             _cnt_s(f"{me} AND {P.IS_SHOT_S} AND shot.outcome.name = 'Goal'"),
             "goals",
         ),
-        (
-            f"coalesce(CAST(sum(CAST(CASE WHEN {me} THEN shot.statsbomb_xg END"
-            f" AS DECIMAL(18,10))) AS DOUBLE), 0.0e0)",
-            "xg_raw",
-        ),
+        (_xg_sum_s(f"CASE WHEN {me} THEN shot.statsbomb_xg END"), "xg_raw"),
         (_cnt_s(f"{me} AND {P.IS_DRIBBLE_S}"), "dribbles"),
         (_cnt_s(f"{me} AND {P.SUCCESSFUL_DRIBBLE_S}"), "dribbles_successful"),
         (_cnt_s(f"{me} AND {P.IS_CARRY_S}"), "carries"),
-        (f"coalesce(sum({carry_dist}), 0.0e0)", "carry_distance_raw"),
-        (_cnt_s(f"{me} AND {carry_ok} AND {prog}"), "progressive_carries"),
+        (f"coalesce(sum({_carry_dist_s(me)}), 0.0e0)", "carry_distance_raw"),
+        (_cnt_s(f"{me} AND {_CARRY_OK_S} AND {prog}"), "progressive_carries"),
         (_cnt_s(f"{me} AND {P.IS_TACKLE_V2_S}"), "tackles"),
         (_cnt_s(f"{me} AND {P.IS_INTERCEPTION_S}"), "interceptions"),
         (_cnt_s(f"{me} AND {P.IS_BALL_RECOVERY_S}"), "ball_recoveries"),
@@ -498,10 +507,9 @@ def per_match_extended(
             }
         )
     )
-    pct = lambda num, den: F.when(den > 0, pround(100.0 * num / den, 1)).otherwise(0.0)
     out = (
-        out.withColumn("pass_pct", pct(F.col("passes_completed"), F.col("passes")))
-        .withColumn("dribble_pct", pct(F.col("dribbles_successful"), F.col("dribbles")))
+        out.withColumn("pass_pct", _pct("passes_completed", "passes"))
+        .withColumn("dribble_pct", _pct("dribbles_successful", "dribbles"))
         .withColumn("xg", pround("xg_raw", 3))
         .withColumn("xa", pround("xa_raw", 3))
         .withColumn("team_total_xg", pround("team_total_xg_raw", 3))

@@ -14,9 +14,9 @@ Reference semantics:
   plus a ≤10-match-id preview per position (ascending match id — the
   reference previews in sorted-file order, which is the same order).
 
-Both reuse the pipeline's building blocks (player_team /
-minutes_estimate / lineup_position) — the queries are compositions, not
-re-implementations.
+Both call the pipeline's builders (``profile_rows`` / ``lineup_report``),
+which ``run_all`` calls too; the per-match measures under them come from
+the one per-match aggregate of ``plans.pedri_pipeline``.
 """
 
 from __future__ import annotations
@@ -24,12 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pedri_analysis_spark.plans.pedri_pipeline import (
-    lineup_position,
-    minutes_estimate,
-    player_team,
-    pround,
-)
+from pedri_analysis_spark.plans.pedri_pipeline import lineup_report, profile_rows
 from pedri_analysis_spark.plans.pedri_queries import _EVT, PID, _events
 from pedri_analysis_spark.plans.relational import QueryFn
 
@@ -118,22 +113,10 @@ def q_pedri_profile_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     Position is NULL when the player was not in the Starting XI (sub-on
     appearances), mirroring the reference's absent-field profile rows.
 
-    Scale: three narrow per-match aggregates (mode, span, XI pick) left-
-    joined on match_id — each is a partial+final hash aggregate; no wide
-    shuffle touches the event stream itself."""
-    ev = _events(spark)
-    out = (
-        player_team(ev)
-        .join(minutes_estimate(ev), "match_id", "left")
-        .join(lineup_position(ev), "match_id", "left")
-        .select(
-            "match_id",
-            "team",
-            pround(F.coalesce("minutes_est", F.lit(90.0)), 1).alias("minutes"),
-            F.col("position_xi").alias("position"),
-        )
-    )
-    return out
+    Scale: two narrow per-match aggregates (the team mode and the
+    per-match measures) left-joined on match_id — each is a partial+final
+    hash aggregate; no wide shuffle touches the event stream itself."""
+    return profile_rows(_events(spark))
 
 
 @_register(
@@ -160,13 +143,9 @@ def q_pedri_lineup_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
     event.  The preview is serialized to a comma-joined string (numeric
     sort first, then cast) so the result is flat scalar columns — array
     cells are not hashable by pandas-based result comparators."""
-    pos = lineup_position(_events(spark))
-    preview = F.slice(F.sort_array(F.collect_list("match_id")), 1, 10)
-    return pos.groupBy(F.col("position_xi").alias("position")).agg(
-        F.count(F.lit(1)).alias("n_matches"),
-        F.array_join(
-            F.transform(preview, lambda x: x.cast("string")), ","
-        ).alias("match_ids_preview"),
+    preview = F.transform("match_ids_preview", lambda x: x.cast("string"))
+    return lineup_report(_events(spark)).withColumn(
+        "match_ids_preview", F.array_join(preview, ",")
     )
 
 

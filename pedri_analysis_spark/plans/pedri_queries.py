@@ -30,6 +30,7 @@ from pedri_analysis_spark.functions.predicates import by_player_s
 from pedri_analysis_spark.plans.pedri_pipeline import (
     attack_directions,
     counterpress_per_match,
+    match_date_ts,
     per_match_basic,
     per_match_extended,
     pround,
@@ -39,6 +40,7 @@ from pedri_analysis_spark.plans.pedri_pipeline import (
 )
 from pedri_analysis_spark.plans.relational import QueryFn
 from pedri_analysis_spark.sources.events import read_events
+from pedri_analysis_spark.viz import RADAR_METRICS
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLE_SQL: dict[str, str] = {}
@@ -630,15 +632,10 @@ def q_pedri_match_dates(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     ev = _events(spark)
-    parsed = F.coalesce(
-        F.expr("try_to_timestamp(match_date, 'yyyy-MM-dd')"),
-        F.expr("try_to_timestamp(match_date, 'yyyy-MM-dd HH:mm:ss')"),
-        F.expr("try_to_timestamp(match_date, 'dd/MM/yyyy')"),
-    )
     dates = (
         ev.filter(F.expr(by_player_s(PID)) & F.col("match_date").isNotNull())
         .groupBy("match_id")
-        .agg(F.min(F.unix_micros(parsed.cast("timestamp"))).alias("date_us"))
+        .agg(F.min(F.unix_micros(match_date_ts().cast("timestamp"))).alias("date_us"))
     )
     return dates.select(
         "match_id",
@@ -766,18 +763,6 @@ def q_pedri_scatter_pp_pc(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, os.path.join(os.path.dirname(FIXTURE_EVENTS), "pedri_profile.json")
     )
     return scatter_pp_pc_data(per_match_extended(_events(spark), profile))
-
-
-RADAR_METRICS = [
-    "key_passes",
-    "progressive_passes",
-    "shots",
-    "xg",
-    "dribbles_successful",
-    "pressures",
-    "tackles",
-    "interceptions",
-]
 
 
 def _radar_sql() -> str:

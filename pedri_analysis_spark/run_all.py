@@ -61,19 +61,15 @@ from pyspark.sql import functions as F
 
 from pedri_analysis_spark.cache import released
 from pedri_analysis_spark.plans.pedri_pipeline import (
-    lineup_position,
-    minutes_estimate,
+    lineup_report,
+    match_date_ts,
     per_match_basic,
     per_match_extended,
-    player_team,
+    profile_rows,
     pround,
 )
 from pedri_analysis_spark.sources.events import read_events, read_profile
-from pedri_analysis_spark.sources.sinks import (
-    write_csv_single,
-    write_json_summary,
-    write_text_list,
-)
+from pedri_analysis_spark.sources.sinks import write_csv_single, write_text_list
 from pedri_analysis_spark import viz
 
 # reference core/pedri_analysis.py:637-648 (basic CSV subset; `passes` is
@@ -91,11 +87,6 @@ BASIC_CSV_COLS = [
     ("shots", "shots"),
     ("xg", "xg"),
 ]
-
-
-def _p90(col: str) -> F.Column:
-    m = F.col("minutes")
-    return F.when(m > 0, F.col(col) / m * 90.0).otherwise(0.0)
 
 
 def _summary_basic(stats: DataFrame) -> DataFrame:
@@ -223,32 +214,13 @@ def run_all(
         cached.append(events)
         # -- stage 1: lineup inspection (reference pedri_inspect_lineups);
         # its aggregate reads every events partition, filling the cache --
-        positions = lineup_position(events)
-        pos_report = positions.groupBy(
-            F.col("position_xi").alias("position")
-        ).agg(
-            F.count(F.lit(1)).alias("n_matches"),
-            F.slice(F.sort_array(F.collect_list("match_id")), 1, 10).alias(
-                "match_ids_preview"
-            ),
-        )
-        pos_report.show(truncate=False)  # the reference's stdout report
+        lineup_report(events).show(truncate=False)  # the reference's stdout report
 
         def extended() -> None:
             # -- stage 2: profile build (reference pedri_profile) --
-            profile_rows = (
-                player_team(events)
-                .join(minutes_estimate(events), "match_id", "left")
-                .join(positions, "match_id", "left")
-                .select(
-                    "match_id",
-                    F.col("team").alias("team_name"),
-                    pround(F.coalesce("minutes_est", F.lit(90.0)), 1).alias("minutes"),
-                    F.col("position_xi").alias("position"),
-                )
-            )
+            built = profile_rows(events).withColumnRenamed("team", "team_name")
             profile_out = os.path.join(out_dir, "pedri_profile.json")
-            rows = [r.asDict() for r in profile_rows.orderBy("match_id").collect()]
+            rows = [r.asDict() for r in built.orderBy("match_id").collect()]
             with open(profile_out, "w") as f:
                 json.dump(rows, f, indent=1, default=str)
             artifacts["profile_json"] = profile_out
@@ -289,14 +261,7 @@ def run_all(
             basic = per_match_basic(events).cache()
             cached.append(basic)
             # reference sort: PARSED multi-format date, then match id
-            # (core/pedri_analysis.py:621-634 — string order would put
-            # dd/MM/yyyy dates wrong)
-            parsed_date = F.coalesce(
-                F.expr("try_to_timestamp(match_date, 'yyyy-MM-dd')"),
-                F.expr("try_to_timestamp(match_date, 'yyyy-MM-dd HH:mm:ss')"),
-                F.expr("try_to_timestamp(match_date, 'dd/MM/yyyy')"),
-            )
-            basic_subset = basic.withColumn("_dt", parsed_date).select(
+            basic_subset = basic.withColumn("_dt", match_date_ts()).select(
                 "_dt",
                 *[F.col(src).alias(dst) for src, dst in BASIC_CSV_COLS if src in basic.columns],
             )
@@ -314,7 +279,9 @@ def run_all(
                 )
             for metric in ("pressures", "tackles", "interceptions"):
                 hist = viz.histogram_data(
-                    basic.withColumn(f"{metric}_p90", _p90(metric)), f"{metric}_p90", 1.0
+                    basic.withColumn(f"{metric}_p90", viz.per90_rate(metric)),
+                    f"{metric}_p90",
+                    1.0,
                 )
                 submit(
                     figure, f"pedri_{metric}_p90_hist", hist,
@@ -328,11 +295,7 @@ def run_all(
             )
 
         def radar_figures(basic: DataFrame) -> None:
-            radar = viz.radar_percentile_data(
-                basic,
-                ["key_passes", "progressive_passes", "shots", "xg",
-                 "dribbles_successful", "pressures", "tackles", "interceptions"],
-            ).cache()
+            radar = viz.radar_percentile_data(basic, viz.RADAR_METRICS).cache()
             cached.append(radar)
             radar_row = radar.collect()[0]
             raw_metrics = [c for c in radar.columns if c.endswith("_raw")]

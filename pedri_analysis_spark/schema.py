@@ -135,15 +135,3 @@ EMBEDDINGS_TABLE_SCHEMA = T.StructType(
         T.StructField("label", T.IntegerType()),
     ]
 )
-
-TPCH_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-)
-
-ALL_TABLES = TPCH_TABLES + ("events", "documents", "embeddings")

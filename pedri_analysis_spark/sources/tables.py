@@ -13,8 +13,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from pedri_analysis_spark.schema import ALL_TABLES
-
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # SQL confs the engine's semantics depend on, applied defensively to
@@ -97,13 +95,3 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
     path = os.path.join(sf_dir, f"{name}.parquet")
     _assert_ts_encoding_handled(path, name)
     return spark.read.parquet(path)
-
-
-def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
-    return {name: load_table(spark, name, sf_dir) for name in ALL_TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
-    """Register every table as a temp view so workloads can use spark.sql."""
-    for name in ALL_TABLES:
-        load_table(spark, name, sf_dir).createOrReplaceTempView(name)

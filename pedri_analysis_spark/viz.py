@@ -17,11 +17,23 @@ driver-side detail:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from pedri_analysis_spark.functions import predicates as P
 
 HEAT_NX, HEAT_NY = 48, 32  # reference grid (extended.py:33)
+
+# the radar's spokes (reference core/pedri_analysis.py:487-521)
+RADAR_METRICS = [
+    "key_passes",
+    "progressive_passes",
+    "shots",
+    "xg",
+    "dribbles_successful",
+    "pressures",
+    "tackles",
+    "interceptions",
+]
 
 
 def _matplotlib():
@@ -55,6 +67,13 @@ def heatmap_data(events: DataFrame, player_id: int = P.PLAYER_ID) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"))
         .withColumn("intensity", F.log1p("n"))
     )
+
+
+def per90_rate(col: str) -> Column:
+    """A per-match count as a rate per 90 minutes played (0 when the
+    ``minutes`` column is 0)."""
+    m = F.col("minutes")
+    return F.when(m > 0, F.col(col) / m * 90.0).otherwise(0.0)
 
 
 def top_matches_data(stats: DataFrame, metric: str, k: int = 20) -> DataFrame:
@@ -122,14 +141,12 @@ def trend_per90_data(stats: DataFrame) -> DataFrame:
     is |matches|, not |events|."""
     from pyspark.sql import Window as W
 
-    m = F.col("minutes")
-    p90 = lambda c: F.when(m > 0, F.col(c) / m * 90.0).otherwise(0.0)
     w = W.orderBy("match_id")
     return stats.select(
         F.row_number().over(w).alias("idx"),
         "match_id",
-        p90("key_passes").alias("kp90"),
-        p90("progressive_passes").alias("pp90"),
+        per90_rate("key_passes").alias("kp90"),
+        per90_rate("progressive_passes").alias("pp90"),
     )
 
 
@@ -157,11 +174,7 @@ def radar_percentile_data(stats: DataFrame, metrics: list[str]) -> DataFrame:
     are 6-dp floor-rounded (cross-engine double discipline)."""
     from pedri_analysis_spark.plans.pedri_pipeline import pround
 
-    m = F.col("minutes")
-    p90 = lambda c: F.when(m > 0, F.col(c) / m * 90.0).otherwise(0.0)
-    per90 = stats.select(
-        *[p90(c).alias(f"{c}_p90") for c in metrics]
-    )
+    per90 = stats.select(*[per90_rate(c).alias(f"{c}_p90") for c in metrics])
     # the mean is an order-dependent double fold — round it to 6 dp
     # BEFORE the <= comparison so the percentile boundary is engine-
     # independent (per-match p90 values are per-row math, identical on

@@ -21,6 +21,14 @@ TABLES = (
 ).split()
 
 
+def persistent_rdds(spark) -> set[int]:
+    """Ids of the RDDs the JVM holds persisted. Compare them as "nothing
+    new" (``not persistent_rdds(spark) - before``), never for equality:
+    the map holds its RDDs weakly, so a JVM GC may drop an earlier test's
+    unreferenced RDD from it at any time."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
 @pytest.fixture(scope="session")
 def spark():
     from pedri_analysis_spark.session import get_spark

@@ -7,12 +7,7 @@ from __future__ import annotations
 import pytest
 
 from pedri_analysis_spark.cache import materialize, released
-
-
-def _persistent(spark):
-    # compared as "nothing new": the map holds RDDs weakly, so a JVM GC
-    # may drop an earlier test's unreferenced RDD from it at any time
-    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+from tests.conftest import persistent_rdds
 
 
 def _frame(spark, n):
@@ -21,7 +16,7 @@ def _frame(spark, n):
 
 
 def test_released_unpersists_when_the_block_raises(spark):
-    before = _persistent(spark)
+    before = persistent_rdds(spark)
     with pytest.raises(RuntimeError, match="stage failed"):
         with released() as held:
             _, rows = materialize(_frame(spark, 1101))
@@ -29,9 +24,9 @@ def test_released_unpersists_when_the_block_raises(spark):
             held.append(lazy)
             lazy.count()
             assert rows == 1101
-            assert len(_persistent(spark) - before) == 2
+            assert len(persistent_rdds(spark) - before) == 2
             raise RuntimeError("stage failed")
-    assert not _persistent(spark) - before
+    assert not persistent_rdds(spark) - before
 
 
 def test_released_frees_frames_a_callee_materialized(spark):
@@ -39,20 +34,20 @@ def test_released_frees_frames_a_callee_materialized(spark):
         df, _ = materialize(_frame(spark, 1103))
         return df.groupBy().count()  # a lazy plan over the callee's cache
 
-    before = _persistent(spark)
+    before = persistent_rdds(spark)
     with released():
         assert callee().collect()[0][0] == 1103
-        assert len(_persistent(spark) - before) == 1
-    assert not _persistent(spark) - before
+        assert len(persistent_rdds(spark) - before) == 1
+    assert not persistent_rdds(spark) - before
 
 
 def test_nested_scopes_release_only_their_own_frames(spark):
-    before = _persistent(spark)
+    before = persistent_rdds(spark)
     with released():
         materialize(_frame(spark, 1104))
-        outer = _persistent(spark) - before
+        outer = persistent_rdds(spark) - before
         with released():
             materialize(_frame(spark, 1105))
-            assert len(_persistent(spark) - before) == 2
-        assert _persistent(spark) - before == outer
-    assert not _persistent(spark) - before
+            assert len(persistent_rdds(spark) - before) == 2
+        assert persistent_rdds(spark) - before == outer
+    assert not persistent_rdds(spark) - before

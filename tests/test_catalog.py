@@ -9,7 +9,7 @@ import os
 import subprocess
 import sys
 
-from tests.conftest import ROOT
+from tests.conftest import ROOT, persistent_rdds
 
 
 def test_query_catalog_is_current(tmp_path):
@@ -223,12 +223,11 @@ def test_ab_bench_isolates_failures_and_releases_cache(spark):
 
     from tools.ab_bench import time_queries
 
-    jsc = spark.sparkContext._jsc
-    baseline = set(jsc.getPersistentRDDs().keys())
+    baseline = persistent_rdds(spark)
     held_at_start = []
 
     def persists(s, sf):
-        held_at_start.append(set(jsc.getPersistentRDDs().keys()) - baseline)
+        held_at_start.append(persistent_rdds(spark) - baseline)
         df = s.range(100).withColumn("v", F.col("id") * 2).persist()
         df.count()
         return df.agg(F.sum("v").alias("s"))
@@ -242,7 +241,7 @@ def test_ab_bench_isolates_failures_and_releases_cache(spark):
     assert set(failures) == {"broken"}
     assert set(timings) == {"persists"} and timings["persists"] > 0
     assert held_at_start == [set(), set(), set()]
-    assert set(jsc.getPersistentRDDs().keys()) <= baseline
+    assert not persistent_rdds(spark) - baseline
 
 
 def test_tools_warm_up_only_through_bench():
@@ -622,3 +621,24 @@ def test_manifest_tool_refuses_incomplete_registry(monkeypatch):
     assert fns == {} and complete is False
     with _pytest.raises(SystemExit):
         usm.bootstrap()
+
+
+def test_tracer_wraps_only_names_that_resolve():
+    """Every (module, name) pair the benchmark tracer wraps resolves, so a
+    renamed or deleted builder fails here rather than when a traced
+    benchmark run constructs its Tracer. Reads perfbench/tracer.py only."""
+    import importlib
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "perfbench_tracer", os.path.join(ROOT, "perfbench", "tracer.py")
+    )
+    tracer = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(tracer)
+    pairs = [(mod, name) for mod, names, _ in tracer.LAYERS for name in names]
+    missing = [
+        f"{mod}.{name}"
+        for mod, name in pairs
+        if not callable(getattr(importlib.import_module(mod), name, None))
+    ]
+    assert pairs and not missing, missing

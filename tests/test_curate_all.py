@@ -7,7 +7,7 @@ import glob
 import json
 import os
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, persistent_rdds
 
 SF_TINY = os.path.join(os.path.dirname(SF_DIR), "sf0.001")
 
@@ -19,11 +19,9 @@ def test_curate_all_releases_its_caches(spark, tmp_path):
     already be cached, and the leak would not show."""
     from pedri_analysis_spark.curate_all import curate_all
 
-    before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    before = persistent_rdds(spark)
     curate_all(spark, SF_TINY, str(tmp_path / "curation"))
-    # nothing new is held; the map holds RDDs weakly, so a JVM GC may
-    # meanwhile drop an earlier test's unreferenced RDD from it
-    assert not set(spark.sparkContext._jsc.getPersistentRDDs().keys()) - before
+    assert not persistent_rdds(spark) - before
 
 
 def test_curate_all_artifact_set(spark, tmp_path):

@@ -10,6 +10,8 @@ import os
 
 import pytest
 
+from tests.conftest import persistent_rdds
+
 FIXTURES = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures")
 
 EXPECTED_FILES = [
@@ -101,17 +103,13 @@ def test_profile_json_roundtrip(spark, artifacts):
     assert rows[1001].minutes > 0
 
 
-def _persistent(spark):
-    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
-
-
 def test_run_all_releases_its_caches(spark, tmp_path):
     """Every frame run_all caches is unpersisted before it returns."""
     from pedri_analysis_spark.run_all import run_all
 
-    before = _persistent(spark)
+    before = persistent_rdds(spark)
     run_all(spark, os.path.join(FIXTURES, "events"), out_dir=str(tmp_path))
-    assert _persistent(spark) == before
+    assert not persistent_rdds(spark) - before
 
 
 def test_run_all_jobs_stay_in_callers_job_group(spark, tmp_path):
@@ -152,10 +150,10 @@ def test_run_all_reraises_a_failed_branch(spark, tmp_path, monkeypatch):
         raise RuntimeError("heatmap branch failed")
 
     monkeypatch.setattr(viz, "heatmap_data", broken)
-    before, threads = _persistent(spark), threading.active_count()
+    before, threads = persistent_rdds(spark), threading.active_count()
     with pytest.raises(RuntimeError, match="heatmap branch failed"):
         run_all(spark, os.path.join(FIXTURES, "events"), out_dir=str(tmp_path))
-    assert _persistent(spark) == before
+    assert not persistent_rdds(spark) - before
     assert threading.active_count() == threads
 
 

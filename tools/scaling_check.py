@@ -40,17 +40,6 @@ DEFAULT_SF_DIRS = [
 RATIO_MAX = 15.0  # 10x data -> >15x time = super-linear
 NOISE_FLOOR_S = 0.5
 
-# Queries that are EXACT all-pairs verification inside a block whose
-# membership grows with the corpus — measured and REPORTED
-# (known_quadratic in SCALING.json) but not gate-failing.  EMPTY since
-# r9: the r8 entries (ngram_jaccard_near_dups, embedding_near_dups) were
-# bounded with MOD-chunking (chunk = hash(id) % ceil(|block|/CHUNK);
-# rank-chunking was measured and rejected — see
-# plans/dedup_queries.py ngram docstring).  The oracle mirrors the
-# chunk arithmetic, results are bit-identical at every real SF, so
-# every registered query must now measure linear-or-better.
-KNOWN_QUADRATIC: dict[str, str] = {}
-
 # Queries whose mod-chunk cap makes them APPROXIMATE once any block
 # exceeds its *_CHUNK constant (nch > 1): a true pair whose ids land in
 # different residue cells is not compared.  At every real SF nch == 1
@@ -215,7 +204,6 @@ def _check(spark, a) -> int:
     labels = [os.path.basename(d.rstrip("/")) for d in a.sf_dirs]
     ratios: dict[str, dict[str, float]] = {}
     superlinear: list[dict] = []
-    known_quadratic: list[dict] = []
     for name in sorted(queries):
         r: dict[str, float] = {}
         for lo, hi in zip(labels, labels[1:]):
@@ -226,14 +214,9 @@ def _check(spark, a) -> int:
             step = f"{lo}->{hi}"
             r[step] = round(t_hi / t_lo, 2)
             if t_hi >= NOISE_FLOOR_S and r[step] > RATIO_MAX:
-                entry = {
-                    "query": name, "step": step, "ratio": r[step], "t_hi_s": t_hi
-                }
-                if name in KNOWN_QUADRATIC:
-                    entry["why_allowed"] = KNOWN_QUADRATIC[name]
-                    known_quadratic.append(entry)
-                else:
-                    superlinear.append(entry)
+                superlinear.append(
+                    {"query": name, "step": step, "ratio": r[step], "t_hi_s": t_hi}
+                )
         ratios[name] = r
 
     # Noise guard (the committed bench-noise lesson, machine-enforced):
@@ -276,7 +259,6 @@ def _check(spark, a) -> int:
         "ratios": ratios,
         "failures": failures,
         "superlinear": superlinear,
-        "known_quadratic": known_quadratic,
         "approx_past_cap": APPROX_PAST_CAP,
         "noise_exonerated": exonerated,
     }
@@ -287,11 +269,6 @@ def _check(spark, a) -> int:
         print(
             f"SUPER-LINEAR {s['ratio']:5.1f}x {s['step']}: {s['query']} "
             f"({s['t_hi_s']:.2f}s at the larger SF)"
-        )
-    for s in known_quadratic:
-        print(
-            f"known-quadratic {s['ratio']:5.1f}x {s['step']}: {s['query']} "
-            f"— {s['why_allowed']}"
         )
     if failures:
         print(f"FAIL: broken queries: { {k: sorted(v) for k, v in failures.items()} }")

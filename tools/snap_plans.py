@@ -22,19 +22,19 @@ def main() -> int:
     from pedri_analysis_spark.plans import all_queries
     from pedri_analysis_spark.session import get_spark
 
-    spark = get_spark(app_name="snap-plans")
     queries = dict(all_queries())
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    for name in names:
-        df = queries[name](spark, sf_dir)
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
-        path = os.path.join(OUT_DIR, f"{name}_{tag}.txt")
-        with open(path, "w") as f:
-            f.write(buf.getvalue())
-        n_ex = buf.getvalue().count("Exchange")
-        print(f"{name}: {len(buf.getvalue())} bytes, {n_ex} Exchange refs -> {path}")
+    with get_spark(app_name="snap-plans") as spark:
+        for name in names:
+            df = queries[name](spark, sf_dir)
+            buf = io.StringIO()
+            with redirect_stdout(buf):
+                df.explain("formatted")
+            path = os.path.join(OUT_DIR, f"{name}_{tag}.txt")
+            with open(path, "w") as f:
+                f.write(buf.getvalue())
+            n_ex = buf.getvalue().count("Exchange")
+            print(f"{name}: {len(buf.getvalue())} bytes, {n_ex} Exchange refs -> {path}")
     return 0
 
 
