@@ -31,15 +31,21 @@ def round6(c: Column) -> Column:
     return F.floor(c * 1_000_000 + F.lit(0.5)) / 1_000_000
 
 
+def round6_sql(e: str) -> str:
+    """``round6`` as SQL text over the expression ``e``; the same text
+    parses in Spark SQL and DuckDB, so oracles and ``F.expr`` share it."""
+    return f"floor(({e}) * 1000000 + 0.5) / 1000000"
+
+
 def _cosine_pandas():
     """Arrow-vectorized cosine: numpy dot over stacked batches.
 
     Catalyst higher-order-function lambdas execute interpreted per
     element (~300 lambda invocations per 64-dim cosine), which dominates
     wall-clock for pair-scoring workloads; one Arrow batch transfer + a
-    numpy einsum is ~10× faster. Values differ from the JVM fold only in
-    the last ulps — collapsed by round6 at every output/comparison
-    boundary."""
+    numpy einsum is ~10× faster. Values differ from the oracle's
+    ``list_cosine_similarity`` only in the last ulps — collapsed by
+    round6 at every output/comparison boundary."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("double")
@@ -49,8 +55,8 @@ def _cosine_pandas():
         num = np.einsum("ij,ij->i", ma, mb)
         den = np.linalg.norm(ma, axis=1) * np.linalg.norm(mb, axis=1)
         # zero-norm guard: NaN would silently rank #1 (NaN sorts above
-        # every double in Spark/DuckDB) and pass >= thresholds; 0.0
-        # matches the JVM cosine()'s guarded semantics
+        # every double in Spark/DuckDB) and pass >= thresholds, so a
+        # zero-norm pair scores 0.0
         safe = np.where(den > 0, den, 1.0)
         return pd.Series(np.where(den > 0, num / safe, 0.0))
 

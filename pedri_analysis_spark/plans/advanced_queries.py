@@ -21,8 +21,8 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from pedri_analysis_spark.functions import textexpr as tx_mod
+from pedri_analysis_spark.plans.registry import query_table
 from pedri_analysis_spark.plans.relational import (
-    QueryFn,
     dsum,
     events_us,
     factor,
@@ -30,22 +30,7 @@ from pedri_analysis_spark.plans.relational import (
 )
 from pedri_analysis_spark.sources.tables import load_table
 
-QUERIES: dict[str, QueryFn] = {}
-ORACLE_SQL: dict[str, str] = {}
-
-
-def _register(name: str, oracle: str | None = None):
-    def deco(fn: QueryFn) -> QueryFn:
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE_SQL[name] = oracle
-        return fn
-
-    return deco
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, name, sf_dir)
+QUERIES, ORACLE_SQL, _register = query_table()
 
 
 # --------------------------------------------------------------------------
@@ -72,8 +57,10 @@ def q_customer_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame
     tiny set of distinct counts (≤ max orders per customer) and is
     map-side-combined to almost nothing.  Ref: core query-shape parity
     (reference has no partsupp either)."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderpriority") != "1-URGENT")
+    c = load_table(spark, "customer", sf_dir)
+    o = load_table(spark, "orders", sf_dir).filter(
+        F.col("o_orderpriority") != "1-URGENT"
+    )
     per_cust = (
         c.join(o, c.c_custkey == o.o_custkey, "left_outer")
         .groupBy("c_custkey")
@@ -109,8 +96,8 @@ def q_disjunctive_revenue_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
     the full disjunction is evaluated post-join.  The part side is
     broadcast (small dim), so the whole query is one scan + one
     broadcast-hash-join + a 1-row aggregate."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
+    li = load_table(spark, "lineitem", sf_dir)
+    p = load_table(spark, "part", sf_dir)
     branch = lambda brand, smax, qlo, qhi: (
         (F.col("p_brand") == brand)
         & F.col("p_size").between(1, smax)
@@ -166,7 +153,7 @@ def q_sole_blame_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the same key the subsequent fact join uses, then a broadcast of
     the supplier dim and a TakeOrderedAndProject for the deterministic
     top-20 (tie-broken on s_name)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, "lineitem", sf_dir)
     # Two-stage distinct instead of a double countDistinct: the latter
     # plans as an Expand (2× row multiplication) with an extra exchange;
     # grouping to (order, supplier) first partial-combines both counts
@@ -180,8 +167,8 @@ def q_sole_blame_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_supp"),
         F.sum("has_r").alias("n_r"),
     )
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
-    s = _t(spark, sf_dir, "supplier")
+    o = load_table(spark, "orders", sf_dir).filter(F.col("o_orderstatus") == "F")
+    s = load_table(spark, "supplier", sf_dir)
     blamed = (
         li.filter(F.col("l_returnflag") == "R")
         .join(o.select("o_orderkey"), li.l_orderkey == F.col("o_orderkey"))
@@ -230,10 +217,10 @@ def q_idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     is computed as exact-DECIMAL sum / count so the comparison is
     bit-identical cross-engine (a plain double avg would be
     order-dependent)."""
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
+    c = load_table(spark, "customer", sf_dir)
+    n = load_table(spark, "nation", sf_dir)
     urgent = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, "orders", sf_dir)
         .filter(F.col("o_orderpriority") == "1-URGENT")
         .select("o_custkey")
     )
@@ -289,7 +276,7 @@ def q_skyline_parts_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     (price,size) domain is bounded by the value grid, not the row
     count; for an unbounded domain you'd pre-filter with per-partition
     local skylines first, which this plan composes with trivially.)"""
-    p = _t(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#23")
+    p = load_table(spark, "part", sf_dir).filter(F.col("p_brand") == "Brand#23")
     pts = p.groupBy(
         F.col("p_retailprice").alias("price"), F.col("p_size").alias("psize")
     ).agg(F.count(F.lit(1)).cast("bigint").alias("n_parts"))
@@ -355,8 +342,8 @@ def q_referential_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame
     engines (NULL never matches a join / IN)."""
     frames = []
     for label, child, fk, parent, pk in _FK_EDGES:
-        ch = _t(spark, sf_dir, child).select(F.col(fk).alias("fk"))
-        par = _t(spark, sf_dir, parent).select(F.col(pk).alias("pk")).distinct()
+        ch = load_table(spark, child, sf_dir).select(F.col(fk).alias("fk"))
+        par = load_table(spark, parent, sf_dir).select(F.col(pk).alias("pk")).distinct()
         frames.append(
             ch.join(par, ch.fk == par.pk, "left_outer")
             .agg(
@@ -497,7 +484,7 @@ def q_mad_robust_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # deviation join, the final rollup) and a single-row-group input
     # serializes each scan's map side on one core.
     li = spread(
-        _t(spark, sf_dir, "lineitem").select("l_returnflag", "l_extendedprice")
+        load_table(spark, "lineitem", sf_dir).select("l_returnflag", "l_extendedprice")
     )
     med = li.groupBy("l_returnflag").agg(
         F.percentile("l_extendedprice", F.lit(0.5)).alias("med")
@@ -561,10 +548,10 @@ def q_hll_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     region-level count plus a boolean asserting the merged estimate
     lands within 5% (HLL lgK=12 ⇒ ~1.6% rsd), the approx_distinct_parts
     oracle discipline."""
-    o = _t(spark, sf_dir, "orders").select("o_custkey")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_regionkey")
-    r = _t(spark, sf_dir, "region")
+    o = load_table(spark, "orders", sf_dir).select("o_custkey")
+    c = load_table(spark, "customer", sf_dir).select("c_custkey", "c_nationkey")
+    n = load_table(spark, "nation", sf_dir).select("n_nationkey", "n_regionkey")
+    r = load_table(spark, "region", sf_dir)
     fact = o.join(c, o.o_custkey == c.c_custkey).join(
         F.broadcast(n), c.c_nationkey == n.n_nationkey
     )
@@ -626,17 +613,17 @@ def q_local_supply_revenue_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows never materialize.  The date filter pushes to the orders scan;
     the region filter prunes nation (broadcast) before it touches the
     fact; the only big-big shuffle is lineitem ⋈ orders."""
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, "lineitem", sf_dir).select(
         "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"
     )
-    o = _t(spark, sf_dir, "orders").filter(
+    o = load_table(spark, "orders", sf_dir).filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
     ).select("o_orderkey", "o_custkey")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    c = load_table(spark, "customer", sf_dir).select("c_custkey", "c_nationkey")
+    s = load_table(spark, "supplier", sf_dir).select("s_suppkey", "s_nationkey")
+    n = load_table(spark, "nation", sf_dir)
+    r = load_table(spark, "region", sf_dir).filter(F.col("r_name") == "ASIA")
     asian_nations = n.join(
         F.broadcast(r), n.n_regionkey == r.r_regionkey
     ).select("n_nationkey", "n_name")
@@ -690,14 +677,14 @@ def q_bilateral_trade_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     arm's single-side implication (nation ∈ {NATION_1, NATION_2}) is
     pushed into the broadcast nation dims, shrinking both supplier and
     customer arms to the two-nation slice before the fact join."""
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, "lineitem", sf_dir).select(
         "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount", "l_shipdate"
     )
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    o = load_table(spark, "orders", sf_dir).select("o_orderkey", "o_custkey")
+    c = load_table(spark, "customer", sf_dir).select("c_custkey", "c_nationkey")
+    s = load_table(spark, "supplier", sf_dir).select("s_suppkey", "s_nationkey")
     pair = ("NATION_1", "NATION_2")
-    n2 = _t(spark, sf_dir, "nation").filter(F.col("n_name").isin(*pair))
+    n2 = load_table(spark, "nation", sf_dir).filter(F.col("n_name").isin(*pair))
     sn = n2.select(
         F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("supp_nation")
     )
@@ -753,15 +740,19 @@ def q_returned_item_customers_q10(spark: SparkSession, sf_dir: str) -> DataFrame
     filters push to the two fact scans before the orderkey shuffle;
     TakeOrderedAndProject keeps the top-20 merge on the driver at k
     rows."""
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_name", "c_nationkey")
-    o = _t(spark, sf_dir, "orders").filter(
+    c = load_table(spark, "customer", sf_dir).select(
+        "c_custkey", "c_name", "c_nationkey"
+    )
+    o = load_table(spark, "orders", sf_dir).filter(
         (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-07-01").cast("timestamp"))
     ).select("o_orderkey", "o_custkey")
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R").select(
-        "l_orderkey", "l_extendedprice", "l_discount"
+    li = (
+        load_table(spark, "lineitem", sf_dir)
+        .filter(F.col("l_returnflag") == "R")
+        .select("l_orderkey", "l_extendedprice", "l_discount")
     )
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    n = load_table(spark, "nation", sf_dir).select("n_nationkey", "n_name")
     joined = (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
@@ -804,11 +795,11 @@ def q_promo_revenue_share_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     denominator sum in exact DECIMAL and divide once in double (same
     formula text both engines).  Date filter pushes to the lineitem
     scan; the part dim is broadcast; the result is one row."""
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, "lineitem", sf_dir).filter(
         (F.col("l_shipdate") >= F.lit("1997-03-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-04-01").cast("timestamp"))
     ).select("l_partkey", "l_extendedprice", "l_discount")
-    p = _t(spark, sf_dir, "part").select("p_partkey", "p_type")
+    p = load_table(spark, "part", sf_dir).select("p_partkey", "p_type")
     rev = money("l_extendedprice") * factor(1 - F.col("l_discount"))
     promo = F.when(F.col("p_type") == "PROMO", rev).otherwise(
         F.lit(0).cast("decimal(12,2)")
@@ -852,7 +843,7 @@ def q_top_supplier_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: one partial-agg'd shuffle on suppkey, a 1-row max broadcast
     back over the k-row totals frame, then a broadcast supplier-dim
     join — the fact table is scanned once."""
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, "lineitem", sf_dir).filter(
         (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-04-01").cast("timestamp"))
     )
@@ -862,7 +853,7 @@ def q_top_supplier_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     mx = srev.agg(F.max("total").alias("mx"))
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
+    s = load_table(spark, "supplier", sf_dir).select("s_suppkey", "s_name")
     return (
         srev.crossJoin(F.broadcast(mx))
         .filter(F.col("total") == F.col("mx"))
@@ -912,7 +903,7 @@ def q_inverted_index_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashable by pandas-based result comparators.  The oracle tokenizes
     via the shared tx_mod.tokens builder so empty/whitespace-only
     documents yield no terms on either engine."""
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    d = load_table(spark, "documents", sf_dir).select("doc_id", "text")
     toks = d.select(
         "doc_id",
         F.explode(
@@ -1086,7 +1077,7 @@ def q_source_length_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     needed), and the doubles appear only in the final closed form.  One
     rank window + one aggregate, both on the source partitioning — a
     single shuffle."""
-    d = _t(spark, sf_dir, "documents").select("source", "n_chars")
+    d = load_table(spark, "documents", sf_dir).select("source", "n_chars")
     return gini_by_group(d, "source", "n_chars").select(
         "source",
         F.col("n").alias("n_docs"),
@@ -1196,7 +1187,7 @@ def q_lm_plausibility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     table joins back on the bigram key (vocabulary-sized, not
     stream-sized) — at 100 TB the prob table is the small side and
     broadcast-joins against the pair stream."""
-    d = _t(spark, sf_dir, "documents").select(
+    d = load_table(spark, "documents", sf_dir).select(
         "doc_id", "lang", F.expr(tx_mod.tokens(tx_mod.SPARK, "text")).alias("t")
     )
     pairs = d.select(
@@ -1358,11 +1349,11 @@ def q_priority_late_orders_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     inequality rides as a residual predicate on the equi-shuffle, so no
     row ever widens and the semi join emits each order at most once (no
     DISTINCT pass needed).  Date filter pushes to the orders scan."""
-    o = _t(spark, sf_dir, "orders").filter(
+    o = load_table(spark, "orders", sf_dir).filter(
         (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"))
     )
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
+    li = load_table(spark, "lineitem", sf_dir).select("l_orderkey", "l_shipdate")
     late = o.join(
         li,
         (o.o_orderkey == li.l_orderkey)
@@ -1399,7 +1390,7 @@ def q_forecast_revenue_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonical test that predicate pushdown and map-side combine are
     actually working; at 100 TB the row-group min/max stats skip most of
     the table before a byte decompresses."""
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, "lineitem", sf_dir).filter(
         (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
         & F.col("l_discount").between(0.05, 0.07)
@@ -1440,11 +1431,11 @@ def q_ship_delay_priority_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
     on both engines); the priority split is a conditional aggregate, so
     the result is |buckets| rows from one equi-join shuffle and one
     partial-agg'd aggregate."""
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, "lineitem", sf_dir).filter(
         (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
     ).select("l_orderkey", "l_shipdate")
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, "orders", sf_dir).select(
         "o_orderkey", "o_orderdate", "o_orderpriority"
     )
     delay = F.datediff(
@@ -1500,13 +1491,13 @@ def q_small_qty_revenue_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     BOTH branches at 100 TB when pushed into the aggregate's input (here
     kept on the full fact so the average matches TPC-H semantics —
     average over ALL lines of the part, not just the brand slice)."""
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, "lineitem", sf_dir).select(
         "l_partkey", "l_quantity", "l_extendedprice"
     )
     part_avg = li.groupBy("l_partkey").agg(
         (dsum(money("l_quantity")) / F.count(F.lit(1))).alias("avg_qty")
     )
-    p = _t(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#23").select(
+    p = load_table(spark, "part", sf_dir).filter(F.col("p_brand") == "Brand#23").select(
         "p_partkey"
     )
     return (
@@ -1554,16 +1545,16 @@ def q_profit_by_nation_year_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: part/supplier/nation broadcast (part pre-filtered by type),
     lineitem ⋈ orders is the one big-big shuffle, and the aggregate is
     partial-combined to |nations × years| rows."""
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, "lineitem", sf_dir).select(
         "l_orderkey", "l_partkey", "l_suppkey",
         "l_extendedprice", "l_discount", "l_quantity",
     )
-    p = _t(spark, sf_dir, "part").filter(F.col("p_type") == "ECONOMY").select(
+    p = load_table(spark, "part", sf_dir).filter(F.col("p_type") == "ECONOMY").select(
         "p_partkey", "p_retailprice"
     )
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
+    s = load_table(spark, "supplier", sf_dir).select("s_suppkey", "s_nationkey")
+    n = load_table(spark, "nation", sf_dir).select("n_nationkey", "n_name")
+    o = load_table(spark, "orders", sf_dir).select("o_orderkey", "o_orderdate")
 
     return (
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
@@ -1611,7 +1602,7 @@ def q_cume_dist_order_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB — 5 priority classes over orders means ~n/5 rows per
     partition, so for this query you'd pre-bucket by (priority,
     price-range) and merge, the same composition the skyline notes.)"""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, "orders", sf_dir)
     w = W.partitionBy("o_orderpriority").orderBy("o_totalprice")
     return (
         o.withColumn("cd", F.cume_dist().over(w))
@@ -1647,7 +1638,7 @@ def q_mom_revenue_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-agg'd shuffle).  Revenue aggregates in exact DECIMAL; the
     growth ratio is one double expression on exact inputs with a
     null-guarded first month."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, "orders", sf_dir)
     monthly = o.groupBy(
         (
             F.year("o_orderdate").cast("bigint") * 100
@@ -1745,9 +1736,9 @@ def q_supplier_cnt_by_part_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     expand.  At 100 TB the anti-join side stays broadcastable (flagged
     suppliers are a tiny fraction) and the group-key domain is bounded
     (brands × types × sizes), so the final shuffle is trivially small."""
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
+    li = load_table(spark, "lineitem", sf_dir).select("l_partkey", "l_suppkey")
     p = (
-        _t(spark, sf_dir, "part")
+        load_table(spark, "part", sf_dir)
         .filter(
             (F.col("p_brand") != "Brand#1")
             & ~F.col("p_type").like("MEDIUM%")
@@ -1756,7 +1747,7 @@ def q_supplier_cnt_by_part_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("p_partkey", "p_brand", "p_type", "p_size")
     )
     excluded = (
-        _t(spark, sf_dir, "supplier")
+        load_table(spark, "supplier", sf_dir)
         .filter(F.col("s_acctbal") < 0)
         .select("s_suppkey")
     )
@@ -1807,12 +1798,12 @@ def q_excess_stock_suppliers_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
     so neither supplier nor lineitem is ever re-shuffled.  At 100 TB the
     semi side stays a key list, exactly the Q20 'candidate keys first,
     dimension probe last' discipline."""
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, "lineitem", sf_dir).filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
     )
     old_parts = (
-        _t(spark, sf_dir, "part")
+        load_table(spark, "part", sf_dir)
         .filter(F.col("p_name").like("old%"))
         .select("p_partkey")
     )
@@ -1824,10 +1815,10 @@ def q_excess_stock_suppliers_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_suppkey")
         .distinct()
     )
-    n = _t(spark, sf_dir, "nation").filter(
+    n = load_table(spark, "nation", sf_dir).filter(
         F.col("n_name").isin("NATION_3", "NATION_7")
     )
-    s = _t(spark, sf_dir, "supplier").join(
+    s = load_table(spark, "supplier", sf_dir).join(
         F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey")
     )
     return s.join(
@@ -1877,13 +1868,13 @@ def q_important_stock_parts_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary).  Completes the achievable TPC-H analogue set: 22/22
     shapes have a counterpart (Q2 via cheapest_supplier_per_part, Q16/
     Q20 adapted in round 7 wave 1)."""
-    nat = _t(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_3")
+    nat = load_table(spark, "nation", sf_dir).filter(F.col("n_name") == "NATION_3")
     nat_sup = (
-        _t(spark, sf_dir, "supplier")
+        load_table(spark, "supplier", sf_dir)
         .join(F.broadcast(nat), F.col("s_nationkey") == F.col("n_nationkey"))
         .select("s_suppkey")
     )
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, "lineitem", sf_dir)
     pv = (
         li.join(F.broadcast(nat_sup), li.l_suppkey == F.col("s_suppkey"))
         .groupBy("l_partkey")

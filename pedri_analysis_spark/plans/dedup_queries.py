@@ -20,11 +20,11 @@ from pedri_analysis_spark.cache import materialize, released
 from pedri_analysis_spark.functions import textexpr as tx
 from pedri_analysis_spark.operators import chunking as chk
 from pedri_analysis_spark.operators import dedup as dd, spread
-from pedri_analysis_spark.plans.relational import QueryFn
+from pedri_analysis_spark.operators.similarity import round6, round6_sql
+from pedri_analysis_spark.plans.registry import query_table
 from pedri_analysis_spark.sources.tables import load_table
 
-QUERIES: dict[str, QueryFn] = {}
-ORACLE_SQL: dict[str, str] = {}
+QUERIES, ORACLE_SQL, _register = query_table()
 
 N_HASHES = 16
 BANDS = 8
@@ -33,16 +33,6 @@ SHINGLE_K = 3
 JACCARD_T = 0.6
 MAX_BUCKET = 64
 HAMMING_T = 1  # 32-bit simhash saturates on this shared-vocab corpus; <=1 keeps pairs meaningful
-
-
-def _register(name: str, oracle: str | None = None):
-    def deco(fn: QueryFn) -> QueryFn:
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE_SQL[name] = oracle
-        return fn
-
-    return deco
 
 
 # ---------------------------------------------------------------------------
@@ -678,11 +668,6 @@ PR_DAMP = 0.85
 PR_TOP = 20
 
 
-def _pr_round(expr: str) -> str:
-    """6-dp floor-round (both dialects share the arithmetic verbatim)."""
-    return f"floor(({expr}) * 1000000 + 0.5) / 1000000"
-
-
 def _pagerank_oracle() -> str:
     # Undirected bipartite graph: distinct (customer, supplier) trade
     # pairs from lineitem x orders, both edge directions.  Each iteration
@@ -696,7 +681,7 @@ def _pagerank_oracle() -> str:
             f"""
     r{k} AS (
       SELECT e.dst AS node,
-             {_pr_round(f"0.15e0 / nn.n + {PR_DAMP}e0 * CAST(sum(CAST({_pr_round('r.rank / d.deg')} AS DECIMAL(18,6))) AS DOUBLE)")} AS rank
+             {round6_sql(f"0.15e0 / nn.n + {PR_DAMP}e0 * CAST(sum(CAST({round6_sql('r.rank / d.deg')} AS DECIMAL(18,6))) AS DOUBLE)")} AS rank
       FROM edges e
       JOIN r{k - 1} r ON r.node = e.src
       JOIN deg d ON d.node = e.src
@@ -719,7 +704,7 @@ def _pagerank_oracle() -> str:
     ),
     nn AS (SELECT count(*)::DOUBLE AS n FROM deg),
     r0 AS (
-      SELECT node, {_pr_round('1e0 / nn.n')} AS rank FROM deg CROSS JOIN nn
+      SELECT node, {round6_sql('1e0 / nn.n')} AS rank FROM deg CROSS JOIN nn
     ),{",".join(iters)}
     SELECT node, rank FROM r{PR_ITERS}
     ORDER BY rank DESC, node ASC LIMIT {PR_TOP}
@@ -804,11 +789,8 @@ def q_pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     deg = deg.persist()
     nn = deg.agg(F.count(F.lit(1)).cast("double").alias("n"))
 
-    def rnd(col):
-        return F.floor(col * 1_000_000 + F.lit(0.5)) / 1_000_000
-
     ranks = deg.crossJoin(F.broadcast(nn)).select(
-        "node", rnd(F.lit(1.0) / F.col("n")).alias("rank")
+        "node", round6(F.lit(1.0) / F.col("n")).alias("rank")
     )
     for _ in range(PR_ITERS):
         # ranks and deg are node-sized (orders of magnitude below the
@@ -822,7 +804,7 @@ def q_pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         rank_deg = ranks.join(deg, "node").withColumnRenamed("node", "src")
         contrib = edges.join(rank_deg, "src").select(
             "dst",
-            rnd(F.col("rank") / F.col("deg"))
+            round6(F.col("rank") / F.col("deg"))
             .cast("decimal(18,6)")
             .alias("contrib"),
         )
@@ -832,7 +814,7 @@ def q_pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
             .crossJoin(F.broadcast(nn))
             .select(
                 "node",
-                rnd(
+                round6(
                     F.lit(0.15) / F.col("n")
                     + F.lit(PR_DAMP) * F.col("csum").cast("double")
                 ).alias("rank"),

@@ -56,27 +56,11 @@ from pedri_analysis_spark.functions import textexpr as tx
 from pedri_analysis_spark.operators import chunking as chk
 from pedri_analysis_spark.operators import similarity as sim
 from pedri_analysis_spark.operators.clustering import _dist2
-from pedri_analysis_spark.plans.relational import QueryFn
+from pedri_analysis_spark.plans.registry import query_table
 from pedri_analysis_spark.plans.similarity_queries import EMB_DIM, _dcos, spread
 from pedri_analysis_spark.sources.tables import load_table
 
-QUERIES: dict[str, QueryFn] = {}
-ORACLE_SQL: dict[str, str] = {}
-
-
-def _register(name: str, oracle: str | None = None):
-    def deco(fn: QueryFn) -> QueryFn:
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE_SQL[name] = oracle
-        return fn
-
-    return deco
-
-
-def _r6_sql(e: str) -> str:
-    # same floor-based 6dp rounding as operators.similarity.round6
-    return f"floor(({e}) * 1000000 + 0.5) / 1000000"
+QUERIES, ORACLE_SQL, _register = query_table()
 
 
 # ---------------------------------------------------------------------------
@@ -296,7 +280,7 @@ _D2_DUCK = (
 
 
 def _kcenter_oracle() -> str:
-    r6 = _r6_sql
+    r6 = sim.round6_sql
 
     def d2(a: str, b: str) -> str:
         return _D2_DUCK.format(a=a, b=b)
@@ -1384,7 +1368,7 @@ MRL_DIM = 16  # prefix dimensions retained
 
 
 def _mrl_oracle() -> str:
-    r6 = _r6_sql
+    r6 = sim.round6_sql
     return f"""
     WITH q AS (
       SELECT vec_id AS qid, embedding AS qvec
@@ -1905,7 +1889,7 @@ def _pi_power_iteration(cov: list[list[float]]) -> tuple[list[float], float]:
 
 
 def _pi_oracle() -> str:
-    r6 = _r6_sql
+    r6 = sim.round6_sql
     d = PI_DIM
     prod_dec = (
         "CAST(floor(((e.embedding[i.i]::DOUBLE - mi.m) "

@@ -117,8 +117,8 @@ from pedri_analysis_spark.cache import materialize
 from pedri_analysis_spark.functions import textexpr as tx
 from pedri_analysis_spark.operators import similarity as sim
 from pedri_analysis_spark.operators import spread
+from pedri_analysis_spark.plans.registry import query_table
 from pedri_analysis_spark.plans.relational import (
-    QueryFn,
     events_us,
     factor,
     money,
@@ -131,18 +131,7 @@ from pedri_analysis_spark.plans.similarity_queries import (
 )
 from pedri_analysis_spark.sources.tables import load_table
 
-QUERIES: dict[str, QueryFn] = {}
-ORACLE_SQL: dict[str, str] = {}
-
-
-def _register(name: str, oracle: str | None = None):
-    def deco(fn: QueryFn) -> QueryFn:
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE_SQL[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLE_SQL, _register = query_table()
 
 
 # ---------------------------------------------------------------------------
@@ -1595,10 +1584,6 @@ def q_watermark_late_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _edh_r6(e: str) -> str:
-    return f"floor(({e}) * 1000000 + 0.5) / 1000000"
-
-
 @_register(
     "embedding_dim_health",
     f"""
@@ -1613,13 +1598,13 @@ def _edh_r6(e: str) -> str:
       SELECT dim,
              count(*)::BIGINT AS n,
              CAST(sum(CAST(v AS DECIMAL(27,10))) AS DOUBLE) AS s,
-             CAST(sum(CAST({_edh_r6('v * v')} AS DECIMAL(18,6))) AS DOUBLE) AS s2
+             CAST(sum(CAST({sim.round6_sql('v * v')} AS DECIMAL(18,6))) AS DOUBLE) AS s2
       FROM x GROUP BY dim
     )
     SELECT dim::BIGINT AS dim,
-           {_edh_r6('s / n')} AS mean_r6,
-           {_edh_r6('s2 / n - (s / n) * (s / n)')} AS var_r6,
-           (CASE WHEN {_edh_r6('s2 / n - (s / n) * (s / n)')} = 0.0
+           {sim.round6_sql('s / n')} AS mean_r6,
+           {sim.round6_sql('s2 / n - (s / n) * (s / n)')} AS var_r6,
+           (CASE WHEN {sim.round6_sql('s2 / n - (s / n) * (s / n)')} = 0.0
                  THEN 1 ELSE 0 END)::BIGINT AS is_dead
     FROM agg
     """,
@@ -1663,15 +1648,15 @@ def q_embedding_dim_health(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum(F.col("v").cast("decimal(27,10)")).cast("double").alias("s"),
         F.sum(
-            F.expr(f"CAST({_edh_r6('v * v')} AS DECIMAL(18,6))")
+            F.expr(f"CAST({sim.round6_sql('v * v')} AS DECIMAL(18,6))")
         )
         .cast("double")
         .alias("s2"),
     )
-    var = F.expr(_edh_r6("s2 / n - (s / n) * (s / n)"))
+    var = F.expr(sim.round6_sql("s2 / n - (s / n) * (s / n)"))
     return agg.select(
         F.col("dim").cast("bigint").alias("dim"),
-        F.expr(_edh_r6("s / n")).alias("mean_r6"),
+        F.expr(sim.round6_sql("s / n")).alias("mean_r6"),
         var.alias("var_r6"),
         F.when(var == 0.0, 1).otherwise(0).cast("bigint").alias("is_dead"),
     )

@@ -72,21 +72,11 @@ from pyspark.sql import Window as W
 from pedri_analysis_spark.cache import materialize, released
 from pedri_analysis_spark.functions import textexpr as tx
 from pedri_analysis_spark.operators import spread
-from pedri_analysis_spark.plans.relational import QueryFn, factor, money
+from pedri_analysis_spark.operators.similarity import round6, round6_sql
+from pedri_analysis_spark.plans.registry import query_table
 from pedri_analysis_spark.sources.tables import load_table
 
-QUERIES: dict[str, QueryFn] = {}
-ORACLE_SQL: dict[str, str] = {}
-
-
-def _register(name: str, oracle: str | None = None):
-    def deco(fn: QueryFn) -> QueryFn:
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE_SQL[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLE_SQL, _register = query_table()
 
 
 # ---------------------------------------------------------------------------
@@ -1306,10 +1296,6 @@ PPR_ALPHA = 0.15
 PPR_TOP = 20
 
 
-def _ppr_round(expr: str) -> str:
-    return f"floor(({expr}) * 1000000 + 0.5) / 1000000"
-
-
 def _ppr_oracle() -> str:
     iters = []
     for k in range(1, PPR_ITERS + 1):
@@ -1317,13 +1303,13 @@ def _ppr_oracle() -> str:
             f"""
     r{k} AS MATERIALIZED (
       SELECT n.node,
-             {_ppr_round(
+             {round6_sql(
                  f"{PPR_ALPHA}e0 * n.restart + {PPR_DAMP}e0 * "
                  f"COALESCE(c.csum, 0e0)"
              )} AS rank
       FROM rs n LEFT JOIN (
         SELECT e.dst AS node,
-               CAST(sum(CAST({_ppr_round('r.rank / d.deg')} AS DECIMAL(18,6))) AS DOUBLE) AS csum
+               CAST(sum(CAST({round6_sql('r.rank / d.deg')} AS DECIMAL(18,6))) AS DOUBLE) AS csum
         FROM edges e
         JOIN r{k - 1} r ON r.node = e.src
         JOIN deg d ON d.node = e.src
@@ -1355,7 +1341,7 @@ def _ppr_oracle() -> str:
     rs AS (
       SELECT d.node,
              CASE WHEN s.node IS NOT NULL
-                  THEN {_ppr_round('1e0 / ns.n')} ELSE 0e0 END AS restart
+                  THEN {round6_sql('1e0 / ns.n')} ELSE 0e0 END AS restart
       FROM deg d LEFT JOIN seeds s ON s.node = d.node
       CROSS JOIN ns
     ),
@@ -1414,16 +1400,13 @@ def q_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeds_in = seeds.join(deg.select("node"), "node")
     ns = seeds_in.agg(F.count(F.lit(1)).cast("double").alias("n"))
 
-    def rnd(col):
-        return F.floor(col * 1_000_000 + F.lit(0.5)) / 1_000_000
-
     rs = (
         deg.select("node")
         .join(seeds_in.withColumn("is_seed", F.lit(1)), "node", "left")
         .crossJoin(F.broadcast(ns))
         .select(
             "node",
-            F.when(F.col("is_seed") == 1, rnd(F.lit(1.0) / F.col("n")))
+            F.when(F.col("is_seed") == 1, round6(F.lit(1.0) / F.col("n")))
             .otherwise(F.lit(0.0))
             .alias("restart"),
         )
@@ -1434,14 +1417,14 @@ def q_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         rank_deg = ranks.join(deg, "node").withColumnRenamed("node", "src")
         contrib = edges.join(rank_deg, "src").select(
             "dst",
-            rnd(F.col("rank") / F.col("deg")).cast("decimal(18,6)").alias("contrib"),
+            round6(F.col("rank") / F.col("deg")).cast("decimal(18,6)").alias("contrib"),
         )
         csum = contrib.groupBy(F.col("dst").alias("node")).agg(
             F.sum("contrib").alias("csum")
         )
         ranks = rs.join(csum, "node", "left").select(
             "node",
-            rnd(
+            round6(
                 F.lit(PPR_ALPHA) * F.col("restart")
                 + F.lit(PPR_DAMP)
                 * F.coalesce(F.col("csum").cast("double"), F.lit(0.0))

@@ -21,27 +21,13 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from pedri_analysis_spark.functions import textexpr as tx
-from pedri_analysis_spark.plans.relational import QueryFn, dsum, money
+from pedri_analysis_spark.plans.registry import query_table
+from pedri_analysis_spark.plans.relational import dsum, money
 from pedri_analysis_spark.sources.tables import load_table
 
-QUERIES: dict[str, QueryFn] = {}
-ORACLE_SQL: dict[str, str] = {}
+QUERIES, ORACLE_SQL, _register = query_table()
 
 DAY_US = tx.DAY_US
-
-
-def _register(name: str, oracle: str | None = None):
-    def deco(fn: QueryFn) -> QueryFn:
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE_SQL[name] = oracle
-        return fn
-
-    return deco
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, name, sf_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -91,8 +77,8 @@ def q_target_encode_mktsegment(spark: SparkSession, sf_dir: str) -> DataFrame:
     scanned exactly ONCE (a naive ``seg.agg()`` global branch would
     recompute the whole join/agg subtree — verified via .explain) and
     nothing wide survives the first aggregation."""
-    o = _t(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+    o = load_table(spark, "orders", sf_dir).select("o_custkey", "o_totalprice")
+    c = load_table(spark, "customer", sf_dir).select("c_custkey", "c_mktsegment")
     seg = (
         o.join(c, o.o_custkey == c.c_custkey)
         .groupBy("c_mktsegment")
@@ -149,8 +135,8 @@ def q_feature_hash_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver state); the aggregation shuffles at most {_FH_BUCKETS} groups
     after partial agg.  The hash is the engine-wide 60-bit md5 primitive
     (functions/textexpr.py), bit-identical in both dialects."""
-    o = _t(spark, sf_dir, "orders").select("o_custkey", "o_orderpriority")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+    o = load_table(spark, "orders", sf_dir).select("o_custkey", "o_orderpriority")
+    c = load_table(spark, "customer", sf_dir).select("c_custkey", "c_mktsegment")
     feats = o.join(c, o.o_custkey == c.c_custkey).select(
         F.concat_ws("|", "c_mktsegment", "o_orderpriority").alias("feat")
     )
@@ -219,7 +205,7 @@ def q_ewma_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar-bounded series (~2,500 rows for seven years regardless of
     fact-table size), so the single-partition window is safe by
     construction — same argument as the 1-row global rollups."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, "orders", sf_dir)
     daily = (
         o.groupBy(
             F.expr(tx.epoch_day(tx.SPARK, "o_orderdate")).alias(
@@ -372,7 +358,7 @@ def q_cheapest_supplier_per_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     struct-min form scans ONCE and shuffles partial-aggregated
     (partkey → struct) pairs only, then broadcast-joins the part/supplier
     dims.  Verified via .explain: single lineitem scan, one Exchange."""
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, "lineitem", sf_dir).select(
         "l_partkey", "l_suppkey", "l_extendedprice"
     )
     best = (
@@ -387,8 +373,8 @@ def q_cheapest_supplier_per_part(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("l_partkey", "b.min_price", "b.s_suppkey")
     )
-    p = _t(spark, sf_dir, "part").select("p_partkey", "p_name")
-    s = _t(spark, sf_dir, "supplier").select(
+    p = load_table(spark, "part", sf_dir).select("p_partkey", "p_name")
+    s = load_table(spark, "supplier", sf_dir).select(
         F.col("s_suppkey").alias("sup_key"), "s_name"
     )
     return (
@@ -427,7 +413,7 @@ def q_dictionary_encode_parttypes(spark: SparkSession, sf_dir: str) -> DataFrame
     same argument as the EWMA calendar series), never the fact table.
     Encoding the fact table back is then a broadcast hash join against
     this dictionary."""
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, "part", sf_dir)
     vocab = p.groupBy("p_type").agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     w = W.orderBy(F.desc("n"), F.asc("p_type"))
     return vocab.select(
@@ -489,7 +475,7 @@ def q_equidepth_price_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     N arrives as a 1-row count frame broadcast (allowlisted BNLJ). Money
     sums in DECIMAL per the determinism rules; lo/hi are exact doubles
     (min/max, no folding)."""
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, "lineitem", sf_dir).select(
         "l_orderkey", "l_linenumber", "l_extendedprice"
     )
     d = li.withColumn(
@@ -583,7 +569,7 @@ def q_ols_regression_price_qty(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one partial+final aggregate — six moments accumulate map-side
     and merge associatively; the result is |returnflag| = 3 rows.
     Embarrassingly parallel, zero joins, zero windows."""
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, "lineitem", sf_dir).select(
         "l_returnflag",
         F.expr("CAST(l_quantity AS BIGINT)").alias("xq"),
         F.expr(
@@ -679,7 +665,7 @@ def q_lift_decile_gains(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-domain-bounded; the decile rollup is 10 rows; N and totals
     ride a 1-row broadcast frame (allowlisted)."""
     k = LIFT_DECILES
-    e = _t(spark, sf_dir, "events").where(F.col("value").isNotNull()).select(
+    e = load_table(spark, "events", sf_dir).where(F.col("value").isNotNull()).select(
         F.expr("CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)").alias("v_c"),
         "event_id",
         F.expr(
@@ -793,7 +779,7 @@ def q_pareto_skyline_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     member-count join is a broadcast of the (smaller still) frontier
     frame against one fact scan.  For an unbounded value domain, swap
     the window for the equidepth band trick (banded prefix max)."""
-    p = _t(spark, sf_dir, "part").select(
+    p = load_table(spark, "part", sf_dir).select(
         F.expr(
             "CAST(CAST(p_retailprice AS DECIMAL(12,2)) * 100 AS BIGINT)"
         ).alias("v"),

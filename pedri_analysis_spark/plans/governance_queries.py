@@ -25,23 +25,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from pedri_analysis_spark.plans.relational import QueryFn, events_us
+from pedri_analysis_spark.plans.registry import query_table
+from pedri_analysis_spark.plans.relational import events_us
 from pedri_analysis_spark.sources.tables import load_table
 
-QUERIES: dict[str, QueryFn] = {}
-ORACLE_SQL: dict[str, str] = {}
+QUERIES, ORACLE_SQL, _register = query_table()
 
 DAY_US = 86_400_000_000
-
-
-def _register(name: str, oracle: str | None = None):
-    def deco(fn: QueryFn) -> QueryFn:
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE_SQL[name] = oracle
-        return fn
-
-    return deco
 
 
 # ---------------------------------------------------------------------------

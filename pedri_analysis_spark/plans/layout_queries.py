@@ -28,22 +28,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pedri_analysis_spark.plans.relational import QueryFn
+from pedri_analysis_spark.plans.registry import query_table
 from pedri_analysis_spark.functions import textexpr as tx
 from pedri_analysis_spark.sources.tables import load_table
 
-QUERIES: dict[str, QueryFn] = {}
-ORACLE_SQL: dict[str, str] = {}
-
-
-def _register(name: str, oracle: str | None = None):
-    def deco(fn: QueryFn) -> QueryFn:
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE_SQL[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLE_SQL, _register = query_table()
 
 
 Z_BITS = 8  # per-dimension quantization (16-bit z-key)
@@ -296,7 +285,7 @@ def ensure_bucketed_tables(
         frame = load_table(spark, src, sf_dir).select(*cols)
         want = _bucket_spec(key, n_buckets, frame.schema)
 
-        def _register_external() -> None:
+        def _create_external_table() -> None:
             col_ddl = ", ".join(
                 f"{f.name} {f.dataType.simpleString()}" for f in frame.schema.fields
             )
@@ -320,7 +309,7 @@ def ensure_bucketed_tables(
                 return False
 
         if _spec_matches():
-            _register_external()
+            _create_external_table()
             continue
         # Stale/mismatched/incomplete leftover on the final path: safe to
         # remove — a sibling's in-flight write lives in its own staging
@@ -366,7 +355,7 @@ def ensure_bucketed_tables(
                 f"{on_disk} failed and the path does not hold a valid "
                 f"published table (_SUCCESS + matching {BUCKET_SPEC_MARKER})"
             )
-        _register_external()
+        _create_external_table()
     return specs[0][0], specs[1][0]
 
 

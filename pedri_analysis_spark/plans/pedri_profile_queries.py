@@ -26,20 +26,9 @@ from pyspark.sql import functions as F
 
 from pedri_analysis_spark.plans.pedri_pipeline import lineup_report, profile_rows
 from pedri_analysis_spark.plans.pedri_queries import _EVT, PID, _events
-from pedri_analysis_spark.plans.relational import QueryFn
+from pedri_analysis_spark.plans.registry import query_table
 
-QUERIES: dict[str, QueryFn] = {}
-ORACLE_SQL: dict[str, str] = {}
-
-
-def _register(name: str, oracle: str | None = None):
-    def deco(fn: QueryFn) -> QueryFn:
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE_SQL[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLE_SQL, _register = query_table()
 
 
 # Shared CTEs: the player's team per match (mode of team.name over their

@@ -38,27 +38,16 @@ from pedri_analysis_spark.plans.pedri_pipeline import (
     season_summary_basic,
     xa_per_match,
 )
-from pedri_analysis_spark.plans.relational import QueryFn
+from pedri_analysis_spark.plans.registry import query_table
 from pedri_analysis_spark.sources.events import read_events
 from pedri_analysis_spark.viz import RADAR_METRICS
 
-QUERIES: dict[str, QueryFn] = {}
-ORACLE_SQL: dict[str, str] = {}
+QUERIES, ORACLE_SQL, _register = query_table()
 
 _REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 FIXTURE_EVENTS = os.path.join(_REPO, "tests", "fixtures", "events")
 
 PID = 30486
-
-
-def _register(name: str, oracle: str | None = None):
-    def deco(fn: QueryFn) -> QueryFn:
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE_SQL[name] = oracle
-        return fn
-
-    return deco
 
 
 _EVENTS_CACHE: "weakref.WeakKeyDictionary[SparkSession, DataFrame]" = (

@@ -17,24 +17,13 @@ from pyspark.sql import functions as F
 from pedri_analysis_spark.cache import materialize
 from pedri_analysis_spark.functions import textexpr as tx
 from pedri_analysis_spark.operators import spread
-from pedri_analysis_spark.plans.relational import QueryFn
+from pedri_analysis_spark.plans.registry import query_table
 from pedri_analysis_spark.sources.tables import load_table
 
-QUERIES: dict[str, QueryFn] = {}
-ORACLE_SQL: dict[str, str] = {}
+QUERIES, ORACLE_SQL, _register = query_table()
 
 
-def _register(name: str, oracle: str | None = None):
-    def deco(fn: QueryFn) -> QueryFn:
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE_SQL[name] = oracle
-        return fn
-
-    return deco
-
-
-def _r6(dialect: str, expr: str) -> str:
+def _r6(expr: str) -> str:
     """Cross-engine 6-dp rounding (floor(x*1e6 + 0.5)/1e6 — identical on
     both engines, unlike HALF_EVEN-vs-HALF_UP round())."""
     return f"floor(({expr}) * 1000000.0 + 0.5) / 1000000.0"
@@ -286,7 +275,7 @@ def _repetition_oracle() -> str:
     ),
     per_doc AS (
       SELECT doc_id, lang,
-             CAST({_r6(tx.DUCK, 'CAST(max(c) AS DOUBLE) / sum(c)')}
+             CAST({_r6('CAST(max(c) AS DOUBLE) / sum(c)')}
                   AS DECIMAL(18, 6)) AS r
       FROM cnt GROUP BY 1, 2
     )
@@ -331,9 +320,7 @@ def q_doc_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("c"))
     )
     per_doc = cnt.groupBy("doc_id", "lang").agg(
-        F.expr(
-            _r6(tx.SPARK, "CAST(max(c) AS DOUBLE) / sum(c)")
-        )
+        F.expr(_r6("CAST(max(c) AS DOUBLE) / sum(c)"))
         .cast("decimal(18,6)")
         .alias("r")
     )

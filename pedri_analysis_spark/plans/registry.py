@@ -1,7 +1,11 @@
 """Aggregates every query module's QUERIES / ORACLE_SQL into one registry.
 
-Query modules register into module-local dicts; this module unions them and
-is the single source the driver contract (``__spark_entry__``) reads.
+Every query module registers the same way:
+``QUERIES, ORACLE_SQL, _register = query_table()`` gives the module its own
+two dicts and an ``@_register(name, oracle)`` decorator that requires the
+query's DuckDB oracle and rejects a name registered twice.  This module
+unions the per-module tables and is the single source the driver contract
+(``__spark_entry__``) reads.
 
 Ordering matters: the correctness driver verifies queries in registration
 order and caps how many it checks per round (round 1 recorded exactly the
@@ -10,9 +14,10 @@ first 50).  The registry therefore rotates: it parses the committed
 orders queries least-recently-verified first — every round the driver's
 window lands on the queries with the stalest (or no) green verdict, so
 the whole catalog cycles through driver verification instead of a fixed
-50 being re-checked forever.  With no history present (fresh clone), the
-hand-curated ``_PRIORITY`` list pins the flagship pedri pipeline and one
-representative per family.  Everything is additionally covered every
+50 being re-checked forever.  With no history present, the order is
+registration order.  To force a green query's re-proof, delete its stamp
+from ``SOURCE_MANIFEST.json``: a green query with no stamp sorts into
+tier 1 (see ``_ordered``).  Everything is additionally covered every
 round by the repo's own driver-identical oracle suite
 (tests/test_oracle_parity.py).
 """
@@ -25,7 +30,6 @@ import hashlib
 import json
 import os
 import re
-import sys
 import warnings
 from collections.abc import Callable
 
@@ -33,86 +37,28 @@ from pyspark.sql import DataFrame, SparkSession
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
-# Names the driver's correctness window must include, in order.  Keep this
-# list at ~50 entries; append new flagship queries HERE as they are added.
-_PRIORITY = [
-    # flagship pedri pipeline (reference core/pedri_analysis*.py semantics)
-    "pedri_per_match_basic",
-    "pedri_per_match_extended",
-    "pedri_season_summary",
-    "pedri_attack_directions",
-    "pedri_xa",
-    "pedri_counterpress",
-    "pedri_progressive_receptions",
-    "pedri_zone_metrics",
-    "pedri_match_dates",
-    "pedri_per90",
-    "pedri_heat_grid",
-    "pedri_profile_build",
-    "pedri_lineup_positions",
-    # (pedri_trend_per90 / pedri_scatter_pp_pc / pedri_radar_percentiles
-    #  were driver-verified green in r03 AND r04; demoted to rotate the
-    #  three never-checked queries below into the window — pedri_heat_grid
-    #  keeps the viz-data family represented)
-    # structured-streaming windows (batch-equivalent oracle forms)
-    "tumbling_window_counts",
-    "sliding_window_sums",
-    "session_windows",
-    "streaming_dedup_counts",
-    "hierarchical_rollup_hours",
-    "resample_ffill_daily",
-    # dedup family (dedup_exact_by_lang was r1-green; corpus_curation_report
-    # keeps the exact-dedup rank logic inside the window)
-    # (minhash_near_dups was r1-green; the incremental variant runs the
-    #  same signature/bucket/verify stack end-to-end)
-    "incremental_dedup_verdicts",
-    # (simhash_near_dups was r1-green; the prefix variant represents simhash)
-    "simhash_prefix_near_dups",
-    "ngram_jaccard_near_dups",
-    "dedup_connected_components",
-    # text-analysis family (token_topk and lang_id_confusion had never
-    # had a driver CORRECTNESS row through r04 — rotated in)
-    "text_stats_by_lang",
-    "bpe_token_stats",
-    "token_topk",
-    "lang_id_confusion",
-    "doc_quality_scores",
-    "tfidf_top_terms",
-    "corpus_curation_report",
-    # training-data pipeline family
-    "sequence_packing",
-    "contamination_ngram_overlap",
-    "doc_repetition_stats",
-    "pii_redaction_counts",
-    "doc_chunking",
-    # multimodal family (binary_payload_chunks never driver-checked
-    # through r04 — rotated in)
-    "frame_sample_manifest",
-    "multimodal_feature_stub",
-    "binary_payload_chunks",
-    # similarity / ANN family
-    "cosine_topk_bruteforce",
-    "ivf_topk",
-    "embedding_near_dups",
-    "ann_lsh_near_dups",
-    "kmeans_embeddings",
-    "sq_recall_at_k",
-    # (the whole sampling family — sample_hash_bernoulli,
-    #  train_test_split_counts, class_balanced_sample,
-    #  stratified_source_mix — was driver-verified green in round 1
-    #  and is demoted to make room for never-checked queries)
-    # relational representatives (one per §2 operator group)
-    # (filter_project / join_revenue_by_nation / semi_join_big_spenders /
-    #  anti_join_no_orders / global_rollup / topk_orders / pricing_summary
-    #  were driver-verified green in round 1 and moved out of the window
-    #  to make room for never-checked queries)
-    "table_health_report",
-    "cdc_merge_orders",
-    "record_linkage_suppliers",
-    "funnel_conversion",
-    "winsorized_price_stats",
-    "quantile_binning_price",
-]
+
+def query_table() -> tuple[dict[str, QueryFn], dict[str, str], Callable]:
+    """A query module's ``(QUERIES, ORACLE_SQL, register)``.
+
+    ``@register(name, oracle)`` records the decorated query function under
+    ``name`` and its DuckDB oracle SQL beside it, so both dicts keep the
+    same keys in registration order.  Registering a name twice in one
+    table raises ValueError; ``all_queries`` checks across tables."""
+    queries: dict[str, QueryFn] = {}
+    oracles: dict[str, str] = {}
+
+    def register(name: str, oracle: str):
+        def deco(fn: QueryFn) -> QueryFn:
+            if name in queries:
+                raise ValueError(f"query {name!r} registered twice")
+            queries[name] = fn
+            oracles[name] = oracle
+            return fn
+
+        return deco
+
+    return queries, oracles, register
 
 
 def _modules():
@@ -282,11 +228,11 @@ def _module_maps(module_text: str, module_name: str):
 
 
 def _local_imports(node: ast.stmt, module_name: str):
-    """Imports written INSIDE a def's body (the dominant style in the
-    draft modules: ``from .retrieval_queries import _tf`` at function
-    scope).  Without these the closure hash silently misses the helper
-    (r12 advice: editing draft_r13._perm_diff left its caller's hash
-    unchanged, defeating the re-tier-on-helper-edit guarantee)."""
+    """Imports written INSIDE a def's body (common in the query
+    modules: ``from .retrieval_queries import _tf`` at function scope).
+    Without these the closure hash silently misses the helper (editing
+    draft_r13._perm_diff once left its caller's hash unchanged, defeating
+    the re-tier-on-helper-edit guarantee)."""
     from_imports: dict[str, tuple[str, str]] = {}
     mod_aliases: dict[str, str] = {}
     _collect_imports(
@@ -487,24 +433,8 @@ def _verification_history() -> tuple[dict[str, int], dict[str, int]]:
     return last_green, last_seen
 
 
-# One-round hand-forced driver re-proofs (VERDICT r11 ask #5): the three
-# similarity queries whose MODULES were rewritten around them in r10/r11.
-# Hand-forced re-proof slots.  CORRECTNESS_r12 delivered fresh green rows
-# for the three similarity re-proofs the r11 verdict demanded, so the set
-# is empty again; repopulate only when a verdict asks for a forced row.
-# r14 executed the scheduled 16-query pedri force-reprove; all 16 landed
-# green in CORRECTNESS_r14.json, so the set was CLEARED at r15 round-start
-# per the schedule.  Repopulate only when a verdict asks for a forced row.
-_FORCE_REPROVE: set[str] = set()
-
-
 def _ordered(names: dict[str, object]) -> list[str]:
     last_green, last_seen = _verification_history()
-    if not last_seen:
-        # fresh clone, no driver history: hand-curated flagship order
-        prio = [n for n in _PRIORITY if n in names]
-        rest = [n for n in names if n not in set(prio)]
-        return prio + rest
     reg = {n: i for i, n in enumerate(names)}
     manifest = _manifest()
     current = _current_hashes(names)
@@ -527,9 +457,9 @@ def _ordered(names: dict[str, object]) -> list[str]:
         # tier 1: green, but the query function's closure hash differs
         #         from the hash the green proof was recorded against
         #         (rewritten-since-green) — re-prove before trusting;
-        # tier 2: never driver-checked at all;
-        # tier 3: hand-forced re-proofs (_FORCE_REPROVE);
-        # tier 4: green on proven source — least-recently-verified
+        # tier 2: never driver-checked at all (with no history, every
+        #         query: registration order);
+        # tier 3: green on proven source — least-recently-verified
         #         first, so the window sweeps the whole catalog.
         green, seen = last_green.get(n, -1), last_seen.get(n, -1)
         if seen > green:
@@ -538,10 +468,8 @@ def _ordered(names: dict[str, object]) -> list[str]:
             tier = 1
         elif seen < 0:
             tier = 2
-        elif n in _FORCE_REPROVE:
-            tier = 3
         else:
-            tier = 4
+            tier = 3
         return (tier, green, reg[n])
 
     return sorted(names, key=key)

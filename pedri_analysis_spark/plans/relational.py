@@ -28,32 +28,14 @@ disagree on decimal-half rounding of doubles).  The discipline used here:
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pedri_analysis_spark.plans.registry import query_table
 from pedri_analysis_spark.sources.tables import load_table
 
-QueryFn = Callable[[SparkSession, str], DataFrame]
-
-QUERIES: dict[str, QueryFn] = {}
-ORACLE_SQL: dict[str, str] = {}
-
-
-def _register(name: str, oracle: str | None = None):
-    def deco(fn: QueryFn) -> QueryFn:
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE_SQL[name] = oracle
-        return fn
-
-    return deco
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, name, sf_dir)
+QUERIES, ORACLE_SQL, _register = query_table()
 
 
 def money(c: str | Column) -> Column:
@@ -140,7 +122,7 @@ def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     combine reduces the shuffle to |groups|×partitions rows. Filter and the
     read columns push into the parquet scan.
     """
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, "lineitem", sf_dir)
     price = money("l_extendedprice")
     disc_price = price * factor(1 - F.col("l_discount"))
     charge = disc_price * factor(1 + F.col("l_tax"))
@@ -179,7 +161,7 @@ def q_filter_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: fully pushed down — predicate to parquet row groups, 5-column
     ReadSchema; no shuffle at all (narrow pipeline). ``net_price`` is a
     per-row double expression — deterministic, no aggregation involved."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, "lineitem", sf_dir)
     return li.filter(
         (F.col("l_shipdate") >= F.lit("1995-01-01 00:00:00").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-01-01 00:00:00").cast("timestamp"))
@@ -212,7 +194,7 @@ def q_global_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: partial aggregation then a single final reduce — the classic
     2-stage global agg; COUNT(DISTINCT) expands to a 2-shuffle expand plan
     Catalyst handles natively."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, "lineitem", sf_dir)
     n = F.count(F.lit(1))
     return li.agg(
         dsum(money("l_quantity")).alias("total_qty"),
@@ -241,7 +223,7 @@ def q_global_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ratio_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Guarded ratio/rate derivation (SURVEY A5: pass_pct / per-90 with
     divide-by-zero guard, reference core/pedri_analysis.py:266-297)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, "lineitem", sf_dir)
     n = F.count(F.lit(1))
     sum_qty = F.sum(money("l_quantity"))
     return li.groupBy("l_returnflag").agg(
@@ -276,7 +258,7 @@ def q_mode_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     for determinism.
 
     Scale: groupBy-count then TakeOrderedAndProject(1) — no global sort."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, "orders", sf_dir)
     return (
         o.groupBy(F.col("o_orderpriority").alias("priority"))
         .agg(F.count(F.lit(1)).alias("n"))
@@ -300,7 +282,7 @@ def q_histogram_acctbal(spark: SparkSession, sf_dir: str) -> DataFrame:
     core/pedri_analysis.py:383-395). The scalable formulation: bucket index
     is column math, the count is a hash aggregate — works at any data size,
     unlike collecting values to the driver."""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, "customer", sf_dir)
     n = F.count(F.lit(1))
     return c.groupBy(
         F.floor(F.col("c_acctbal") / 500).cast("long").alias("bucket")
@@ -321,7 +303,7 @@ def q_histogram2d_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     """2-D histogram / heat grid (SURVEY A11: np.histogram2d on the 48x32
     pitch grid, reference core/pedri_analysis_extended.py:562-565). Same
     shape: groupBy(bucket_x, bucket_y).count() — the 100 TB-safe heatmap."""
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, "part", sf_dir)
     return p.groupBy(
         F.floor(F.col("p_retailprice") / 100).cast("long").alias("price_bucket"),
         F.col("p_size").alias("size_bucket"),
@@ -343,7 +325,7 @@ def q_histogram2d_part(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_rollup_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hierarchical ROLLUP with grouping id (beyond-reference per SURVEY
     §2.4 closing note: grouping sets come native in the rebuild)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, "lineitem", sf_dir)
     return (
         li.rollup("l_returnflag", "l_linestatus")
         .agg(
@@ -384,9 +366,9 @@ def q_join_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: `nation` (25 rows) is explicitly broadcast; orders⋈customer
     shuffles on the key — AQE will switch to broadcast when customer fits.
     Aggregation is partial+final."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
+    o = load_table(spark, "orders", sf_dir)
+    c = load_table(spark, "customer", sf_dir)
+    n = load_table(spark, "nation", sf_dir)
     return (
         o.join(c, o.o_custkey == c.c_custkey)
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
@@ -419,10 +401,10 @@ def q_join_star_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: all three dimension tables broadcast — the fact table never
     shuffles for the join; the only shuffle is the final 5-group agg."""
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
+    li = load_table(spark, "lineitem", sf_dir)
+    s = load_table(spark, "supplier", sf_dir)
+    n = load_table(spark, "nation", sf_dir)
+    r = load_table(spark, "region", sf_dir)
     revenue = money("l_extendedprice") * factor(1 - F.col("l_discount"))
     return (
         li.join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
@@ -450,8 +432,8 @@ def q_semi_join_big_spenders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: semi-join keeps only the left row, no row explosion; the filter
     on orders pushes down before the join."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 200000)
+    c = load_table(spark, "customer", sf_dir)
+    o = load_table(spark, "orders", sf_dir).filter(F.col("o_totalprice") > 200000)
     return (
         c.join(o, c.c_custkey == o.o_custkey, "left_semi")
         .groupBy(F.col("c_mktsegment").alias("segment"))
@@ -472,9 +454,9 @@ def q_semi_join_big_spenders(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_anti_join_no_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-anti join / NOT EXISTS (set-difference shape; SURVEY §2.6)."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 400000)
-    n = _t(spark, sf_dir, "nation")
+    c = load_table(spark, "customer", sf_dir)
+    o = load_table(spark, "orders", sf_dir).filter(F.col("o_totalprice") > 400000)
+    n = load_table(spark, "nation", sf_dir)
     return (
         c.join(o, c.c_custkey == o.o_custkey, "left_anti")
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
@@ -555,7 +537,7 @@ def q_topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: Spark plans TakeOrderedAndProject — per-partition heap + driver
     merge of K rows; no global sort."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, "orders", sf_dir)
     return (
         o.orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
         .limit(20)
@@ -587,7 +569,7 @@ def q_window_latest_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: single shuffle on the partition key; AQE handles skewed
     customers. For top-1 Spark can also use max_by, but the window form
     generalizes to top-k."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, "orders", sf_dir)
     w = W.partitionBy("o_custkey").orderBy(F.desc("o_orderdate"), F.desc("o_orderkey"))
     return (
         o.withColumn("rn", F.row_number().over(w))
@@ -614,7 +596,7 @@ def q_window_latest_order(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_window_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Running-sum frame window (SURVEY O5's cumulative scan shape).
     Decimal accumulation keeps the running values exact cross-engine."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, "orders", sf_dir)
     w = (
         W.partitionBy("o_custkey")
         .orderBy("o_orderdate", "o_orderkey")
@@ -661,7 +643,7 @@ def q_window_lag_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_multi_key_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-key sort + limit (SURVEY O1/O3: date-then-id ordering,
     reference core/pedri_analysis.py:621-634)."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, "orders", sf_dir)
     return (
         o.orderBy(F.asc("o_orderdate"), F.asc("o_orderkey"))
         .limit(100)
@@ -682,7 +664,8 @@ def q_multi_key_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_distinct_flag_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DISTINCT (SURVEY A13/O4). Scale: partial-agg dedup before shuffle."""
-    return _t(spark, sf_dir, "lineitem").select("l_returnflag", "l_linestatus").distinct()
+    li = load_table(spark, "lineitem", sf_dir)
+    return li.select("l_returnflag", "l_linestatus").distinct()
 
 
 @_register(
@@ -697,8 +680,10 @@ def q_distinct_flag_status(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_setops_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT / EXCEPT / UNION ALL over key sets (SURVEY §2.6)."""
-    cn = _t(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey")).distinct()
-    sn = _t(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey")).distinct()
+    cn = load_table(spark, "customer", sf_dir)
+    cn = cn.select(F.col("c_nationkey").alias("nationkey")).distinct()
+    sn = load_table(spark, "supplier", sf_dir)
+    sn = sn.select(F.col("s_nationkey").alias("nationkey")).distinct()
     both = cn.intersect(sn).withColumn("tag", F.lit("both"))
     cust_only = cn.exceptAll(sn).withColumn("tag", F.lit("customer_only"))
     return both.unionAll(cust_only)

@@ -9,8 +9,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from pedri_analysis_spark.plans.registry import query_table
 from pedri_analysis_spark.plans.relational import (
-    QueryFn,
     dsum,
     epoch_us,
     events_us,
@@ -20,22 +20,7 @@ from pedri_analysis_spark.plans.relational import (
 from pedri_analysis_spark.operators.quantiles import exact_quantiles
 from pedri_analysis_spark.sources.tables import load_table
 
-QUERIES: dict[str, QueryFn] = {}
-ORACLE_SQL: dict[str, str] = {}
-
-
-def _register(name: str, oracle: str | None = None):
-    def deco(fn: QueryFn) -> QueryFn:
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE_SQL[name] = oracle
-        return fn
-
-    return deco
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, name, sf_dir)
+QUERIES, ORACLE_SQL, _register = query_table()
 
 
 @_register(
@@ -52,7 +37,7 @@ def q_pivot_qty_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot (wide aggregation): linestatus values become columns. Spark
     plans pivot as a single pass of conditional aggregates — identical to
     the oracle's CASE formulation, no extra shuffle."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, "lineitem", sf_dir)
     out = (
         li.groupBy("l_returnflag")
         .pivot("l_linestatus", ["O", "F"])
@@ -80,7 +65,7 @@ def q_pivot_qty_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_cube_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE: all 2^n grouping-set combinations in one pass (Expand +
     single aggregate — not 4 separate scans)."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, "orders", sf_dir)
     return (
         o.cube("o_orderstatus", "o_orderpriority")
         .agg(
@@ -112,7 +97,7 @@ def q_percent_rank_acctbal(spark: SparkSession, sf_dir: str) -> DataFrame:
     values, reference core/pedri_analysis.py:488-514, generalized).
     Ties share a rank so the result is order-insensitive; the
     (rank-1)/(n-1) division is one double op — identical cross-engine."""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, "customer", sf_dir)
     w = W.partitionBy("c_nationkey").orderBy("c_acctbal")
     return c.select(
         "c_custkey", "c_nationkey", F.percent_rank().over(w).alias("pr")
@@ -134,7 +119,7 @@ def q_percentiles_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact linear-interpolated percentiles (both engines implement the
     same continuous-quantile definition). At 100 TB switch to
     percentile_approx (t-digest) — kept exact here for oracle checking."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, "lineitem", sf_dir)
     return li.groupBy("l_returnflag").agg(
         F.expr("percentile(l_quantity, 0.5)").alias("p50"),
         F.expr("percentile(l_quantity, 0.9)").alias("p90"),
@@ -157,7 +142,7 @@ def q_json_props_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Schema-on-read JSON field extraction from a string column (SURVEY
     P1's null-safe dynamic access, generalized to the events.props
     payload): get_json_object is a per-row JVM expression, no UDF."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, "events", sf_dir)
     k = F.get_json_object("props", "$.k").cast("bigint")
     return ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
@@ -179,7 +164,7 @@ def q_json_props_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_orders_by_month(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Calendar bucketing (date_trunc month) — the calendar-aware cousin
     of the epoch-bucket windows (SURVEY O1's date handling)."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, "orders", sf_dir)
     return (
         o.groupBy(
             F.unix_micros(
@@ -209,7 +194,7 @@ def q_orders_by_month(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_string_funcs_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scalar string function battery (SURVEY §2.7 generalization):
     upper/substr/length/replace/concat + LIKE pushdown."""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, "customer", sf_dir)
     return c.filter(F.col("c_name").like("%1%")).select(
         "c_custkey",
         F.upper("c_name").alias("name_upper"),
@@ -306,7 +291,7 @@ def q_hexbin_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     NOTE: round() here is fine cross-engine — both engines round the SAME
     double values (the axial transforms are identical expressions), and
     hex centers are not adversarially close to .5 boundaries in this data."""
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, "part", sf_dir)
     qf, rf = _hex_sql("p_retailprice / 100.0", "p_size * 1.0")
     axial = p.select(
         F.expr(qf).alias("qf"),
@@ -342,9 +327,9 @@ def q_cross_join_region_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross join (SURVEY §2.3 closing note: theta/cross enter via the
     general engine) over two tiny sides + a scalar-subquery-shaped count
     (expressed as a pre-aggregated broadcast join in Spark)."""
-    r = _t(spark, sf_dir, "region").select(F.col("r_name").alias("region"))
+    r = load_table(spark, "region", sf_dir).select(F.col("r_name").alias("region"))
     seg_counts = (
-        _t(spark, sf_dir, "customer")
+        load_table(spark, "customer", sf_dir)
         .groupBy(F.col("c_mktsegment").alias("segment"))
         .agg(F.count(F.lit(1)).alias("segment_customers"))
     )
@@ -450,7 +435,7 @@ def q_salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     see, while salting fixes the partition layout up front for known-hot
     keys. Salt values never reach the output, so determinism is
     unaffected."""
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, "lineitem", sf_dir).select(
         F.when(F.col("l_partkey") % 10 < 7, F.lit(0))
         .otherwise(F.col("l_partkey"))
         .alias("jkey"),
@@ -462,7 +447,7 @@ def q_salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "salt", F.pmod(F.hash("l_orderkey", "l_linenumber"), F.lit(SKEW_SALTS))
     )
     dim = (
-        _t(spark, sf_dir, "part")
+        load_table(spark, "part", sf_dir)
         .groupBy(
             F.when(F.col("p_partkey") % 10 < 7, F.lit(0))
             .otherwise(F.col("p_partkey"))
@@ -500,7 +485,7 @@ def q_salted_segment_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark's partial aggregation already handles count-like skew; explicit
     salting is the pattern for high-cardinality payloads (collect_set,
     exact distinct) where map-side combine can't shrink the hot key."""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, "customer", sf_dir)
     salted = c.withColumn("_salt", F.pmod(F.hash("c_custkey"), F.lit(16)))
     partial = salted.groupBy(
         F.col("c_mktsegment").alias("segment"), F.col("_salt")
@@ -540,7 +525,7 @@ def q_approx_distinct_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the driver hash check verifies the sketch, not just the schema.
     The exact side is test-harness-only; at 100 TB you run the sketch
     alone."""
-    li = _t(spark, sf_dir, "lineitem").select("l_returnflag", "l_partkey")
+    li = load_table(spark, "lineitem", sf_dir).select("l_returnflag", "l_partkey")
     # Two-stage exact distinct (partial-agg on (flag, partkey), then count)
     # instead of count_distinct mixed into the same agg, which would force
     # an Expand over the full scan. HLL sketches are duplicate-insensitive,
@@ -584,7 +569,7 @@ def q_approx_percentiles_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the target fraction (accuracy=10000 ⇒ theoretical slack 0.01%,
     checked generously). One extra broadcast join of the k-row quantile
     table — the verification pass exists only for the harness."""
-    li = _t(spark, sf_dir, "lineitem").select("l_returnflag", "l_extendedprice")
+    li = load_table(spark, "lineitem", sf_dir).select("l_returnflag", "l_extendedprice")
     ap = li.groupBy("l_returnflag").agg(
         F.percentile_approx("l_extendedprice", 0.5, 10000).alias("p50_approx"),
         F.percentile_approx("l_extendedprice", 0.99, 10000).alias("p99_approx"),
@@ -629,7 +614,7 @@ def q_grouping_sets_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
     NOT the cross product a CUBE would add). Spark plans this as a single
     Expand + hash aggregate, same as cube/rollup; grouping_id
     disambiguates which set each output row belongs to."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, "lineitem", sf_dir)
     li.createOrReplaceTempView("gs_lineitem")
     return li.sparkSession.sql(
         """
@@ -689,7 +674,7 @@ def q_stats_moments_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combinable hash agg — the only scalable way to get
     order-independent statistics at 100 TB (a streaming Welford pass is
     sequential-order-dependent and not partition-stable)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, "lineitem", sf_dir)
     dec = lambda c: F.col(c).cast("decimal(12,2)")
     moments = li.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).cast("double").alias("n"),
@@ -746,7 +731,7 @@ def q_band_join_event_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side, no shuffle until the final aggregate. With many bands,
     pre-sort the band edges and use a binary-search expression or
     width_bucket instead."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, "events", sf_dir)
     bands = ev.sparkSession.createDataFrame(VALUE_BANDS, "band string, lo double, hi double")
     return (
         ev.join(
@@ -825,7 +810,7 @@ def q_ntile_customer_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ntile quantile bucketing per segment — the window-function route to
     equal-frequency binning (vs. percentile cutpoints). Deterministic
     because the ORDER BY is a total order (balance, then key)."""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, "customer", sf_dir)
     w = W.partitionBy("c_mktsegment").orderBy(
         F.desc("c_acctbal"), F.asc("c_custkey")
     )
@@ -858,7 +843,7 @@ def q_correlated_above_nation_avg(spark: SparkSession, sf_dir: str) -> DataFrame
     predicate is a strict inequality on values ~1e3 apart, far above ulp
     noise; for hash-matched OUTPUT of averages, use the decimal-sum
     pattern (stats_moments_exact)."""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, "customer", sf_dir)
     c.createOrReplaceTempView("corr_customer")
     return c.sparkSession.sql(
         """
@@ -901,11 +886,13 @@ def q_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     (orderdate, orderkey); timestamps compared/emitted as epoch micros."""
     from pyspark.sql import functions as F
 
-    c = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    o = _t(spark, sf_dir, "orders").filter(
+    c = load_table(spark, "customer", sf_dir).filter(
+        F.col("c_mktsegment") == "BUILDING"
+    )
+    o = load_table(spark, "orders", sf_dir).filter(
         F.col("o_orderdate") < F.expr("TIMESTAMP '1998-01-01'")
     )
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, "lineitem", sf_dir).filter(
         F.col("l_shipdate") > F.expr("TIMESTAMP '1998-01-01'")
     )
     return (
@@ -965,7 +952,7 @@ def q_quantile_binning_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     bins.  Cutpoint doubles are bit-identical cross-engine (both
     implement linear-interpolated continuous quantiles; proven by
     percentiles_quantity), so strict-inequality binning is exact."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, "lineitem", sf_dir)
     cut = exact_quantiles(
         li, "l_extendedprice", [0.25, 0.50, 0.75], names=["q1", "q2", "q3"]
     )
@@ -1210,7 +1197,7 @@ def q_winsorized_price_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     means aggregate in DECIMAL so both engines sum order-independently.
     Cutpoint doubles are bit-identical cross-engine, so clip decisions
     are exact."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, "lineitem", sf_dir)
     cut = exact_quantiles(
         li, "l_extendedprice", [0.01, 0.99], names=["lo", "hi"]
     )
@@ -1277,7 +1264,7 @@ def q_cdc_merge_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit record a production merge job emits. Updated values compose
     identically cross-engine because the mutation (+100.0) is a
     deterministic IEEE double op and checksums aggregate in DECIMAL."""
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, "orders", sf_dir).select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
     updates = (
@@ -1525,7 +1512,9 @@ def q_record_linkage_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pedri_analysis_spark.functions import textexpr as tx
     from pedri_analysis_spark.operators import chunking as chk
 
-    sup = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey", "s_name")
+    sup = load_table(spark, "supplier", sf_dir).select(
+        "s_suppkey", "s_nationkey", "s_name"
+    )
     sup = chk.mod_chunk(sup, ["s_nationkey"], "s_suppkey", LINKAGE_CHUNK)
     cg = lambda e: tx.char_ngrams(tx.SPARK, e, 3)
     clean = sup.select(
@@ -1605,7 +1594,7 @@ def q_unpivot_lineitem_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
     emits one row per measure; the only exchange is the partial-agg'd
     groupBy.  The measure columns are pruned at the scan (ReadSchema is
     exactly the 4 used columns)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, "lineitem", sf_dir)
     long = li.unpivot(
         ["l_returnflag"],
         ["l_quantity", "l_extendedprice", "l_discount"],
@@ -1662,14 +1651,16 @@ def q_market_share_by_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     locally; every other arm — customer->nation->region and
     supplier->nation — collapses to broadcast hash joins.  The final
     aggregate is partial-agg'd to |years| rows."""
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, "lineitem", sf_dir).select(
         "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"
     )
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_orderdate")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    o = load_table(spark, "orders", sf_dir).select(
+        "o_orderkey", "o_custkey", "o_orderdate"
+    )
+    c = load_table(spark, "customer", sf_dir).select("c_custkey", "c_nationkey")
+    n = load_table(spark, "nation", sf_dir)
+    r = load_table(spark, "region", sf_dir)
+    s = load_table(spark, "supplier", sf_dir).select("s_suppkey", "s_nationkey")
 
     euro_cust = (
         c.join(
@@ -1747,17 +1738,17 @@ def q_big_orders_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     BEFORE any join — the join probe side is |big orders|, not
     |lineitem|; orders joins on its key, customer broadcasts, and the
     top-100 is TakeOrderedAndProject (no global sort)."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
+    li = load_table(spark, "lineitem", sf_dir).select("l_orderkey", "l_quantity")
     big = (
         li.groupBy("l_orderkey")
         .agg(F.sum(money("l_quantity")).alias("sum_qty_dec"))
         .filter(F.col("sum_qty_dec") > Q18_QTY_THRESHOLD)
         .select("l_orderkey", F.col("sum_qty_dec").cast("double").alias("sum_qty"))
     )
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, "orders", sf_dir).select(
         "o_orderkey", "o_custkey", "o_orderdate", "o_totalprice"
     )
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_name")
+    c = load_table(spark, "customer", sf_dir).select("c_custkey", "c_name")
     return (
         big.join(o, big.l_orderkey == o.o_orderkey)
         .join(F.broadcast(c), o.o_custkey == c.c_custkey)

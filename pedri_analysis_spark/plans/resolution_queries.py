@@ -31,25 +31,11 @@ from pyspark.sql import functions as F
 
 from pedri_analysis_spark.cache import materialize
 from pedri_analysis_spark.functions import textexpr as tx
-from pedri_analysis_spark.plans.relational import QueryFn, events_us
+from pedri_analysis_spark.plans.registry import query_table
+from pedri_analysis_spark.plans.relational import events_us
 from pedri_analysis_spark.sources.tables import load_table
 
-QUERIES: dict[str, QueryFn] = {}
-ORACLE_SQL: dict[str, str] = {}
-
-
-def _register(name: str, oracle: str | None = None):
-    def deco(fn: QueryFn) -> QueryFn:
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE_SQL[name] = oracle
-        return fn
-
-    return deco
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, name, sf_dir)
+QUERIES, ORACLE_SQL, _register = query_table()
 
 
 # ---------------------------------------------------------------------------
@@ -90,7 +76,7 @@ def q_fuzzy_part_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline as the LSH dedup; a hot word-block would get the same
     bucket cap.  The distinct-names frame is dimension-sized (name
     vocabulary, not row count)."""
-    names = _t(spark, sf_dir, "part").select("p_name").distinct()
+    names = load_table(spark, "part", sf_dir).select("p_name").distinct()
     # dimension-sized (name vocabulary): cheap to recompute per join leg,
     # so no persist — at 100 TB this frame is the one to cache/broadcast
     w = names.select(
@@ -164,7 +150,7 @@ def q_sorted_neighborhood_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shared intersect/union formula text of the LSH verify, so both
     engines compute the identical single IEEE division."""
     d = (
-        _t(spark, sf_dir, "documents")
+        load_table(spark, "documents", sf_dir)
         .filter(F.length(F.trim("text")) > 0)
         .select(
             "doc_id",
@@ -235,7 +221,7 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partial-agg'd shuffle on orderkey; pair fan-out is the same C(lines,2)
     # per order, generated by nested array transforms inside codegen.
     # sort_array gives pa < pb for free; collect_set absorbs the distinct.
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    li = load_table(spark, "lineitem", sf_dir).select("l_orderkey", "l_partkey")
     baskets = li.groupBy("l_orderkey").agg(
         F.sort_array(F.collect_set("l_partkey")).alias("ps")
     )
@@ -449,7 +435,7 @@ def q_association_rules_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pair↔item-count joins hash on the item key; the 1-row order
     total broadcasts."""
     e = _copurchase_edges(spark, sf_dir)
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, "lineitem", sf_dir)
     n = li.agg(F.countDistinct("l_orderkey").cast("bigint").alias("n_orders"))
     per_item = li.groupBy("l_partkey").agg(
         F.countDistinct("l_orderkey").cast("bigint").alias("n_ord")

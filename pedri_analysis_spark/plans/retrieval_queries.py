@@ -31,21 +31,10 @@ from pyspark.sql import functions as F
 
 from pedri_analysis_spark.functions import textexpr as tx
 from pedri_analysis_spark.operators import similarity as sim, spread
-from pedri_analysis_spark.plans.relational import QueryFn
+from pedri_analysis_spark.plans.registry import query_table
 from pedri_analysis_spark.sources.tables import load_table
 
-QUERIES: dict[str, QueryFn] = {}
-ORACLE_SQL: dict[str, str] = {}
-
-
-def _register(name: str, oracle: str | None = None):
-    def deco(fn: QueryFn) -> QueryFn:
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE_SQL[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLE_SQL, _register = query_table()
 
 
 # Fixed query-term set (the "search query"); constants are part of the

@@ -29,11 +29,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from pedri_analysis_spark.functions import textexpr as tx
-from pedri_analysis_spark.plans.relational import QueryFn
+from pedri_analysis_spark.plans.registry import query_table
 from pedri_analysis_spark.sources.tables import load_table
 
-QUERIES: dict[str, QueryFn] = {}
-ORACLE_SQL: dict[str, str] = {}
+QUERIES, ORACLE_SQL, _register = query_table()
 
 # hash-bucket space: h mod 10_000 gives 0.01% rate resolution
 BUCKETS = 10_000
@@ -49,16 +48,6 @@ SOURCE_RATES_BP = {  # per-source mixture quota (basis points)
     "src5": 1_000,
 }
 DEFAULT_RATE_BP = 2_500
-
-
-def _register(name: str, oracle: str | None = None):
-    def deco(fn: QueryFn) -> QueryFn:
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE_SQL[name] = oracle
-        return fn
-
-    return deco
 
 
 def _bucket(dialect: str, key_expr: str, seed: str) -> str:

@@ -18,11 +18,10 @@ from pedri_analysis_spark.cache import materialize
 from pedri_analysis_spark.functions import textexpr as tx
 from pedri_analysis_spark.operators import chunking as chk
 from pedri_analysis_spark.operators import similarity as sim, spread
-from pedri_analysis_spark.plans.relational import QueryFn
+from pedri_analysis_spark.plans.registry import query_table
 from pedri_analysis_spark.sources.tables import load_table
 
-QUERIES: dict[str, QueryFn] = {}
-ORACLE_SQL: dict[str, str] = {}
+QUERIES, ORACLE_SQL, _register = query_table()
 
 TOPK = 10
 QUERY_ID = 0
@@ -31,27 +30,11 @@ NPROBE = 2
 NEARDUP_T = 0.4  # synthetic embeddings: same-label cosine tops out ~0.5
 
 
-def _register(name: str, oracle: str | None = None):
-    def deco(fn: QueryFn) -> QueryFn:
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE_SQL[name] = oracle
-        return fn
-
-    return deco
-
-
 # DuckDB-side cosine with the same 6-dp floor rounding. The fold order
 # inside list_cosine_similarity differs from our Spark fold — that is
 # exactly what round6 absorbs.
-def _r6_sql(e: str) -> str:
-    """The DuckDB side of operators.similarity.round6 — ONE definition so
-    a precision tweak cannot leave a stale copy behind."""
-    return f"floor(({e}) * 1000000 + 0.5) / 1000000"
-
-
 def _dcos(a: str, b: str) -> str:
-    return _r6_sql(f"list_cosine_similarity({a}::DOUBLE[], {b}::DOUBLE[])")
+    return sim.round6_sql(f"list_cosine_similarity({a}::DOUBLE[], {b}::DOUBLE[])")
 
 
 @_register(
@@ -523,7 +506,7 @@ def _kmeans_cte_prefix(k: int) -> str:
 
 
 def _kmeans_oracle() -> str:
-    r6 = _r6_sql
+    r6 = sim.round6_sql
     return f"""{_kmeans_cte_prefix(KMEANS_K)}
     SELECT a.cluster, count(*)::BIGINT AS n_vecs,
            {r6('min(c.cent[1])')} AS c0,
@@ -699,7 +682,7 @@ SQ_NQ = 8  # query vectors (vec_id < SQ_NQ)
 SQ_K = 10  # top-k depth
 
 def _sq_recall_oracle() -> str:
-    r6 = _r6_sql
+    r6 = sim.round6_sql
     idot = (
         "list_reduce(list_prepend(0::BIGINT, "
         f"list_transform(generate_series(1, {EMB_DIM}), i -> e.qv[i] * q.qqv[i])), "
@@ -1227,7 +1210,7 @@ PQ_K = 10
 
 
 def _pq_recall_oracle() -> str:
-    r6 = _r6_sql
+    r6 = sim.round6_sql
     subdot = (
         "list_reduce(list_prepend(0.0::DOUBLE, "
         f"list_transform(generate_series(1, {PQ_SUB}), i -> a.vsub[i]::DOUBLE * c.csub[i]::DOUBLE)), "

@@ -12,7 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pedri_analysis_spark.plans.relational import QueryFn, events_us
+from pedri_analysis_spark.plans.registry import query_table
+from pedri_analysis_spark.plans.relational import events_us
 from pedri_analysis_spark.streaming.windows import (
     sessionize_batch,
     sliding_sums,
@@ -20,22 +21,11 @@ from pedri_analysis_spark.streaming.windows import (
     with_event_time,
 )
 
-QUERIES: dict[str, QueryFn] = {}
-ORACLE_SQL: dict[str, str] = {}
+QUERIES, ORACLE_SQL, _register = query_table()
 
 HOUR_US = 3_600_000_000
 FIVE_MIN_US = 300_000_000
 TEN_MIN_US = 600_000_000
-
-
-def _register(name: str, oracle: str | None = None):
-    def deco(fn: QueryFn) -> QueryFn:
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE_SQL[name] = oracle
-        return fn
-
-    return deco
 
 
 @_register(

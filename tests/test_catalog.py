@@ -9,6 +9,8 @@ import os
 import subprocess
 import sys
 
+import pytest
+
 from tests.conftest import ROOT, persistent_rdds
 
 
@@ -79,16 +81,37 @@ def test_registry_rotation_prioritizes_unverified(tmp_path, monkeypatch):
     assert registry._ordered(names) == ["c", "b", "d", "a"]
 
     # a green query with NO manifest stamp is conservatively re-proven
-    # (tier 1) — forgetting the round-start --stamp-latest self-heals
+    # (tier 1) — forgetting the round-start --stamp-latest self-heals, and
+    # deleting a stamp is how a re-proof is forced
     (tmp_path / "SOURCE_MANIFEST.json").write_text(
         json.dumps({"b": {"hash": "hb-as-proven", "round": 2}})
     )
     assert registry._ordered(names) == ["c", "a", "b", "d"]
 
-    # no history at all -> falls back to the hand-curated priority order
+    # no history at all -> every query is never-checked (tier 2), so the
+    # order is registration order
     monkeypatch.setattr(registry, "_REPO_ROOT", str(tmp_path / "empty"))
-    ordered = registry._ordered(names)
-    assert set(ordered) == set(names)
+    assert registry._ordered(names) == list(names)
+
+
+def test_query_table_rejects_a_repeated_name():
+    """A module that registers one name twice must fail at import instead
+    of silently replacing the first query; the table keeps the first."""
+    from pedri_analysis_spark.plans.registry import query_table
+
+    queries, oracles, register = query_table()
+
+    @register("q", "SELECT 1")
+    def first(spark, sf_dir):
+        return None
+
+    with pytest.raises(ValueError, match="'q' registered twice"):
+
+        @register("q", "SELECT 2")
+        def second(spark, sf_dir):
+            return None
+
+    assert queries == {"q": first} and oracles == {"q": "SELECT 1"}
 
 
 def test_source_manifest_covers_every_green_query():
@@ -279,12 +302,19 @@ def test_package_caches_and_confs_only_through_their_owners():
     goes through cache.materialize), no ``.unpersist(`` outside cache.py
     and no ``.conf.set(`` outside session.py and sources/tables.py, whose
     ensure_session_conf sets what the driver's plain session lacks. A conf
-    set in a query body would change every thread sharing the session."""
+    set in a query body would change every thread sharing the session.
+    plans/registry.py owns query registration: no ``def _register``,
+    ``def _t`` or ``QueryFn =`` elsewhere (query_table hands each module
+    its ``_register``; tables load through ``load_table``)."""
     import ast
     import glob
 
     pkg = os.path.join(ROOT, "pedri_analysis_spark")
-    owners = {"unpersist": {"cache.py"}, "set": {"session.py", "sources/tables.py"}}
+    owners = {
+        "unpersist": {"cache.py"},
+        "set": {"session.py", "sources/tables.py"},
+        "register": {"plans/registry.py"},
+    }
     offenders = []
     for path in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
         rel = os.path.relpath(path, pkg)
@@ -295,6 +325,13 @@ def test_package_caches_and_confs_only_through_their_owners():
                 fn = node.value.func
                 if isinstance(fn, ast.Attribute) and fn.attr == "count" and not node.value.args:
                     offenders.append(f"{rel}:{node.lineno} bare .count()")
+            if rel not in owners["register"]:
+                if isinstance(node, ast.FunctionDef) and node.name in ("_register", "_t"):
+                    offenders.append(f"{rel}:{node.lineno} def {node.name}")
+                if isinstance(node, (ast.Assign, ast.AnnAssign)):
+                    targets = getattr(node, "targets", None) or [node.target]
+                    if any(getattr(t, "id", None) == "QueryFn" for t in targets):
+                        offenders.append(f"{rel}:{node.lineno} QueryFn =")
             if not isinstance(node, ast.Call) or not isinstance(node.func, ast.Attribute):
                 continue
             fn = node.func
@@ -603,8 +640,6 @@ def test_manifest_tool_refuses_incomplete_registry(monkeypatch):
     stamp_latest proceeds but must skip pruning."""
     import warnings
 
-    import pytest as _pytest
-
     from pedri_analysis_spark.plans import registry
     from tools import update_source_manifest as usm
 
@@ -619,7 +654,7 @@ def test_manifest_tool_refuses_incomplete_registry(monkeypatch):
     monkeypatch.setattr(registry, "_modules", broken_modules)
     fns, complete = usm._all_fns()
     assert fns == {} and complete is False
-    with _pytest.raises(SystemExit):
+    with pytest.raises(SystemExit):
         usm.bootstrap()
 
 

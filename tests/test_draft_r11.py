@@ -10,21 +10,6 @@ from __future__ import annotations
 from tests.conftest import assert_query_matches_oracle
 
 
-def test_drafts_are_registered():
-    from pedri_analysis_spark.plans import draft_r11 as d
-    from pedri_analysis_spark.plans import registry
-
-    registered = set(registry.all_queries())
-    missing = set(d.QUERIES) - registered
-    assert not missing, (
-        f"draft queries absent from the registry: {sorted(missing)} — "
-        "plans/registry.py must list draft_r11 in _modules (r11 registration)"
-    )
-    # every draft is oracle-paired (full hash-match contract, no
-    # rows-only weakening)
-    assert set(d.ORACLE_SQL) == set(d.QUERIES)
-
-
 def test_reservoir_prefilter_is_exact(spark, duck, monkeypatch):
     """The hash-threshold pre-filter must be invisible in the result:
     force a tiny margin so under-filled strata actually occur and the

@@ -1,25 +1,11 @@
-"""The r12 wave (plans/draft_r12.py), registered in r12: registration
-and the property pins of its queries. Oracle parity and plan invariants
-of every registered query are checked catalog-wide in
+"""The r12 wave (plans/draft_r12.py), registered in r12: the property
+pins of its queries. Registration, oracle parity and plan invariants of
+every registered query are checked catalog-wide in
 test_oracle_parity.py and test_plan_audit.py."""
 
 from __future__ import annotations
 
 from tests.conftest import assert_query_matches_oracle
-
-
-def test_drafts_are_registered():
-    """Flipped at r12 registration: the wave is now IN the registry
-    (one line in registry._modules), fully oracle-paired."""
-    from pedri_analysis_spark.plans import draft_r12 as d
-    from pedri_analysis_spark.plans import registry
-
-    registered = set(registry.all_queries())
-    assert set(d.QUERIES) <= registered, (
-        "r12 wave missing from the registry after its registration round"
-    )
-    # every draft is oracle-paired (full hash-match contract)
-    assert set(d.ORACLE_SQL) == set(d.QUERIES)
 
 
 def test_fellegi_sunter_chunked_branch_matches_oracle(spark, duck, monkeypatch):

@@ -1,24 +1,11 @@
-"""The r14 wave (plans/draft_r14.py), registered in r14: its
-registration and the property pins of its queries.  Oracle parity and
-plan invariants come from the catalog-wide sweeps
+"""The r14 wave (plans/draft_r14.py), registered in r14: the
+property pins of its queries.  Registration, oracle parity and plan
+invariants come from the catalog-wide sweeps
 (tests/test_oracle_parity.py, tests/test_plan_audit.py)."""
 
 from __future__ import annotations
 
 from tests.conftest import SF_DIR
-
-
-def test_drafts_are_registered():
-    """Flipped at r14 registration: the wave is now IN the registry
-    (one line in registry._modules), fully oracle-paired."""
-    from pedri_analysis_spark.plans import draft_r14 as d
-    from pedri_analysis_spark.plans import registry
-
-    registered = set(registry.all_queries())
-    assert set(d.QUERIES) <= registered, (
-        "r14 wave missing from the registry after its registration round"
-    )
-    assert set(d.ORACLE_SQL) == set(d.QUERIES)
 
 
 def test_simpson_bounds_and_hapax_identity(spark, duck):

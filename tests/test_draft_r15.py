@@ -1,24 +1,11 @@
-"""The r15 wave (plans/draft_r15.py), registered in r15: its
-registration and the property pins of its queries.  Oracle parity and
-plan invariants come from the catalog-wide sweeps
+"""The r15 wave (plans/draft_r15.py), registered in r15: the
+property pins of its queries.  Registration, oracle parity and plan
+invariants come from the catalog-wide sweeps
 (tests/test_oracle_parity.py, tests/test_plan_audit.py)."""
 
 from __future__ import annotations
 
 from tests.conftest import SF_DIR
-
-
-def test_drafts_are_registered():
-    """Flipped at r15 registration: the wave is now IN the registry
-    (one line in registry._modules), fully oracle-paired."""
-    from pedri_analysis_spark.plans import draft_r15 as d
-    from pedri_analysis_spark.plans import registry
-
-    registered = set(registry.all_queries())
-    assert set(d.QUERIES) <= registered, (
-        "r15 wave missing from the registry after its registration round"
-    )
-    assert set(d.ORACLE_SQL) == set(d.QUERIES)
 
 
 def test_mcnemar_cells_partition_corpus(spark, duck):

@@ -33,7 +33,8 @@ def test_allowlists_and_samples_name_known_queries():
     """Every allowlist and sample entry must name a registered query: a
     stale allowlist name would silently exempt a future query that reuses
     it, and a stale sample name pins nothing.  Every plans module that
-    defines QUERIES must be registered."""
+    defines QUERIES must be registered, and every registered query must
+    carry its oracle."""
     import glob
     import importlib
 
@@ -52,6 +53,7 @@ def test_allowlists_and_samples_name_known_queries():
             )
 
     known = set(registry.all_queries())
+    assert set(registry.all_oracle_sql()) == known
     for label, names in (
         ("plan_lint._BNLJ_ALLOWED", plan_lint._BNLJ_ALLOWED),
         ("plan_lint._PYTHON_ALLOWED", plan_lint._PYTHON_ALLOWED),
